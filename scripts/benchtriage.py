@@ -10,6 +10,11 @@ Usage: python3 scripts/benchtriage.py <bench_reps.json> [<prior.json>]
                      comparison — either another bench_reps.json or a
                      driver BENCH_r{N}.json whose "parsed" (or top level)
                      holds a {"queries": {query: min_sec}} map.
+                     Both files must have timed the same action: Bench
+                     times the noop sink ("action": "noop"); files with
+                     no "action" field (BENCH_r01-r22, older
+                     bench_reps.json) timed count(), and the script
+                     refuses to compare across the two.
 
 Classification per query:
   quiet      reps within 1.3x of each other (trustworthy timing)
@@ -27,17 +32,24 @@ import json
 import sys
 
 
-def load_reps(path):
+def action_of(d):
+    """The timed action behind a bench file. A BENCH_r{N}.json keeps
+    only Bench's stdout tail, which ends with the detail line's "action"
+    key; a file with no "action" at all predates the noop sink and timed
+    count()."""
+    if "action" in d:
+        return d["action"]
+    return "noop" if '"action":"noop"' in d.get("tail", "") else "count"
+
+
+def load_json(path):
     with open(path) as f:
-        d = json.load(f)
-    return d.get("reps", {}), d.get("sf", "?")
+        return json.load(f)
 
 
-def prior_mins(path):
+def prior_mins(d):
     """Accept a bench_reps.json (min over reps) or a BENCH_r{N}.json
     ({"parsed": {"queries": ...}} or {"queries": ...})."""
-    with open(path) as f:
-        d = json.load(f)
     if "reps" in d:
         return {q: min(v for v in reps if v >= 0)
                 for q, reps in d["reps"].items()
@@ -49,8 +61,15 @@ def prior_mins(path):
 def main():
     if len(sys.argv) < 2:
         sys.exit(__doc__)
-    reps, sf = load_reps(sys.argv[1])
-    prior = prior_mins(sys.argv[2]) if len(sys.argv) > 2 else {}
+    cur = load_json(sys.argv[1])
+    reps, sf = cur.get("reps", {}), cur.get("sf", "?")
+    prior = {}
+    if len(sys.argv) > 2:
+        old = load_json(sys.argv[2])
+        if action_of(old) != action_of(cur):
+            sys.exit(f"benchtriage: {sys.argv[2]} timed {action_of(old)} but "
+                     f"{sys.argv[1]} timed {action_of(cur)}; their mins are not comparable")
+        prior = prior_mins(old)
 
     out = {}
     for q in sorted(reps):

@@ -1,34 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
+/** Driver bench: best-of-4 round-robin wall time per declared query, full
+  * output through the noop sink, after staging every at-rest artifact
+  * outside the timed region.
+  *
+  * Usage: runMain graft.Bench [q1,q2,...]   (default: all queries)
+  * Data dir: $SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables).
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Driver-side whole-stage-codegen compile cache (static conf,
-      // default 100 entries). The 193-query suite carries thousands of
-      // DISTINCT codegen units, so at the default every rep re-Janino-
-      // compiles every stage it runs — measured at 76.0 -> 41.0 s
-      // (-46%) sum-of-mins over a 40-query round-robin when raised
-      // (OPTIMIZATION_r21.md). Scale-independent: it caches compiled
-      // CLASSES keyed by generated source, never data or results, and
-      // any production driver serving many distinct plans wants the
-      // same headroom. Env-overridable, core-count-agnostic.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = SparkEntry.selectQueries(args.headOption)
+    val cpus = LocalSession.envCpus
+    val spark = LocalSession(cpus)
+    // the timed action: write the full output to the noop sink. count()
+    // lets Catalyst prune every projected column, and with it the compute
+    // under test; this is the action perfbench's Trace.runFull times too.
+    def run(name: String, dir: String): Unit =
+      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
     // Warm-up: run every query once at the smallest SF so JIT/codegen and
     // expression-interpreter compilation aren't charged to the timed run
     // (first execution of the md5/minhash HOF plans is ~10x slower until C2
     // kicks in). Timed queries then measure steady-state throughput.
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
-    }
+    names.foreach(n => try run(n, warmDir) catch { case _: Throwable => () })
     // Stage the shingle substrate for the benched corpus OUTSIDE the timed
     // region, reporting its one-time cost as its own metric: it is paid once
     // per corpus in production, so charging it to the first consumer's first
@@ -48,7 +42,6 @@ object Bench {
     // 16 s minimum for a query that measures 1.4 s on a quiet host).
     // Spreading each query's reps across the whole bench window means a
     // burst inflates at most one rep per query, and the min stays faithful.
-    val names = SparkEntry.queries.keys.toVector
     val reps = 4
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
     (1 to reps).foreach { _ =>
@@ -69,7 +62,7 @@ object Bench {
         // a failed rep records MaxValue, NOT elapsed-to-failure: a query
         // that throws fast must never win min() with a fake "fast" time
         val dt =
-          try { SparkEntry.queries(name)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          try { run(name, sfDir); (System.nanoTime() - t0) / 1e9 }
           catch { case _: Throwable => Double.MaxValue }
         times.updateWith(name)(v => Some(v.getOrElse(Vector.empty) :+ dt))
       }
@@ -121,7 +114,7 @@ object Bench {
       java.nio.file.Files.createDirectories(repsPath.getParent)
       java.nio.file.Files.write(repsPath,
         (s"""{"mins":$minsJson,"staging_sec":${fmt(stagingSec)},""" +
-          s""""staging_detail":$stagingJson,"cpus":$cpus,""" +
+          s""""staging_detail":$stagingJson,"cpus":$cpus,"action":"noop",""" +
           s""""reps":$repsJson,"triage":$triageJson,"sf":"$sfDir"}""").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     // Two lines: a long per-query detail line, then a short summary line
@@ -131,7 +124,7 @@ object Bench {
     // metric name sees exactly one total; the detail line is named
     // "total_detail" and the full per-query map also lands in
     // target/bench_reps.json.
-    println(s"""{"metric":"total_detail","value":${fmt(total)},"unit":"sec","queries":$qs,"staging_sec":${fmt(stagingSec)},"staging_detail":$stagingJson,"failed":$failedJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_detail","value":${fmt(total)},"unit":"sec","queries":$qs,"staging_sec":${fmt(stagingSec)},"staging_detail":$stagingJson,"failed":$failedJson,"action":"noop","sf":"$sfDir"}""")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","staging_sec":${fmt(stagingSec)},"n_queries":${names.size},"failed":$failedJson,"sf":"$sfDir"}""")
     spark.stop()
   }

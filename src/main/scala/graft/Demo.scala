@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.connector.MockConnector
 import graft.core.Model._
 import graft.routing.Policy
@@ -16,11 +14,7 @@ import graft.tables.Tables
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4)
 
     val g = new Graft(spark,
       Seq(new MockConnector("alpha"), new MockConnector("beta")),

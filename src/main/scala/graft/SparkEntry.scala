@@ -68,6 +68,20 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = coreQueries ++
     graft.pipeline.PipelineQueries.queries
 
+  /** Query names picked by an optional comma-separated filter, the way
+    * `Bench` and `Verify` take it on the command line (all queries when
+    * absent). An unknown name fails instead of silently narrowing the run.
+    */
+  def selectQueries(filter: Option[String]): Vector[String] = {
+    val all = queries.keys.toVector
+    filter.fold(all) { f =>
+      val wanted = f.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = wanted.filterNot(all.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+      all.filter(wanted)
+    }
+  }
+
   private def coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // QI-TPCH sanity (TPC-H Q1 shape) — integer fixed-point outputs: the
     // decimal→int scaling is the single rounding step (decimal(18,2)*100 is

@@ -36,17 +36,7 @@ object Examples {
   /** Small local session for examples — examples are control-plane-heavy
     * and tiny-data, so 4 threads / 4 shuffle partitions keeps them snappy.
     */
-  def localSession(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-examples")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  def localSession(): SparkSession = graft.LocalSession(4)
 
   /** The corpus, in reference numbering order. */
   val all: Seq[Example] = Seq(

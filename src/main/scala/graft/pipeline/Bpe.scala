@@ -446,7 +446,6 @@ object Bpe {
     * denominated in.
     */
   def nTokensS(textCol: String): String = s"size(${symsS(textCol)})"
-  def nTokensD(textCol: String): String = s"len(${symsD(textCol)})"
 
   /** BROADCAST-CEILING GUARD for the dictionary path. The per-word
     * kernel runs once per distinct word and fans back over the

@@ -130,9 +130,6 @@ object Dedup {
   /** LSH candidate pairs: docs sharing at least one band bucket (the band
     * index is baked into the hash). Output (id1, id2), id1 < id2, distinct.
     */
-  def minhashCandidates(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    minhashCandidatesOf(minhashSignature(docs, idCol, textCol), idCol)
-
   def minhashCandidatesOf(signatures: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val bands = signatures.select(col(idCol), explode(expr(bandHashesS)).as("bh"))
     bands.as("x")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Trained orthogonal rotation for the dimension-truncation ladder —
@@ -177,12 +177,7 @@ object TrainRotationTool {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = if (args.length > 1) args(1).toInt else 300
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(8)
     val rot = Rotation.trainPpm(graft.tables.Tables.embeddings(spark, dir), iters = iters)
     println("TRAINED_ROTATION_PPM = Seq(")
     println(rot.map(r => "    Seq(" + r.map(_.toString + "L").mkString(", ") + ")").mkString(",\n"))
@@ -204,12 +199,7 @@ object TrainRotPqTool {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(8)
     val emb = graft.tables.Tables.embeddings(spark, dir)
     val rot = emb.select(col("vec_id"),
       Similarity.rotatePpmLong(col("embedding")).as("embedding"))

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline producer of [[Bpe.refTrainedMerges]]: runs [[Bpe.train]] over a
   * corpus and prints the resulting table as a Scala literal to paste next
   * to the shipped one — the same workflow that froze
@@ -15,12 +13,7 @@ object TrainBpeTool {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val n = if (args.length > 1) args(1).toInt else 24
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(8)
     val ms = Bpe.train(graft.tables.Tables.documents(spark, dir), n)
     def esc(s: String) = s.flatMap {
       case '\\' => "\\\\"

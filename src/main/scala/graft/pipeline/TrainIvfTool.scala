@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline producer of [[Similarity.refIvfCentroids]]: runs
   * [[KMeans.train]] over a corpus and prints the centroid table as a
   * Scala literal — the [[TrainBpeTool]] workflow for the IVF coarse
@@ -19,12 +17,7 @@ object TrainIvfTool {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nCells = if (args.length > 1) args(1).toInt else 8
     val iters = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(8)
     val cents = KMeans.train(graft.tables.Tables.embeddings(spark, dir), nCells, iters)
     println("TRAINED_CENTROIDS = Seq(")
     println(cents.map(c => "    Seq(" + c.mkString(", ") + ")").mkString(",\n"))

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline producer of [[Similarity.refResidualPqCodebooks]]: runs
   * [[Similarity.pqTrainResidual]] over a corpus with the frozen trained
   * IVF centroids ([[Similarity.refIvfCentroids]]) and prints the codebook
@@ -17,12 +15,7 @@ object TrainResidualPqTool {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val iters = if (args.length > 1) args(1).toInt else 8
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(8)
     val cbs = Similarity.pqTrainResidual(
       graft.tables.Tables.embeddings(spark, dir), Similarity.refIvfCentroids, iters)
     println("TRAINED_RESIDUAL_CODEBOOKS = Seq(")

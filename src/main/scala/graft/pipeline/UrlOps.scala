@@ -1011,17 +1011,6 @@ object UrlOps {
   def drawHashD(id: String): String =
     s"(abs($id % 1000000) * 2654435761 + 40503) % 1000000"
 
-  /** The [[hostOf]] twin over a column expression `u` (default-port-only
-    * strip, schemes pooled — see [[hostOf]]).
-    */
-  def hostOfD(u: String): String = {
-    val scheme = s"lower(regexp_extract($u, $partsReD, 1))"
-    val hostport = s"lower(regexp_extract($u, $partsReD, 2))"
-    val host = s"(CASE WHEN $scheme = 'http' THEN regexp_replace($hostport, ':80$$', '') " +
-      s"ELSE regexp_replace($hostport, ':443$$', '') END)"
-    s"nullif($host, '')"
-  }
-
   /** Canonical-URL expression over a column expression `u`. */
   def canonicalUrlD(u: String, stripParams: Seq[String] = trackingParams): String = {
     val scheme = s"lower(regexp_extract($u, $partsReD, 1))"

@@ -29,9 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Resample {
 
-  /** Epoch seconds (bigint) for a timestamp column. */
-  def epochSecs(ts: Column): Column = ts.cast("long")
-
   /** Daily bucket start, UTC (resample.rs:350-355). */
   def dailyBucket(secs: Column): Column = secs - pmod(secs, lit(86400L))
 
