@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{BpeCodec, BpeKernel, BpeModel, BpeOp}
 
 /** Real byte-pair-encoding (BPE) tokenization as a scan-side expression —
   * the subword token counts every token-denominated operator in this
@@ -13,11 +15,11 @@ import org.apache.spark.sql.functions._
   * borsa-core/src/timeseries/resample.rs:26-121 — a deterministic,
   * unit-tested kernel with no configurable fuzz. The merge table is a
   * LITERAL (the model ships with the engine build, like a tokenizer's
-  * merges.txt rides with the trained model), so the whole encode compiles
-  * to codegen'd higher-order functions over the token array: per word,
-  * split to characters, then apply each merge rule in rank order. No
-  * shuffle, no UDF, no driver loop — the classic Spark-first shape for a
-  * per-row kernel.
+  * merges.txt rides with the trained model) embedded in one native
+  * codegen'd expression, [[graft.functions.BpeCodec]]: per word, split to
+  * characters, then apply each merge rule in rank order. No shuffle, no
+  * per-rule SQL — the classic Spark-first shape for a per-row kernel. The DuckDB oracle twins (`*D`) stay independent of
+  * the kernel: they spell the same rank-order passes as SQL lambdas.
   *
   * ALGORITHM EQUIVALENCE (why rank-order exhaustive application == the
   * classic greedy lowest-rank-anywhere encode): the merge list is
@@ -67,7 +69,7 @@ object Bpe {
     * 0 and decoded as "th". Any id below the base is, by construction, a
     * character id.
     */
-  val VOCAB_BASE: Int = 0x110000
+  val VOCAB_BASE: Int = BpeKernel.VocabBase
 
   /** Compound symbol → integer id (VOCAB_BASE + rank) for any merge table. */
   def vocabIdsOf(ms: Seq[(String, String)]): Map[String, Int] =
@@ -86,12 +88,10 @@ object Bpe {
     * asserts this table equals a fresh [[train]] on the same corpus
     * (drift between the literal and the trainer fails the suite); note
     * it learned whole corpus words ("join", "hash", "row") — the
-    * Zipfian-head behavior real BPE training shows. 16 rules, not more:
-    * each rule adds a nested lambda level, and past ~20 the chain
-    * exceeds Catalyst's default analyzer-resolution budget
-    * (spark.sql.analyzer.maxIterations = 100) — a table much larger than
-    * that belongs in the dictionary path ([[docTokenCounts]]'s per-word
-    * broadcast), not in a per-row expression chain.
+    * Zipfian-head behavior real BPE training shows. The kernel puts no
+    * ceiling on the rule count (its cost per word does not grow with the
+    * table); 16 rules keep the DuckDB oracle twin, which nests one lambda
+    * level per rule, small.
     */
   val refTrainedMerges: Seq[(String, String)] = Seq(
     ("e", "r"),
@@ -112,68 +112,27 @@ object Bpe {
     ("r", "ow"))
   validate(refTrainedMerges)
 
-  /** Fail-fast validation of the two structural properties the expression
-    * form depends on (see the object scaladoc). Public so specs can
-    * assert malformed tables are rejected.
+  /** Fail-fast validation of the two structural properties the kernel
+    * depends on (see the object scaladoc). Public so specs can assert
+    * malformed tables are rejected.
     */
-  def validate(ms: Seq[(String, String)]): Unit = {
-    val produced = scala.collection.mutable.Set.empty[String]
-    ms.zipWithIndex.foreach { case ((a, b), i) =>
-      require(a.nonEmpty && b.nonEmpty, s"Bpe rule $i: empty symbol")
-      require(a != b,
-        s"Bpe rule $i: left == right ('$a') — adjacent occurrences would " +
-          "overlap and the simultaneous-merge form would be unsound")
-      Seq(a, b).foreach { s =>
-        require(s.length == 1 || produced.contains(s),
-          s"Bpe rule $i references compound symbol '$s' before any earlier " +
-            "rule produces it — the merge list is not well-formed, and " +
-            "rank-order application would diverge from greedy BPE")
-      }
-      require(!produced.contains(a + b),
-        s"Bpe rule $i produces '$a$b' twice")
-      produced += (a + b)
-    }
-  }
+  def validate(ms: Seq[(String, String)]): Unit = BpeKernel.validate(ms)
   validate(merges)
 
   // ------------------------------------------------------------ expressions
 
-  /** String-literal escapes for symbols embedded in generated
-    * expressions — shipped merges are plain letters, but TRAINED tables
-    * carry arbitrary corpus characters (apostrophes, backslashes).
-    * Spark escapes with backslash; DuckDB doubles the quote.
+  /** String-literal escape for symbols embedded in the oracle SQL —
+    * shipped merges are plain letters, but TRAINED tables carry arbitrary
+    * corpus characters (apostrophes). DuckDB doubles the quote.
     */
-  private def lit1(s: String): String =
-    s.replace("\\", "\\\\").replace("'", "\\'")
   private def lit1D(s: String): String = s.replace("'", "''")
 
-  /** One merge-rule application over a symbol-array lambda variable `sv`:
-    * merged pairs emit their concatenation at the left position, the
-    * consumed right position emits NULL, everything else passes through;
-    * the filter drops the NULLs. All positions merge in one pass — sound
-    * because left != right (see scaladoc).
+  /** Oracle form of one merge-rule application over a symbol-array
+    * lambda variable `sv`: merged pairs emit their concatenation at the
+    * left position, the consumed right position emits NULL, everything
+    * else passes through; the filter drops the NULLs. All positions merge
+    * in one pass — sound because left != right (see scaladoc).
     */
-  private def applyRuleS(sv: String, k: Int, a0: String, b0: String, rawW: Option[String] = None): String = {
-    val (a, b, ab) = (lit1(a0), lit1(b0), lit1(a0 + b0))
-    // two skip guards, cheap-first. (1) instr: symbols are contiguous
-    // substrings of the word in order, so adjacent symbols a,b imply the
-    // word's RAW TEXT contains a+b — a native substring search over the
-    // word (no lambda machinery) rules out most (rule, word) pairs.
-    // (2) exists: the pair's symbols exist but are not adjacent at this
-    // level. Both skip the two-array rebuild — the overwhelmingly common
-    // case (a word matches a handful of the rule table); Or-expressions
-    // short-circuit, so the positional scan only runs on instr hits
-    // rawW = None when no raw-text column is in scope (the trainer's dict
-    // pass, where the rule is known to be corpus-frequent anyway)
-    val instrGuard = rawW.map(w => s"instr($w, '$ab') = 0 OR ").getOrElse("")
-    s"""IF($instrGuard NOT exists(sequence(1, size($sv)), g$k ->
-       |     g$k < size($sv) AND element_at($sv, g$k) = '$a' AND element_at($sv, g$k + 1) = '$b'), $sv,
-       |   filter(transform(sequence(1, size($sv)), i$k ->
-       |     CASE WHEN i$k < size($sv) AND element_at($sv, i$k) = '$a' AND element_at($sv, i$k + 1) = '$b' THEN '$ab'
-       |          WHEN i$k > 1 AND element_at($sv, i$k - 1) = '$a' AND element_at($sv, i$k) = '$b' THEN NULL
-       |          ELSE element_at($sv, i$k) END), x$k -> x$k IS NOT NULL))""".stripMargin.replace("\n", " ")
-  }
-
   private def applyRuleD(sv: String, k: Int, a0: String, b0: String): String = {
     val (a, b, ab) = (lit1D(a0), lit1D(b0), lit1D(a0 + b0))
     s"""list_filter(list_transform(generate_series(1, len($sv)), i$k ->
@@ -182,21 +141,11 @@ object Bpe {
        |       ELSE $sv[i$k] END), x$k -> x$k IS NOT NULL)""".stripMargin.replace("\n", " ")
   }
 
-  /** BPE symbols of one word (a lambda variable): characters, then every
-    * rule in rank order. Each level is LAMBDA-BOUND via the
-    * single-element-transform let-binding (the rowSigS discipline): the
-    * rule body references its input array ~6 times, and without the
-    * binding CollapseProject would inline the whole lower pipeline into
-    * each reference — 6^rules evaluations per word.
+  /** Oracle BPE symbols of one word (a lambda variable): characters,
+    * then every rule in rank order, each level lambda-bound via the
+    * single-element-transform let-binding (the rule body references its
+    * input array several times).
     */
-  private def wordSymsS(w: String, ms: Seq[(String, String)] = merges): String = {
-    val chars = s"transform(sequence(1, length($w)), c0 -> substr($w, c0, 1))"
-    ms.zipWithIndex.foldLeft(chars) { case (acc, ((a, b), i)) =>
-      val k = i + 1
-      s"element_at(transform(array($acc), s$k -> ${applyRuleS(s"s$k", k, a, b, Some(w))}), 1)"
-    }
-  }
-
   private def wordSymsD(w: String, ms: Seq[(String, String)] = merges): String = {
     val chars = s"list_transform(generate_series(1, len($w)), c0 -> $w[c0])"
     ms.zipWithIndex.foldLeft(chars) { case (acc, ((a, b), i)) =>
@@ -205,15 +154,29 @@ object Bpe {
     }
   }
 
-  /** Per-document BPE symbol array (document order preserved: words in
-    * token order, symbols in word order). `ms` swaps in a TRAINED merge
-    * table ([[train]]) for the shipped literal.
+  /** Per-document BPE symbol array (`array<string>`, document order
+    * preserved: words in token order, symbols in word order) — the text
+    * split on ' ' with empty words dropped, each word encoded. `ms` swaps
+    * in a TRAINED merge table ([[train]]) for the shipped literal.
     */
-  def symsS(textCol: String): String = symsWithS(textCol, merges)
-  def symsWithS(textCol: String, ms: Seq[(String, String)]): String = {
-    validate(ms)
-    s"flatten(transform(${toksS(textCol)}, w0 -> ${wordSymsS("w0", ms)}))"
-  }
+  def syms(text: Column, ms: Seq[(String, String)] = merges): Column =
+    BpeCodec.of(text, BpeModel(ms, bytes = false), BpeOp.Syms)
+
+  /** Per-document symbol ids (`array<int>`): code point, or byte value
+    * under the byte model, for single symbols; VOCAB_BASE + rank for
+    * compounds.
+    */
+  def ids(text: Column, ms: Seq[(String, String)] = merges, bytes: Boolean = false): Column =
+    BpeCodec.of(text, BpeModel(ms, bytes), BpeOp.Ids)
+
+  /** BPE token COUNT (`bigint`) — drop-in for the whitespace token count
+    * wherever a token-denominated operator takes one (packChunks,
+    * mixtureByBudget, vocab budgets): the subword count is what a
+    * trainer's context length is actually denominated in.
+    */
+  def nTokens(text: Column, ms: Seq[(String, String)] = merges): Column =
+    BpeCodec.of(text, BpeModel(ms, bytes = false), BpeOp.Count)
+
   def symsD(textCol: String): String = symsWithD(textCol, merges)
   def symsWithD(textCol: String, ms: Seq[(String, String)]): String =
     s"flatten(list_transform(${toksD(textCol)}, w0 -> ${wordSymsD("w0", ms)}))"
@@ -237,8 +200,11 @@ object Bpe {
     * engine's encoder applies each rule as one simultaneous positional
     * pass, which is only sound for left != right (see the object
     * scaladoc). Every trained table therefore passes [[validate]] and
-    * composes with [[symsWithS]] / the greedy reference directly.
+    * composes with [[syms]] / the greedy reference directly.
     * Training stops early when no pair occurs at least `minCount` times.
+    * Each round re-encodes the dict words through the kernel with the
+    * table learned so far: rank-order application makes that the previous
+    * round's symbols with the new rule's single positional pass applied.
     */
   def train(
       docs: DataFrame,
@@ -247,15 +213,14 @@ object Bpe {
       textCol: String = "text"): Seq[(String, String)] = {
     require(nMerges >= 0, s"nMerges must be non-negative, got $nMerges")
     require(minCount >= 1, s"minCount must be positive, got $minCount")
-    var dict = docs.select(explode(expr(toksS(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .select(expr("transform(sequence(1, length(w)), c0 -> substr(w, c0, 1))").as("syms"),
-        col("c"))
     // per-round lineage truncation via the SHARED helper so BPE training
     // honors the engine-wide spark.graft.reliableCheckpoint switch like
     // every other iterative operator (ADVICE r20 — the bare
     // localCheckpoint left unrecoverable local blocks on reliable runs)
-    dict = Checkpoints.iterCheckpoint(dict, "Bpe.train")
+    def encoded(dict: DataFrame, ms: Seq[(String, String)]) = Checkpoints.iterCheckpoint(
+      dict.select(col("w"), col("c"), syms(col("w"), ms).as("syms")), "Bpe.train")
+    var dict = encoded(docs.select(explode(expr(toksS(textCol))).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c")), Nil)
     val learned = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
     while (learned.size < nMerges && !exhausted) {
@@ -276,52 +241,32 @@ object Bpe {
           val p = row.getStruct(0)
           val (a, b) = (p.getString(0), p.getString(1))
           learned += ((a, b))
-          // apply the new rule to the dict (the encoder's positional pass)
-          dict = Checkpoints.iterCheckpoint(dict
-            .select(expr(applyRuleS("syms", learned.size, a, b)).as("syms"), col("c")),
-            "Bpe.train")
+          dict = encoded(dict, learned.toSeq)
       }
     }
     learned.toSeq
   }
 
-  /** Symbol → integer id over a symbol lambda variable: code point for
-    * single characters, VOCAB_BASE + rank for compounds. The -1 arm is
+  /** Oracle symbol → integer id over a symbol lambda variable: code point
+    * for single characters, VOCAB_BASE + rank for compounds. The -1 arm is
     * unreachable (every multi-char symbol is produced by a rule — the
     * well-formedness invariant).
     */
-  private def idOfS(sy: String, ms: Seq[(String, String)] = merges): String = {
-    val compounds = vocabIdsOf(ms).toSeq.sortBy(_._2)
-      .map { case (s, id) => s"WHEN '${lit1(s)}' THEN $id" }.mkString(" ")
-    s"CASE WHEN length($sy) = 1 THEN ascii($sy) ELSE CASE $sy $compounds ELSE -1 END END"
-  }
   private def idOfD(sy: String, ms: Seq[(String, String)] = merges): String = {
     val compounds = vocabIdsOf(ms).toSeq.sortBy(_._2)
       .map { case (s, id) => s"WHEN '${lit1D(s)}' THEN $id" }.mkString(" ")
     s"CASE WHEN len($sy) = 1 THEN ascii($sy) ELSE CASE $sy $compounds ELSE -1 END END"
   }
 
-  /** Symbol of one integer id — the inverse of [[idOfS]]: code point back
-    * to its character below VOCAB_BASE, compound rank back to its merged
-    * string. Character decode is `format_string('%c', id)` on the Spark
-    * side (DuckDB: `chr`) because Spark's `char(n)` is MOD-256 — it would
-    * silently corrupt every non-Latin-1 code point.
-    * Ids outside the vocabulary decode to NULL (which `concat_ws`
-    * skips — a corrupted stream surfaces as a round-trip mismatch, not
-    * a crash). The character arm is range-guarded: negative ids and the
-    * UTF-16 surrogate block (U+D800–U+DFFF, not characters) would make
-    * `format_string('%c', ...)` throw `IllegalFormatCodePointException`
-    * (DuckDB's `chr` likewise errors), so a hostile external id stream
-    * must fall through to NULL before the formatter ever sees it.
+  /** Oracle symbol of one integer id — the inverse of [[idOfD]]: code
+    * point back to its character below VOCAB_BASE, compound rank back to
+    * its merged string. Ids outside the vocabulary decode to NULL (which
+    * the string join skips — a corrupted stream surfaces as a round-trip
+    * mismatch, not a crash). The character arm is range-guarded: negative
+    * ids and the UTF-16 surrogate block (U+D800–U+DFFF, not characters)
+    * would make `chr` throw, so a hostile external id stream must fall
+    * through to NULL first. The kernel's decode keeps the same contract.
     */
-  private def symOfS(idv: String): String = {
-    val compounds = vocabIds.toSeq.sortBy(_._2)
-      .map { case (s, id) => s"WHEN $id THEN '${lit1(s)}'" }.mkString(" ")
-    s"CASE WHEN $idv >= 0 AND $idv < $VOCAB_BASE " +
-      s"AND NOT ($idv BETWEEN 55296 AND 57343) " +
-      s"THEN format_string('%c', cast($idv as int)) " +
-      s"ELSE CASE $idv $compounds ELSE NULL END END"
-  }
   private def symOfD(idv: String): String = {
     val compounds = vocabIds.toSeq.sortBy(_._2)
       .map { case (s, id) => s"WHEN $id THEN '${lit1D(s)}'" }.mkString(" ")
@@ -336,7 +281,7 @@ object Bpe {
     * is not in this vocabulary (the tokenizer splits on it), so decoding
     * a document's flat id stream yields the SPACE-STRIPPED normalized
     * text; per WORD the round trip is exact (spec-asserted over the
-    * seeded fuzz corpus). The SPACED stream ([[symsSpacedS]]) carries the
+    * seeded fuzz corpus). The SPACED stream ([[symsSpacedD]]) carries the
     * space-marker symbol (id 32) between words — the SentencePiece/GPT-2
     * convention reduced to this vocabulary's whitespace model — and
     * decodes BYTE-EXACTLY up to the tokenizer's own normalization (runs
@@ -344,14 +289,14 @@ object Bpe {
     * `split(text, ' ')` drops empties). The decode itself is
     * convention-free (ids → symbols → concat) and serves both streams.
     */
-  def decodeS(idsCol: String): String =
-    s"concat_ws('', transform($idsCol, v0 -> ${symOfS("v0")}))"
+  def decode(ids: Column, ms: Seq[(String, String)] = merges, bytes: Boolean = false): Column =
+    BpeCodec.of(ids, BpeModel(ms, bytes), BpeOp.Decode)
   def decodeD(idsCol: String): String =
     s"array_to_string(list_transform($idsCol, v0 -> ${symOfD("v0")}), '')"
 
   /** Per-document symbol stream WITH the space-marker symbol between
     * words — what a production loader actually packs, because its decode
-    * is byte-exact (see [[decodeS]]). The space can never merge: every
+    * is byte-exact (see [[decode]]). The space can never merge: every
     * rule's symbols come from space-SPLIT words (trainer and shipped
     * table alike), so ' ' appears in no rule and always survives as a
     * single id-32 token. Built by prepending the marker to EVERY word and
@@ -359,13 +304,6 @@ object Bpe {
     * chain, where an indexed-lambda CASE would duplicate the whole chain
     * per branch.
     */
-  def symsSpacedS(textCol: String): String = symsSpacedWithS(textCol, merges)
-  def symsSpacedWithS(textCol: String, ms: Seq[(String, String)]): String = {
-    validate(ms)
-    val spaced = s"flatten(transform(${toksS(textCol)}, w0 -> concat(array(' '), ${wordSymsS("w0", ms)})))"
-    s"element_at(transform(array($spaced), fs0 -> " +
-      s"CASE WHEN size(fs0) = 0 THEN fs0 ELSE slice(fs0, 2, size(fs0) - 1) END), 1)"
-  }
   def symsSpacedD(textCol: String): String = symsSpacedWithD(textCol, merges)
   def symsSpacedWithD(textCol: String, ms: Seq[(String, String)]): String = {
     val spaced = s"flatten(list_transform(${toksD(textCol)}, w0 -> list_prepend(' ', ${wordSymsD("w0", ms)})))"
@@ -383,40 +321,30 @@ object Bpe {
     * check of the whole id table.
     *
     * Runs on the DICTIONARY PATH ([[docTokenCounts]]'s discipline): both
-    * the per-word merge chain AND the per-id decode (whose
-    * `format_string('%c', …)` character formatting is the expensive part
-    * of byte-exact decode) execute once per DISTINCT word — the Zipfian
-    * vocabulary — then fan back over the (doc, pos, word) occurrence
-    * stream via a broadcast join. The round trip stays genuine: each
-    * dictionary entry is decode(ids(encode(word))) through the integer id
-    * table, exactly what the scan-side form computed per occurrence, and
-    * the spaced stream's decode factors per word because the marker
-    * (id 32) always decodes to one ' ' between words. The per-doc
-    * reassembly (`array_sort(collect_list(struct(pos, dec)))`) is the
-    * one cost the scan-side form didn't pay: this audit shuffles the
-    * decoded WORD stream once. That trade is right here — the merge
-    * chain + formatter cost it removes grows with merge-table depth and
-    * per-occurrence volume, while the shuffle is the corpus's token
-    * stream at its natural width (measured at sf0.1: 2.87 → under the
-    * encode-only query's own floor).
+    * the per-word encode AND the per-id decode execute once per DISTINCT
+    * word — the Zipfian vocabulary — then fan back over the (doc, pos,
+    * word) occurrence stream via a broadcast join. The round trip stays
+    * genuine: each dictionary entry is decode(ids(encode(word))) through
+    * the integer id table, exactly what the scan-side form computed per
+    * occurrence, and the spaced stream's decode factors per word because
+    * the marker (id 32) always decodes to one ' ' between words. The
+    * per-doc reassembly ([[inOrder]]) shuffles the decoded WORD stream
+    * once, at its natural width.
     */
   def decodeRoundTrip(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val base = docs.select(col(idCol), expr(toksS(textCol)).as("__toks"))
     val words = base.select(col(idCol), posexplode(col("__toks")).as(Seq("__p", "__w")))
-    val ids = s"transform(ws, sy -> ${idOfS("sy")})"
-    def entry(w: String) =
-      s"""element_at(transform(array(${wordSymsS(w)}), ws ->
-         |  named_struct(
-         |    '__n', cast(size(ws) as bigint),
-         |    '__d', ${decodeS(ids)})), 1)""".stripMargin.replace("\n", " ")
+    def entry(w: Column) = {
+      val is = ids(w)
+      struct(size(is).cast("long").as("__n"), decode(is).as("__d"))
+    }
     val perDoc = dictFanBack(words, entry, "__e")
       .select(col(idCol), col("__p"),
         col("__e.__n").as("__n"), col("__e.__d").as("__d"))
       .groupBy(idCol)
       .agg(
         expr("sum(__n) + count(1) - 1").as("n_bpe_tokens"),
-        expr("concat_ws(' ', transform(array_sort(collect_list(struct(__p, __d))), x -> x.__d))")
-          .as("__dd"))
+        inOrder("__d", " ").as("__dd"))
     base.join(perDoc, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("n_bpe_tokens"), lit(0L)).as("n_bpe_tokens"),
@@ -424,6 +352,12 @@ object Bpe {
         (coalesce(col("__dd"), lit("")) === concat_ws(" ", col("__toks")))
           .as("roundtrip_ok"))
   }
+
+  /** Per-document reassembly of a per-word string column: the words'
+    * values joined by `sep` in word position (`__p`) order.
+    */
+  private def inOrder(field: String, sep: String): Column =
+    concat_ws(sep, array_sort(collect_list(struct(col("__p"), col(field)))).getField(field))
 
   /** DuckDB oracle twin of [[decodeRoundTrip]] — generated from the same
     * constants (the [[encodeSqlD]] discipline).
@@ -439,14 +373,6 @@ object Bpe {
        |FROM dec ORDER BY doc_id""".stripMargin
   }
 
-  /** BPE token COUNT expression — drop-in for the whitespace
-    * `size(toksS(text))` wherever a token-denominated operator takes a
-    * token count (packChunks, mixtureByBudget, vocab budgets): the
-    * subword count is what a trainer's context length is actually
-    * denominated in.
-    */
-  def nTokensS(textCol: String): String = s"size(${symsS(textCol)})"
-
   /** BROADCAST-CEILING GUARD for the dictionary path. The per-word
     * kernel runs once per distinct word and fans back over the
     * occurrence stream via a broadcast join — measured ~5× on every BPE
@@ -458,7 +384,7 @@ object Bpe {
     * `spark.graft.bpe.dictMinCount` times (default 2): the broadcast
     * side shrinks to the head the fan-back actually amortizes, and rare
     * words fall back to the SAME kernel evaluated scan-side in the
-    * CASE's miss arm. The fallback does no extra kernel work — a word
+    * coalesce's miss arm. The fallback does no extra kernel work — a word
     * below the floor occurs fewer times than the floor, so inline
     * evaluation at its occurrences costs no more than one dictionary
     * entry would — and it never ships the tail to every executor.
@@ -467,25 +393,24 @@ object Bpe {
     * minCount=1 is the pure dictionary path (everything broadcasts, the
     * miss arm is dead); a huge minCount degenerates to the pure
     * scan-side form (empty dictionary, every row computes inline). Both
-    * branches are the same expression STRING, so they cannot drift.
+    * branches are the same expression, so they cannot drift.
     *
-    * Returns `words` plus `outCol` = entryExprS("__w"). entryExprS must
-    * be deterministic and non-null for non-null words (join misses are
+    * Returns `words` plus `outCol` = entry(`__w`). `entry` must be
+    * deterministic and non-null for non-null words (join misses are
     * detected by `outCol IS NULL`).
     */
   private def dictFanBack(
       words: DataFrame,
-      entryExprS: String => String,
+      entry: Column => Column,
       outCol: String): DataFrame = {
     val minCount = words.sparkSession.conf
       .getOption("spark.graft.bpe.dictMinCount").map(_.toLong).getOrElse(2L)
     require(minCount >= 1, s"spark.graft.bpe.dictMinCount must be >= 1, got $minCount")
     val dict = words.groupBy("__w").agg(count(lit(1)).as("__wc"))
       .where(col("__wc") >= minCount)
-      .select(col("__w"), expr(entryExprS("__w")).as(outCol))
+      .select(col("__w"), entry(col("__w")).as(outCol))
     words.join(broadcast(dict), Seq("__w"), "left")
-      .withColumn(outCol,
-        expr(s"CASE WHEN $outCol IS NULL THEN ${entryExprS("__w")} ELSE $outCol END"))
+      .withColumn(outCol, coalesce(col(outCol), entry(col("__w"))))
   }
 
   /** THE DICTIONARY PATH — the scale form for token COUNTING: natural
@@ -507,7 +432,7 @@ object Bpe {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val toks = docs.select(col(idCol), explode(expr(toksS(textCol))).as("__w"))
-    val counts = dictFanBack(toks, w => s"cast(size(${wordSymsS(w)}) as bigint)", "__nb")
+    val counts = dictFanBack(toks, w => nTokens(w), "__nb")
       .groupBy(idCol).agg(sum(col("__nb")).as("n_bpe_tokens"))
     docs.select(col(idCol))
       .join(counts, Seq(idCol), "left")
@@ -541,7 +466,7 @@ object Bpe {
     docs
       .select(col(langCol),
         expr(s"cast(size(${toksS(textCol)}) as bigint)").as("__nw"),
-        expr(s"cast(size(${symsS(textCol)}) as bigint)").as("__nb"))
+        nTokens(col(textCol)).as("__nb"))
       .groupBy(langCol)
       .agg(sum(col("__nw")).as("n_words"), sum(col("__nb")).as("n_bpe_tokens"))
       .select(col(langCol),
@@ -575,7 +500,7 @@ object Bpe {
     val wc = docs.select(explode(expr(toksS(textCol))).as("__w"))
       .groupBy("__w").agg(count(lit(1)).as("__wc"))
     val counts = wc
-      .select(explode(expr(wordSymsS("__w"))).as("t"), col("__wc"))
+      .select(explode(syms(col("__w"))).as("t"), col("__wc"))
       .groupBy("t").agg(sum(col("__wc")).as("cnt"))
     val total = counts.agg(sum("cnt").as("__total"))
     val top = counts.orderBy(col("cnt").desc, col("t")).limit(topK)
@@ -591,16 +516,13 @@ object Bpe {
     * count, and the md5 of the comma-joined id sequence (order-exact —
     * two documents agree iff their full BPE id streams agree).
     *
-    * DICTIONARY PATH (the [[decodeRoundTrip]] shape): the per-word merge
-    * chain and id table run once per DISTINCT word, each word's ids
-    * pre-joined into one comma string; the per-doc stream reassembles in
-    * exact order via `array_sort(collect_list(struct(pos, ids)))` and
-    * joining per-word strings with ',' is byte-identical to joining the
-    * flattened stream. The order-exactness argument that once kept this
-    * operator scan-side is answered by the positional reassembly — and
-    * the chain cost it removes grows with merge-table depth, which is
-    * exactly where the trained tables hurt (measured at sf0.1: shipped
-    * 1.96 → 0.60 s, 16-rule trained 2.52 → 0.70 s).
+    * DICTIONARY PATH (the [[decodeRoundTrip]] shape): the per-word encode
+    * runs once per DISTINCT word, each word's ids pre-joined into one
+    * comma string; the per-doc stream reassembles in exact order
+    * ([[inOrder]]) and joining per-word strings with ',' is
+    * byte-identical to joining the flattened stream. The order-exactness
+    * argument that once kept this operator scan-side is answered by the
+    * positional reassembly.
     */
   def encode(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     encodeWith(docs, merges, idCol, textCol)
@@ -619,31 +541,27 @@ object Bpe {
 
   /** [[encode]] with an arbitrary (typically TRAINED) merge table: same
     * output schema, ids are VOCAB_BASE + the table's own ranks. The
-    * serving path for [[refTrainedMerges]] — the table folds into the
-    * per-distinct-word chain as literals, exactly like the shipped one.
+    * serving path for [[refTrainedMerges]] — the table rides in the
+    * kernel expression, exactly like the shipped one.
     */
   def encodeWith(
       docs: DataFrame,
       ms: Seq[(String, String)],
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    validate(ms)
     val base = docs.select(col(idCol), expr(toksS(textCol)).as("__toks"))
     val words = base.select(col(idCol), posexplode(col("__toks")).as(Seq("__p", "__w")))
-    def entry(w: String) =
-      s"""element_at(transform(array(${wordSymsS(w, ms)}), ws ->
-         |  named_struct(
-         |    '__n', cast(size(ws) as bigint),
-         |    '__ids', concat_ws(',', transform(ws, sy -> cast(${idOfS("sy", ms)} as string))))), 1)"""
-        .stripMargin.replace("\n", " ")
+    def entry(w: Column) = {
+      val is = ids(w, ms)
+      struct(size(is).cast("long").as("__n"), concat_ws(",", is.cast("array<string>")).as("__ids"))
+    }
     val perDoc = dictFanBack(words, entry, "__e")
       .select(col(idCol), col("__p"),
         col("__e.__n").as("__n"), col("__e.__ids").as("__ids"))
       .groupBy(idCol)
       .agg(
-        expr("sum(__n)").as("__nb"),
-        expr("concat_ws(',', transform(array_sort(collect_list(struct(__p, __ids))), x -> x.__ids))")
-          .as("__idstr"))
+        sum(col("__n")).as("__nb"),
+        inOrder("__ids", ",").as("__idstr"))
     base.join(perDoc, Seq(idCol), "left")
       .select(col(idCol),
         size(col("__toks")).cast("long").as("n_ws_tokens"),
@@ -669,28 +587,21 @@ object Bpe {
     * not its code points, so the base alphabet is BOUNDED at 256 ids
     * however exotic the input (the property production tokenizers ship
     * byte fallback for — the embedding table cannot grow with Unicode).
-    * Each byte rides as a CARRIER CHARACTER so the existing per-word
-    * merge chain applies unchanged: printable ASCII bytes (0x21–0x7E)
-    * keep their own code point — the shipped and trained merge tables,
-    * whose symbols are ASCII letters, operate identically on carrier
-    * strings — and every other byte b maps injectively to U+0100+b (the
-    * GPT-2 byte-encoder idea with a simpler rule; carrier code points
-    * stay in U+0021–U+01FF, printable and surrogate-free). Ids: a single
-    * carrier char is its BYTE VALUE (0–255); compounds keep VOCAB_BASE +
-    * rank. Decode inverts exactly — ids → carrier string → bytes → one
+    * Merge tables name bytes by CARRIER CHARACTER, so one table serves
+    * both models: printable ASCII bytes (0x21–0x7E) keep their own code
+    * point — the shipped and trained merge tables, whose symbols are
+    * ASCII letters, operate identically on carrier strings — and every
+    * other byte b maps injectively to U+0100+b (the GPT-2 byte-encoder
+    * idea with a simpler rule; carrier code points stay in
+    * U+0021–U+01FF, printable and surrogate-free; see
+    * [[graft.functions.BpeKernel.carrier]]). Ids: a single carrier char
+    * is its BYTE VALUE (0–255); compounds keep VOCAB_BASE + rank. Decode inverts exactly — ids → carrier string → bytes → one
     * UTF-8 decode — so the round trip is byte-exact for any valid UTF-8
     * input, including multi-byte scripts and supplementary-plane emoji
     * the code-point model covers only with unbounded ids. On printable
     * pure-ASCII text the two models emit IDENTICAL id streams
     * (spec-asserted), so the fallback is a strict extension.
     */
-  private def byteWordS(w: String): String =
-    s"""element_at(transform(array(hex(encode($w, 'UTF-8'))), hx0 ->
-       |  IF(length(hx0) < 2, '',
-       |    concat_ws('', transform(sequence(1, length(hx0) DIV 2), bi ->
-       |      element_at(transform(array(cast(conv(substr(hx0, 2*bi - 1, 2), 16, 10) as int)),
-       |        b0 -> format_string('%c', IF(b0 BETWEEN 33 AND 126, b0, b0 + 256))), 1))))), 1)"""
-      .stripMargin.replace("\n", " ")
   private def byteWordD(w: String): String =
     s"""list_transform([hex(encode($w))], hx0 ->
        |  CASE WHEN length(hx0) < 2 THEN '' ELSE
@@ -700,17 +611,10 @@ object Bpe {
        |  END)[1]"""
       .stripMargin.replace("\n", " ")
 
-  /** Id of one byte-model symbol: carrier char → its byte value,
+  /** Oracle id of one byte-model symbol: carrier char → its byte value,
     * compound → VOCAB_BASE + rank (unknown compounds → -1, the
-    * [[idOfS]] convention).
+    * [[idOfD]] convention).
     */
-  private def byteIdOfS(sy: String, ms: Seq[(String, String)]): String = {
-    val compounds = vocabIdsOf(ms).toSeq.sortBy(_._2)
-      .map { case (s, id) => s"WHEN '${lit1(s)}' THEN $id" }.mkString(" ")
-    s"CASE WHEN length($sy) = 1 THEN " +
-      s"IF(ascii($sy) >= 256, ascii($sy) - 256, ascii($sy)) " +
-      s"ELSE CASE $sy $compounds ELSE -1 END END"
-  }
   private def byteIdOfD(sy: String, ms: Seq[(String, String)]): String = {
     val compounds = vocabIdsOf(ms).toSeq.sortBy(_._2)
       .map { case (s, id) => s"WHEN '${lit1D(s)}' THEN $id" }.mkString(" ")
@@ -719,19 +623,10 @@ object Bpe {
       s"ELSE CASE $sy $compounds ELSE -1 END END"
   }
 
-  /** Byte-model symbol of one id — carrier char below 256, compound
-    * string for known compound ids, NULL otherwise (the [[symOfS]]
-    * hostile-id contract; carrier code points never reach the surrogate
-    * block by construction, but negatives and unknown ids still fall
-    * through to NULL before any formatter runs).
+  /** Oracle byte-model symbol of one id — carrier char below 256,
+    * compound string for known compound ids, NULL otherwise (the
+    * [[symOfD]] hostile-id contract).
     */
-  private def byteSymOfS(idv: String, ms: Seq[(String, String)]): String = {
-    val compounds = vocabIdsOf(ms).toSeq.sortBy(_._2)
-      .map { case (s, id) => s"WHEN $id THEN '${lit1(s)}'" }.mkString(" ")
-    s"CASE WHEN $idv >= 0 AND $idv < 256 THEN " +
-      s"format_string('%c', IF($idv BETWEEN 33 AND 126, cast($idv as int), cast($idv as int) + 256)) " +
-      s"ELSE CASE $idv $compounds ELSE NULL END END"
-  }
   private def byteSymOfD(idv: String, ms: Seq[(String, String)]): String = {
     val compounds = vocabIdsOf(ms).toSeq.sortBy(_._2)
       .map { case (s, id) => s"WHEN $id THEN '${lit1D(s)}'" }.mkString(" ")
@@ -740,16 +635,9 @@ object Bpe {
       s"ELSE CASE $idv $compounds ELSE NULL END END"
   }
 
-  /** Carrier string → original word: each carrier char back to its byte,
-    * the byte string through ONE UTF-8 decode.
+  /** Oracle carrier string → original word: each carrier char back to its
+    * byte, the byte string through ONE UTF-8 decode.
     */
-  private def byteDecodeWordS(m: String): String =
-    s"""element_at(transform(array($m), m0 ->
-       |  IF(length(m0) < 1, '',
-       |    decode(unhex(concat_ws('', transform(sequence(1, length(m0)), ci ->
-       |      element_at(transform(array(ascii(substr(m0, ci, 1))), cp0 ->
-       |        lpad(hex(IF(cp0 >= 256, cp0 - 256, cp0)), 2, '0')), 1)))), 'UTF-8'))), 1)"""
-      .stripMargin.replace("\n", " ")
   private def byteDecodeWordD(m: String): String =
     s"""list_transform([$m], m0 ->
        |  CASE WHEN length(m0) < 1 THEN '' ELSE
@@ -760,8 +648,8 @@ object Bpe {
       .stripMargin.replace("\n", " ")
 
   /** Per-document byte-fallback encode→decode round trip on the
-    * DICTIONARY PATH (the [[decodeRoundTrip]] shape: byte mapping, merge
-    * chain, id table, and decode all run once per DISTINCT word, fan
+    * DICTIONARY PATH (the [[decodeRoundTrip]] shape: encode and decode
+    * run once per DISTINCT word, fan
     * back by position, reassemble per doc). Output per document:
     * (idCol, n_bpe_tokens, decoded_md5, roundtrip_ok, max_base_id) —
     * n_bpe_tokens counts the spaced stream (marker id 32 = the space
@@ -774,28 +662,21 @@ object Bpe {
       idCol: String = "doc_id",
       textCol: String = "text",
       ms: Seq[(String, String)] = merges): DataFrame = {
-    validate(ms)
     val base = docs.select(col(idCol), expr(toksS(textCol)).as("__toks"))
     val words = base.select(col(idCol), posexplode(col("__toks")).as(Seq("__p", "__w")))
-    val decFromIds = byteDecodeWordS(
-      s"concat_ws('', transform(idv, v0 -> ${byteSymOfS("v0", ms)}))")
-    def entry(w: String) =
-      s"""element_at(transform(array(${byteWordS(w)}), bw ->
-         |  element_at(transform(array(${wordSymsS("bw", ms)}), ws ->
-         |    element_at(transform(array(transform(ws, sy -> ${byteIdOfS("sy", ms)})), idv ->
-         |      named_struct(
-         |        '__n', cast(size(ws) as bigint),
-         |        '__maxb', coalesce(array_max(filter(idv, v1 -> v1 < ${VOCAB_BASE}L)), -1L),
-         |        '__d', $decFromIds)), 1)), 1)), 1)"""
-        .stripMargin.replace("\n", " ")
+    def entry(w: Column) = {
+      val is = ids(w, ms, bytes = true)
+      struct(size(is).cast("long").as("__n"),
+        BpeCodec.of(w, BpeModel(ms, bytes = true), BpeOp.MaxBaseId).as("__maxb"),
+        decode(is, ms, bytes = true).as("__d"))
+    }
     val perDoc = dictFanBack(words, entry, "__e")
       .select(col(idCol), col("__p"), col("__e.__n").as("__n"),
         col("__e.__maxb").as("__maxb"), col("__e.__d").as("__d"))
       .groupBy(idCol)
       .agg(
         expr("sum(__n) + count(1) - 1").as("n_bpe_tokens"),
-        expr("concat_ws(' ', transform(array_sort(collect_list(struct(__p, __d))), x -> x.__d))")
-          .as("__dd"),
+        inOrder("__d", " ").as("__dd"),
         max(col("__maxb")).as("max_base_id"))
     base.join(perDoc, Seq(idCol), "left")
       .select(col(idCol),

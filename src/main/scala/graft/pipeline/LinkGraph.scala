@@ -228,7 +228,25 @@ object LinkGraph {
       iters: Int = 5,
       dampingPpm: Long = 850000L,
       srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame = {
+      dstCol: String = "dst"): DataFrame =
+    pageRank(edges, iters, dampingPpm, srcCol, dstCol)._1
+
+  /** [[pageRankPpm]] with its defaults, handed to `use`; the persisted
+    * edge and node frames are released when `use` returns — for a caller
+    * that materializes the ranks, like the staged rank store.
+    */
+  def withPageRankPpm[T](edges: DataFrame)(use: DataFrame => T): T = {
+    val (ranks, cached) = pageRank(edges, 5, 850000L, "src", "dst")
+    try use(ranks) finally cached.foreach(_.unpersist())
+  }
+
+  /** The ranks, and the frames they read from the cache. */
+  private def pageRank(
+      edges: DataFrame,
+      iters: Int,
+      dampingPpm: Long,
+      srcCol: String,
+      dstCol: String): (DataFrame, Seq[DataFrame]) = {
     require(iters >= 1 && iters <= 50, s"pageRankPpm: iters must be in [1, 50], got $iters")
     require(dampingPpm >= 0L && dampingPpm <= 1000000L,
       s"pageRankPpm: dampingPpm must be in [0, 1e6], got $dampingPpm")
@@ -237,8 +255,7 @@ object LinkGraph {
       .where(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
     // the frame every iteration re-reads: persist so the upstream (often
-    // a corpus-wide extraction) runs once (ContextCleaner unpersists it
-    // with the last reference, the minhash-family lifecycle). Out-degree
+    // a corpus-wide extraction) runs once. Out-degree
     // is annotated by a window over src — not groupBy+self-join, which
     // re-ran the extraction subtree and left eo partitioned on (src, dst)
     // so every iteration's src-keyed join re-exchanged the WHOLE edge
@@ -267,7 +284,7 @@ object LinkGraph {
           expr(s"${base}L + ($dampingPpm * coalesce(__s, 0L)) DIV 1000000L")
             .as("rank_ppm"))
     }
-    ranks
+    (ranks, Seq(eo, nodes))
   }
 
   /** BOUNDED-RADIUS HARMONIC CENTRALITY over a (src, dst) edge list,

@@ -1558,8 +1558,10 @@ object PipelineQueries {
     * link graph consumes the ingest artifact in production too).
     */
   private def rankStoreFor(s: SparkSession, dir: String): DataFrame =
-    ShingleStage.stagedTable(s, s"rankstore_$dir",
-      LinkGraph.pageRankPpm(LinkGraph.linkDomainEdges(linkStoreFor(s, dir))))
+    ShingleStage.stagedWrite(s, s"rankstore_$dir") { name =>
+      LinkGraph.withPageRankPpm(LinkGraph.linkDomainEdges(linkStoreFor(s, dir)))(
+        _.write.format("parquet").saveAsTable(name))
+    }
 
   /** The crawled-set MEMBERSHIP store, staged BUCKETED AND SORTED on
     * the url key — the at-rest carrier [[UrlOps.freshViaStore]] probes
@@ -1588,8 +1590,10 @@ object PipelineQueries {
     * sitemap-entries table").
     */
   private def sitemapPagesFor(s: SparkSession, dir: String): DataFrame =
-    ShingleStage.stagedTable(s, s"sitemappages_$dir",
-      Sitemaps.sitemapPageUrls(robotsTable(s), sitemapBodyTable(s)))
+    ShingleStage.stagedWrite(s, s"sitemappages_$dir") { name =>
+      Sitemaps.sitemapPageUrls(robotsTable(s), sitemapBodyTable(s))(
+        _.write.format("parquet").saveAsTable(name))
+    }
 
   /** The staged near-dup PAIR LIST for `dir` — (id1, id2, jaccard_ppm) at
     * the 200000-ppm production threshold. In a 100 TB pipeline the pair
@@ -3486,9 +3490,10 @@ object PipelineQueries {
     }),
 
     // real subword BPE encode: a literal well-formed merge table applied
-    // in rank order as codegen'd HOFs — scan-side, no shuffle, no UDF;
-    // n_bpe_tokens is the count token-denominated operators should be
-    // denominated in (vs the whitespace approximation)
+    // in rank order by the native bpe_encode kernel, once per distinct
+    // word (broadcast dictionary); n_bpe_tokens is the count
+    // token-denominated operators should be denominated in (vs the
+    // whitespace approximation)
     "ext_bpe_encode" -> ((s, dir) => {
       Bpe.encode(Tables.documents(s, dir)).orderBy("doc_id")
     }),
@@ -3524,8 +3529,8 @@ object PipelineQueries {
     }),
 
     // tokenizer fertility by language (BPE tokens per whitespace word):
-    // the under-served-language metric; dictionary path — BPE once per
-    // distinct word, broadcast fan-back, corpus text never shuffles
+    // the under-served-language metric; scan-side — one kernel pass per
+    // document and one lang-keyed aggregation
     "ext_fertility" -> ((s, dir) => {
       Bpe.fertilityByLang(Tables.documents(s, dir)).orderBy("lang")
     }),
@@ -3641,7 +3646,7 @@ object PipelineQueries {
     // the SAME curve over the real BPE subword stream — the vocab-sizing
     // view a tokenizer-training decision actually reads. Dictionary
     // path: BPE runs once per DISTINCT word (Zipfian vocab), weighted by
-    // frequency — spec-equal to vocabCoverage(tokenizerS = Bpe.symsS)
+    // frequency — spec-equal to vocabCoverage(tokenizer = Bpe.syms)
     // but with all BPE cost vocab-sized instead of corpus-sized
     "ext_bpe_vocab" -> ((s, dir) => {
       Bpe.vocabCurve(Tables.documents(s, dir), topK = 20).orderBy("rank")

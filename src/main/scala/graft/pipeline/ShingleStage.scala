@@ -19,14 +19,13 @@ import graft.operators.Layout
   */
 object ShingleStage {
 
-  private val staged = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The staged (doc_id, sh, h) table for `corpusKey`, building it on first
-    * use from `docs` (evaluated lazily, only when staging happens).
+  /** One staged table. `built` is a lazy val, so its initializer runs at
+    * most once and concurrent callers block until it returns: two threads
+    * staging one key never drop and write the same table at once. A build
+    * that throws leaves it unset, and the next caller retries.
     */
-  def shingleHashes(spark: SparkSession, corpusKey: String, docs: => DataFrame): DataFrame = {
-    val table = staged.getOrElseUpdate(corpusKey, {
-      val name = "graft_shingles_" + corpusKey.replaceAll("[^A-Za-z0-9]", "_")
+  private final class Staged(spark: SparkSession, val name: String, write: String => Unit) {
+    lazy val built: Unit = {
       // idempotent across JVMs: a fresh in-memory metastore doesn't know
       // the table, but its warehouse directory may survive from a prior
       // run — SaveMode.Overwrite then fails with LOCATION_ALREADY_EXISTS.
@@ -36,12 +35,31 @@ object ShingleStage {
         spark.conf.get("spark.sql.warehouse.dir"), name)
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
+      write(name)
+    }
+  }
+
+  private val staged = scala.collection.concurrent.TrieMap.empty[String, Staged]
+
+  /** The table staged under `key` (named `prefix` + the key), written by
+    * `write(tableName)` on first use; later callers, across queries and
+    * threads in the same JVM, read it back. A new JVM re-stages.
+    */
+  private def stage(spark: SparkSession, key: String, prefix: String)(write: String => Unit): DataFrame = {
+    val name = prefix + key.replaceAll("[^A-Za-z0-9]", "_")
+    // a losing concurrent insert's Staged is discarded unbuilt
+    staged.getOrElseUpdate(key, new Staged(spark, name, write)).built
+    spark.table(name)
+  }
+
+  /** The staged (doc_id, sh, h) table for `corpusKey`, building it on first
+    * use from `docs` (evaluated lazily, only when staging happens).
+    */
+  def shingleHashes(spark: SparkSession, corpusKey: String, docs: => DataFrame): DataFrame =
+    stage(spark, corpusKey, "graft_shingles_") { name =>
       Layout.writeBucketed(Dedup.shingleHashes(docs), name,
         bucketCol = "doc_id", buckets = 32, sortCol = None)
-      name
-    })
-    spark.table(table)
-  }
+    }
 
   /** Generic one-time staged table for other materialized substrates (the
     * incremental near-dup SIGNATURE STORE is the main client: in
@@ -51,19 +69,14 @@ object ShingleStage {
     * [[shingleHashes]]: first caller pays the build, later callers read
     * parquet; idempotent across JVMs.
     */
-  def stagedTable(spark: SparkSession, key: String, build: => DataFrame): DataFrame = {
-    val table = staged.getOrElseUpdate(key, {
-      val name = "graft_staged_" + key.replaceAll("[^A-Za-z0-9]", "_")
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), name)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      build.write.format("parquet").saveAsTable(name)
-      name
-    })
-    spark.table(table)
-  }
+  def stagedTable(spark: SparkSession, key: String, build: => DataFrame): DataFrame =
+    stagedWrite(spark, key)(name => build.write.format("parquet").saveAsTable(name))
+
+  /** [[stagedTable]] for a caller that writes the table itself, given its
+    * name — for a build that must release resources once written.
+    */
+  def stagedWrite(spark: SparkSession, key: String)(write: String => Unit): DataFrame =
+    stage(spark, key, "graft_staged_")(write)
 
   /** [[stagedTable]] laid out BUCKETED on `bucketCol` — for at-rest
     * artifacts whose steady-state consumer is an equi-join on that
@@ -81,24 +94,15 @@ object ShingleStage {
       key: String,
       bucketCol: String,
       buckets: Int = 32,
-      sortCol: Option[String] = None)(build: => DataFrame): DataFrame = {
-    val table = staged.getOrElseUpdate(key, {
-      val name = "graft_staged_" + key.replaceAll("[^A-Za-z0-9]", "_")
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), name)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      sortCol: Option[String] = None)(build: => DataFrame): DataFrame =
+    stagedWrite(spark, key) { name =>
       Layout.writeBucketed(build, name, bucketCol = bucketCol,
         buckets = buckets, sortCol = sortCol)
-      name
-    })
-    spark.table(table)
-  }
+    }
 
   /** Drop all staged tables (tests). */
   def reset(spark: SparkSession): Unit = {
-    staged.values.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    staged.values.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
     staged.clear()
   }
 }

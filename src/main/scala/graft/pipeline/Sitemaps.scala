@@ -260,16 +260,17 @@ object Sitemaps {
     * MOST-FREQUENT canonical changefreq claim ([[ChangefreqTokens]]
     * rank, elected via a min-struct so unknown/absent claims never
     * pool), and the MAX priority_ppm. Output: (host, url, lastmod,
-    * changefreq, priority_ppm).
+    * changefreq, priority_ppm), handed to `use`; the parsed-entry frame
+    * it reads stays cached until `use` returns, then is released.
     */
-  def sitemapPageUrls(
+  def sitemapPageUrls[T](
       robots: DataFrame,
       bodies: DataFrame,
       robotsHostCol: String = "host",
       robotsTextCol: String = "robots_txt",
       bodiesHostCol: String = "host",
       bodiesUrlCol: String = "sitemap_url",
-      bodiesTextCol: String = "body"): DataFrame = {
+      bodiesTextCol: String = "body")(use: DataFrame => T): T = {
     val entries = sitemapEntries(bodies, bodiesHostCol, bodiesUrlCol, bodiesTextCol)
       // the join identity of a sitemap FILE is its canonical URL — the
       // fetch store records the URL as fetched, seeds/children as
@@ -305,7 +306,7 @@ object Sitemaps {
       .select(col("host"), col("__u").as("__k")).distinct()
     val pages2 = children.join(entries, Seq("host", "__k"))
       .where(!col("is_index")).select(pageCols: _*)
-    pages1.unionByName(pages2)
+    val pages = pages1.unionByName(pages2)
       .groupBy(col("host"), col("__u").as("url"))
       .agg(max(col("lastmod")).as("lastmod"),
         // min-struct election: NULL claims contribute nothing (min
@@ -316,5 +317,6 @@ object Sitemaps {
         max(col("priority_ppm")).as("priority_ppm"))
       .select(col("host"), col("url"), col("lastmod"),
         col("__cfe.t").as("changefreq"), col("priority_ppm"))
+    try use(pages) finally entries.unpersist()
   }
 }

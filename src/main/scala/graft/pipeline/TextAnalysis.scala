@@ -766,12 +766,12 @@ object TextAnalysis {
       topK: Int = 100,
       idCol: String = "doc_id",
       textCol: String = "text",
-      tokenizerS: String => String = toksS): DataFrame = {
+      tokenizer: String => Column = c => expr(toksS(c))): DataFrame = {
     require(topK > 0, s"topK must be positive, got $topK")
-    // tokenizerS swaps the token stream the curve is computed over —
-    // e.g. Bpe.symsS for the SUBWORD vocab-sizing curve (the one a
+    // tokenizer swaps the token stream the curve is computed over —
+    // e.g. Bpe.syms for the SUBWORD vocab-sizing curve (the one a
     // tokenizer-training decision actually reads)
-    val counts = docs.select(explode(expr(tokenizerS(textCol))).as("t"))
+    val counts = docs.select(explode(tokenizer(textCol)).as("t"))
       .groupBy("t").agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum("cnt").as("__total"))
     val top = counts.orderBy(col("cnt").desc, col("t")).limit(topK)

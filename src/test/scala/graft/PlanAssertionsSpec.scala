@@ -666,4 +666,20 @@ class PlanAssertionsSpec extends SparkSpec {
     assert(plan.contains("partial"),
       s"the validator election must partial-aggregate map-side:\n${plan.take(3000)}")
   }
+
+  test("ext_bpe_trained: the merge chain runs in the native kernel, in no CodegenFallback node") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("ext_bpe_trained")(spark, dir)
+    df.write.format("noop").mode("overwrite").save()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val kernelNodes = helper.collect(df.queryExecution.executedPlan) {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.BpeCodec])) => p
+    }
+    assert(kernelNodes.nonEmpty, s"no BPE kernel in the plan:\n${df.queryExecution.executedPlan}")
+    kernelNodes.foreach { p =>
+      assert(!p.expressions.exists(_.exists(_.isInstanceOf[CodegenFallback])),
+        s"the kernel shares a CodegenFallback node:\n$p")
+    }
+  }
 }

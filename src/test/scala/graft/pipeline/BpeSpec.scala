@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.functions.BpeKernel
 import graft.tables.Tables
 import org.apache.spark.sql.functions._
 
@@ -12,11 +13,12 @@ import org.apache.spark.sql.functions._
 class BpeSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Literal greedy BPE (Sennrich encode loop): find the lowest-rank pair
-    * present anywhere, merge ALL its occurrences left-to-right, repeat.
+  /** Literal greedy BPE (Sennrich encode loop) over a word's code points:
+    * find the lowest-rank pair present anywhere, merge ALL its occurrences
+    * left-to-right, repeat.
     */
   private def greedyBpe(word: String, merges: Seq[(String, String)]): Seq[String] = {
-    var syms = word.map(_.toString).toVector
+    var syms = word.codePoints.toArray.map(Character.toString).toVector
     var done = false
     while (!done) {
       merges.find { case (a, b) =>
@@ -39,7 +41,7 @@ class BpeSpec extends SparkSpec {
 
   private def exprSyms(words: Seq[String]): Map[String, Seq[String]] =
     words.toDF("text")
-      .select(col("text"), expr(Bpe.symsS("text")).as("syms"))
+      .select(col("text"), Bpe.syms(col("text")).as("syms"))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toMap
 
   test("hand-checked merges: rank order, all occurrences, chained compounds") {
@@ -119,7 +121,7 @@ class BpeSpec extends SparkSpec {
   test("mixtureByBudget composes on BPE counts (budgets denominated in subword tokens)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("source"),
-        expr(s"cast(${Bpe.nTokensS("text")} as bigint)").as("n_tok"))
+        Bpe.nTokens(col("text")).as("n_tok"))
     val srcTotal = docs.where(col("source") === "src0").count()
     assert(srcTotal > 2, "fixture needs a populated stratum")
     val budget = docs.where(col("source") === "src0")
@@ -139,7 +141,7 @@ class BpeSpec extends SparkSpec {
 
   test("vocabCoverage composes on the BPE symbol stream (subword vocab-sizing curve)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val bpe = TextAnalysis.vocabCoverage(docs, topK = 10, tokenizerS = Bpe.symsS).collect()
+    val bpe = TextAnalysis.vocabCoverage(docs, topK = 10, tokenizer = c => Bpe.syms(col(c))).collect()
     assert(bpe.length == 10)
     // the subword head contains single chars or compounds, never a
     // whitespace word longer than the longest merge output
@@ -157,13 +159,13 @@ class BpeSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // per-doc counts: dict-path == size of the exact scan-side stream
     val direct = docs.select(col("doc_id"),
-        expr(s"cast(${Bpe.nTokensS("text")} as bigint)").as("n"))
+        Bpe.nTokens(col("text")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dict = Bpe.docTokenCounts(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dict == direct, "dictionary fan-back must reproduce exact per-doc counts")
     // vocab curve: dict-path == vocabCoverage over the scan-side stream
-    val want = TextAnalysis.vocabCoverage(docs, topK = 15, tokenizerS = Bpe.symsS)
+    val want = TextAnalysis.vocabCoverage(docs, topK = 15, tokenizer = c => Bpe.syms(col(c)))
       .collect().map(_.toSeq)
     val got = Bpe.vocabCurve(docs, topK = 15).collect().map(_.toSeq)
     assert(got.toSeq == want.toSeq)
@@ -200,7 +202,7 @@ class BpeSpec extends SparkSpec {
     val words = docs.select(explode(expr(TextOps.toksS("text"))).as("w"))
       .distinct().limit(100).collect().map(_.getString(0)).toSeq
     val enc = words.toDF("text")
-      .select(col("text"), expr(Bpe.symsWithS("text", learned)).as("syms"))
+      .select(col("text"), Bpe.syms(col("text"), learned).as("syms"))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toMap
     val nSyms = enc.values.map(_.size).sum
     val nChars = words.map(_.length).sum
@@ -217,7 +219,7 @@ class BpeSpec extends SparkSpec {
     assert(learned.nonEmpty)
     // the apostrophe-bearing merges round-trip through generated SQL
     val out = Seq(("don't")).toDF("text")
-      .select(expr(Bpe.symsWithS("text", learned)).as("syms"))
+      .select(Bpe.syms(col("text"), learned).as("syms"))
       .head.getSeq[String](0).toSeq
     assert(out == greedyBpe("don't", learned), s"got $out for $learned")
   }
@@ -226,7 +228,7 @@ class BpeSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = input.toDF().toDF("doc_id", "text")
-      .select(col("doc_id"), expr(s"cast(${Bpe.nTokensS("text")} as bigint)").as("n_bpe"))
+      .select(col("doc_id"), Bpe.nTokens(col("text")).as("n_bpe"))
       .writeStream.format("memory").queryName("bpe_stream_out").outputMode("append").start()
     try {
       input.addData(Seq((1L, "the and"), (2L, "banana")))
@@ -242,7 +244,7 @@ class BpeSpec extends SparkSpec {
 
   test("packChunks composes on BPE counts (token-denominated packing)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), expr(s"cast(${Bpe.nTokensS("text")} as bigint)").as("n_tokens"))
+      .select(col("doc_id"), Bpe.nTokens(col("text")).as("n_tokens"))
     val packed = Packing.packChunks(docs, ctxTokens = 512L, nShards = 4)
     // every doc packed; offsets consistent: total tokens == sum of per-shard
     // stream lengths (the last doc's start + its tokens, per shard)
@@ -366,15 +368,15 @@ class BpeSpec extends SparkSpec {
   test("decode NULL-guards hostile ids: negative, surrogate block, unknown compound — no crash") {
     import spark.implicits._
     // a corrupted EXTERNAL id stream can hold values the encoder never
-    // emits; format_string('%c', …) throws IllegalFormatCodePointException
-    // on negatives and the UTF-16 surrogate block (U+D800–U+DFFF), so the
-    // decode must range-guard them to NULL (concat_ws skips NULLs — the
-    // corruption surfaces as a round-trip mismatch, not an executor crash)
-    val hostile = Seq((1L, Seq(97L, -5L, 0xD800L, 0xDFFFL, 98L, Bpe.VOCAB_BASE + 9999L)))
-      .toDF("doc_id", "ids")
-    val out = hostile.select(expr(Bpe.decodeS("ids")).as("d")).collect()
-    assert(out.head.getString(0) == "ab",
+    // emits — NULLs, negatives, the UTF-16 surrogate block (U+D800–U+DFFF),
+    // ids past the table — and the decode must skip them (the corruption
+    // surfaces as a round-trip mismatch, not an executor crash)
+    val hostile = Seq((1L, Seq(Some(97L), None, Some(-5L), Some(0xD800L), Some(0xDFFFL), Some(256L),
+      Some(Bpe.VOCAB_BASE + 9999L), Some(Long.MaxValue), Some(98L)))).toDF("doc_id", "ids")
+    // code points: 256 is 'Ā'; bytes: 256 is no byte
+    assert(hostile.select(Bpe.decode(col("ids"))).head.getString(0) == "aĀb",
       "hostile ids must decode to NULL (skipped), valid ids must survive")
+    assert(hostile.select(Bpe.decode(col("ids"), bytes = true)).head.getString(0) == "ab")
   }
 
   test("decodeRoundTrip holds corpus-wide at sf0.001 (byte-exact contract)") {
@@ -471,4 +473,63 @@ class BpeSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("dictMinCount"))
   }
+
+  private def seededWords(seed: Int, alphabet: Seq[String], n: Int): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    (1 to n).map(_ => Seq.fill(1 + rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.size))).mkString).distinct
+  }
+
+  /** Kernel symbols AND ids of each word under `ms`, against the greedy
+    * reference (ids: code point, or VOCAB_BASE + rank).
+    */
+  private def assertGreedy(ms: Seq[(String, String)], words: Seq[String]): Unit = {
+    val vocab = Bpe.vocabIdsOf(ms)
+    val got = words.toDF("text")
+      .select(col("text"), Bpe.syms(col("text"), ms), Bpe.ids(col("text"), ms))
+      .collect().map(r => r.getString(0) -> ((r.getSeq[String](1), r.getSeq[Int](2)))).toMap
+    words.foreach { w =>
+      val want = greedyBpe(w, ms)
+      assert(got(w)._1 == want, s"word '$w' under ${ms.size} rules: kernel ${got(w)._1} != greedy $want")
+      assert(got(w)._2 == want.map(sy => vocab.getOrElse(sy, sy.codePointAt(0))), s"ids of '$w'")
+    }
+  }
+
+  test("kernel == greedy reference: supplementary-plane symbols, trained ' and \\ symbols, a 40-rule table") {
+    // one code point, two UTF-16 units: rules over them are single-symbol rules
+    val astral = Seq(("😀", "a"), ("b", "😀a"), ("𝔘", "b"), ("𝔘b", "😀a"))
+    assertGreedy(astral, seededWords(0xa57, Seq("😀", "a", "b", "𝔘", "x"), 300) :+ "𝔘b😀a😀a")
+    // trained symbols carrying the characters SQL string literals escape
+    val quoted = Bpe.train(Seq((1L, "don't don't can't a\\b a\\b c\\d'e c\\d'e")).toDF("doc_id", "text"),
+      nMerges = 8)
+    assert(quoted.exists(r => (r._1 + r._2).contains("'")) &&
+      quoted.exists(r => (r._1 + r._2).contains("\\")), s"got $quoted")
+    assertGreedy(quoted, seededWords(0x907, Seq("d", "o", "n", "'", "t", "c", "a", "\\", "b", "e"), 300))
+    // a table past the old per-rule chain's analyzer ceiling (~20 rules),
+    // trained on a seeded Zipf-ish corpus
+    val vocab = seededWords(0xb16, "theinandrgostlumc".map(_.toString), 80)
+    val rnd = new scala.util.Random(0xb17)
+    val corpus = Seq.fill(600)(vocab(rnd.nextInt(1 + rnd.nextInt(vocab.size)))).mkString(" ")
+    val big = Bpe.train(Seq((1L, corpus)).toDF("doc_id", "text"), nMerges = 40)
+    assert(big.size >= 32, s"only ${big.size} rules learned")
+    val alphabet = big.flatMap(r => (r._1 + r._2).codePoints.toArray.map(Character.toString)).distinct
+    assertGreedy(big, vocab ++ seededWords(0xb18, alphabet, 300))
+  }
+
+  test("byte model: ids are bytes below 256 or VOCAB_BASE + rank, greedy over carrier characters, decode inverts") {
+    val words = Seq("the", "rather", "café", "中文", "😀ok", "ĀbĀ", "a\nb")
+    val out = words.toDF("text")
+      .select(col("text"), Bpe.ids(col("text"), bytes = true).as("ids"))
+      .select(col("text"), col("ids"), Bpe.decode(col("ids"), bytes = true))
+      .collect()
+    out.foreach { r =>
+      val (w, ids, dec) = (r.getString(0), r.getSeq[Int](1), r.getString(2))
+      val carriers = w.getBytes("UTF-8").map(b => Character.toString(BpeKernel.carrier(b & 0xff))).mkString
+      val want = greedyBpe(carriers, Bpe.merges).map(sy =>
+        Bpe.vocabIds.getOrElse(sy, { val cp = sy.codePointAt(0); if (cp >= 256) cp - 256 else cp }))
+      assert(ids == want, s"'$w': kernel $ids != greedy-over-carriers $want")
+      assert(ids.filter(_ < Bpe.VOCAB_BASE).forall(i => i >= 0 && i <= 255), s"'$w' leaked a base id: $ids")
+      assert(dec == w, s"byte decode of '$w' gave '$dec'")
+    }
+  }
+
 }

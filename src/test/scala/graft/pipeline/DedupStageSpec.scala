@@ -524,4 +524,38 @@ class DedupStageSpec extends SparkSpec {
       assert(spark.read.parquet(storePath).count() == 7L)
     } finally q.stop()
   }
+
+  test("concurrent first use of one key runs its builder exactly once; every caller reads the table") {
+    val key = "stage_once_spec"
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val reads = (1 to 8).map { _ =>
+        pool.submit(() => {
+          go.await()
+          ShingleStage.stagedTable(spark, key, {
+            builds.incrementAndGet()
+            Thread.sleep(200) // keep the build open while the others arrive
+            Seq(1L, 2L, 3L).toDF("x")
+          }).count()
+        })
+      }
+      go.countDown()
+      assert(reads.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)) == Seq.fill(8)(3L))
+      assert(builds.get == 1, s"the builder ran ${builds.get} times")
+    } finally {
+      pool.shutdownNow()
+      spark.sql("DROP TABLE IF EXISTS graft_staged_stage_once_spec")
+    }
+  }
+
+  test("stageAllDetail leaves the session's cache empty (the sitemap entry frame is released)") {
+    spark.catalog.clearCache()
+    ShingleStage.reset(spark) // force every artifact to build
+    val detail = PipelineQueries.stageAllDetail(spark, dir)
+    assert(detail.map(_._1).contains("sitemap_pages"))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "staging must unpersist what it cached once the store is written")
+  }
 }

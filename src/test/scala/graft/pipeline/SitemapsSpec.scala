@@ -79,7 +79,7 @@ class SitemapsSpec extends SparkSpec {
       ("b.org", "https://b.org/c3.xml",
         "<urlset><url><loc>https://b.org/never</loc></url></urlset>")
     ).toDF("host", "sitemap_url", "body")
-    val got = sitemapPageUrls(robots, bodies).collect()
+    val got = sitemapPageUrls(robots, bodies)(_.collect())
       .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)),
         Option(r.getString(3)), if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSet
     assert(got == Set(

@@ -38,8 +38,8 @@ class SitemapStreamSpec extends SparkSpec {
   test("sitemapIngestStream: distinct pages + max lastmod == batch sitemapPageUrls on crawl-ordered feeds (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     val want = graft.pipeline.Sitemaps.sitemapPageUrls(robotsDf,
-        feed.map(f => (f.host, f.sitemap_url, f.body)).toDF("host", "sitemap_url", "body"))
-      .collect().map(r => (r.getString(0), r.getString(1), Option(r.getString(2)))).toSet
+        feed.map(f => (f.host, f.sitemap_url, f.body)).toDF("host", "sitemap_url", "body"))(_.collect())
+      .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)))).toSet
     assert(want == Set(
       ("a.com", "https://a.com/p?a=1&b=2", Some("2024-01-01")),
       ("a.com", "https://a.com/rel", Some("2024-06-06")),
@@ -94,8 +94,8 @@ class SitemapStreamSpec extends SparkSpec {
         "<urlset><url><loc>https://a.com/p</loc><changefreq>Weekly</changefreq>" +
           "<priority>0.7</priority></url></urlset>", 2L))
     val batch = graft.pipeline.Sitemaps.sitemapPageUrls(robotsDf,
-        feed2.map(f => (f.host, f.sitemap_url, f.body)).toDF("host", "sitemap_url", "body"))
-      .collect().map(r => (r.getString(1), Option(r.getString(3)),
+        feed2.map(f => (f.host, f.sitemap_url, f.body)).toDF("host", "sitemap_url", "body"))(_.collect())
+      .map(r => (r.getString(1), Option(r.getString(3)),
         if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSet
     assert(batch == Set(
       ("https://a.com/p", Some("weekly"), Some(700000L)),
