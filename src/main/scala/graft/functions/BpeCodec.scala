@@ -119,8 +119,10 @@ case class BpeModel(merges: Seq[(String, String)], bytes: Boolean) {
     end
   }
 
-  /** Symbol ids of every word of `text`, in order. */
-  def ids(text: UTF8String): Array[Int] = {
+  /** Symbol ids of every word of `text`, in order; `spaced` puts the
+    * marker id 32 (' ' in both models) between words.
+    */
+  def ids(text: UTF8String, spaced: Boolean = false): Array[Int] = {
     val buf = if (bytes) text.getBytes.map(_ & 0xff) else text.toString.codePoints.toArray
     var n = 0
     var i = 0
@@ -130,6 +132,8 @@ case class BpeModel(merges: Seq[(String, String)], bytes: Boolean) {
         val from = i
         while (i < buf.length && buf(i) != ' ') i += 1
         val end = mergeWord(buf, from, i)
+        // the separating space lies between n and from, so the marker fits
+        if (spaced && n > 0) { buf(n) = ' '; n += 1 }
         System.arraycopy(buf, from, buf, n, end - from)
         n += end - from
       }
@@ -138,6 +142,7 @@ case class BpeModel(merges: Seq[(String, String)], bytes: Boolean) {
   }
 
   def idArray(text: UTF8String): ArrayData = UnsafeArrayData.fromPrimitiveArray(ids(text))
+  def spacedIdArray(text: UTF8String): ArrayData = UnsafeArrayData.fromPrimitiveArray(ids(text, spaced = true))
   def count(text: UTF8String): Long = ids(text).length.toLong
   def maxBaseId(text: UTF8String): Long = ids(text).filter(_ < VocabBase).maxOption.getOrElse(-1).toLong
   def syms(text: UTF8String): ArrayData = new GenericArrayData(ids(text).map { id =>
@@ -170,6 +175,8 @@ object BpeOp {
   /** Symbol strings (byte model: carrier characters). */
   case object Syms extends BpeOp("syms", ArrayType(StringType))
   case object Ids extends BpeOp("idArray", ArrayType(IntegerType, containsNull = false))
+  /** Ids with the marker id 32 between words: decodes to the words joined by ' '. */
+  case object SpacedIds extends BpeOp("spacedIdArray", ArrayType(IntegerType, containsNull = false))
   case object Count extends BpeOp("count", LongType)
   /** Largest atom id, -1 when every symbol is a compound. */
   case object MaxBaseId extends BpeOp("maxBaseId", LongType)
@@ -191,6 +198,7 @@ case class BpeCodec(child: Expression, model: BpeModel, op: BpeOp)
     case BpeOp.Decode => model.decode(in.asInstanceOf[ArrayData])
     case BpeOp.Syms => model.syms(in.asInstanceOf[UTF8String])
     case BpeOp.Ids => model.idArray(in.asInstanceOf[UTF8String])
+    case BpeOp.SpacedIds => model.spacedIdArray(in.asInstanceOf[UTF8String])
     case BpeOp.Count => model.count(in.asInstanceOf[UTF8String])
     case BpeOp.MaxBaseId => model.maxBaseId(in.asInstanceOf[UTF8String])
   }

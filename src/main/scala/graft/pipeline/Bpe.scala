@@ -318,46 +318,34 @@ object Bpe {
     * with leading/trailing/doubled spaces differ from their round trip,
     * and those the tokenizer itself normalizes — documented contract).
     * Asserting this corpus-wide is the cheapest end-to-end integrity
-    * check of the whole id table.
-    *
-    * Runs on the DICTIONARY PATH ([[docTokenCounts]]'s discipline): both
-    * the per-word encode AND the per-id decode execute once per DISTINCT
-    * word — the Zipfian vocabulary — then fan back over the (doc, pos,
-    * word) occurrence stream via a broadcast join. The round trip stays
-    * genuine: each dictionary entry is decode(ids(encode(word))) through
-    * the integer id table, exactly what the scan-side form computed per
-    * occurrence, and the spaced stream's decode factors per word because
-    * the marker (id 32) always decodes to one ' ' between words. The
-    * per-doc reassembly ([[inOrder]]) shuffles the decoded WORD stream
-    * once, at its natural width.
+    * check of the whole id table. One projection per document: the
+    * kernel encodes the spaced stream and decodes it back.
     */
-  def decodeRoundTrip(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val base = docs.select(col(idCol), expr(toksS(textCol)).as("__toks"))
-    val words = base.select(col(idCol), posexplode(col("__toks")).as(Seq("__p", "__w")))
-    def entry(w: Column) = {
-      val is = ids(w)
-      struct(size(is).cast("long").as("__n"), decode(is).as("__d"))
-    }
-    val perDoc = dictFanBack(words, entry, "__e")
-      .select(col(idCol), col("__p"),
-        col("__e.__n").as("__n"), col("__e.__d").as("__d"))
-      .groupBy(idCol)
-      .agg(
-        expr("sum(__n) + count(1) - 1").as("n_bpe_tokens"),
-        inOrder("__d", " ").as("__dd"))
-    base.join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bpe_tokens"), lit(0L)).as("n_bpe_tokens"),
-        md5(coalesce(col("__dd"), lit(""))).as("decoded_md5"),
-        (coalesce(col("__dd"), lit("")) === concat_ws(" ", col("__toks")))
-          .as("roundtrip_ok"))
-  }
+  def decodeRoundTrip(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    roundTrip(docs, idCol, textCol, merges, bytes = false)
 
-  /** Per-document reassembly of a per-word string column: the words'
-    * values joined by `sep` in word position (`__p`) order.
+  /** The round-trip projection [[decodeRoundTrip]] and [[byteRoundTrip]]
+    * share: (idCol, n_bpe_tokens, decoded_md5, roundtrip_ok, extra…),
+    * over the spaced id stream (marker id 32 between words, see
+    * [[decode]]). The spaced ids are projected first and read twice, so
+    * the plan keeps the encode in its own projection, evaluated once per
+    * document.
     */
-  private def inOrder(field: String, sep: String): Column =
-    concat_ws(sep, array_sort(collect_list(struct(col("__p"), col(field)))).getField(field))
+  private def roundTrip(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      ms: Seq[(String, String)],
+      bytes: Boolean,
+      extra: Column*): DataFrame = {
+    val dd = coalesce(decode(col("__ids"), ms, bytes), lit(""))
+    val spaced = BpeCodec.of(col(textCol), BpeModel(ms, bytes), BpeOp.SpacedIds)
+    docs.select(col(idCol), col(textCol), spaced.as("__ids"))
+      .select(Seq(col(idCol),
+        coalesce(size(col("__ids")).cast("long"), lit(0L)).as("n_bpe_tokens"),
+        md5(dd).as("decoded_md5"),
+        (dd === expr(s"concat_ws(' ', ${toksS(textCol)})")).as("roundtrip_ok")) ++ extra: _*)
+  }
 
   /** DuckDB oracle twin of [[decodeRoundTrip]] — generated from the same
     * constants (the [[encodeSqlD]] discipline).
@@ -373,72 +361,6 @@ object Bpe {
        |FROM dec ORDER BY doc_id""".stripMargin
   }
 
-  /** BROADCAST-CEILING GUARD for the dictionary path. The per-word
-    * kernel runs once per distinct word and fans back over the
-    * occurrence stream via a broadcast join — measured ~5× on every BPE
-    * consumer — but the broadcast has a ceiling: a web-scale corpus's
-    * distinct-"word" set (typos, URLs-in-text, hex ids) is billions of
-    * entries, and Zipf puts nearly all of that CARDINALITY in words seen
-    * once, while nearly all of the OCCURRENCE mass stays in the head.
-    * So the dictionary is df-capped to words seen at least
-    * `spark.graft.bpe.dictMinCount` times (default 2): the broadcast
-    * side shrinks to the head the fan-back actually amortizes, and rare
-    * words fall back to the SAME kernel evaluated scan-side in the
-    * coalesce's miss arm. The fallback does no extra kernel work — a word
-    * below the floor occurs fewer times than the floor, so inline
-    * evaluation at its occurrences costs no more than one dictionary
-    * entry would — and it never ships the tail to every executor.
-    *
-    * Output values are INVARIANT to the setting (spec-asserted):
-    * minCount=1 is the pure dictionary path (everything broadcasts, the
-    * miss arm is dead); a huge minCount degenerates to the pure
-    * scan-side form (empty dictionary, every row computes inline). Both
-    * branches are the same expression, so they cannot drift.
-    *
-    * Returns `words` plus `outCol` = entry(`__w`). `entry` must be
-    * deterministic and non-null for non-null words (join misses are
-    * detected by `outCol IS NULL`).
-    */
-  private def dictFanBack(
-      words: DataFrame,
-      entry: Column => Column,
-      outCol: String): DataFrame = {
-    val minCount = words.sparkSession.conf
-      .getOption("spark.graft.bpe.dictMinCount").map(_.toLong).getOrElse(2L)
-    require(minCount >= 1, s"spark.graft.bpe.dictMinCount must be >= 1, got $minCount")
-    val dict = words.groupBy("__w").agg(count(lit(1)).as("__wc"))
-      .where(col("__wc") >= minCount)
-      .select(col("__w"), entry(col("__w")).as(outCol))
-    words.join(broadcast(dict), Seq("__w"), "left")
-      .withColumn(outCol, coalesce(col(outCol), entry(col("__w"))))
-  }
-
-  /** THE DICTIONARY PATH — the scale form for token COUNTING: natural
-    * language vocabulary is Zipfian, so distinct words grow far slower
-    * than token occurrences, and the per-word BPE cost should be paid
-    * once per DISTINCT word and fanned back out by frequency — the
-    * per-word cache every production tokenizer keeps (GPT-2's lru_cache
-    * per word), expressed relationally. The dictionary is vocab-sized,
-    * so it BROADCASTS onto the token stream; the corpus never shuffles
-    * for the lookup. Use this wherever only counts matter (packing,
-    * mixture budgets, vocab curves); [[encode]] stays scan-side because
-    * its id-stream md5 needs the exact token ORDER.
-    *
-    * Per-document BPE token counts: (idCol, n_bpe_tokens). Zero-token
-    * documents report 0 (they never vanish from a packing feed).
-    */
-  def docTokenCounts(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val toks = docs.select(col(idCol), explode(expr(toksS(textCol))).as("__w"))
-    val counts = dictFanBack(toks, w => nTokens(w), "__nb")
-      .groupBy(idCol).agg(sum(col("__nb")).as("n_bpe_tokens"))
-    docs.select(col(idCol))
-      .join(counts, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("n_bpe_tokens"), lit(0L)).as("n_bpe_tokens"))
-  }
-
   /** TOKENIZER FERTILITY by language — BPE tokens per whitespace word,
     * per language: the metric that exposes a tokenizer under-serving a
     * language (a vocab trained on English fragments everything else into
@@ -447,17 +369,10 @@ object Bpe {
     * compute cost and shrinks its effective context). Output per lang:
     * (lang, n_words, n_bpe_tokens, fertility_ppm = bpe*1e6 div words).
     *
-    * Scale shape: SCAN-SIDE, deliberately NOT the dictionary path — an
-    * aggregation-only consumer keeps nothing per word, so the right plan
-    * is one kernel pass per document and ONE lang-keyed aggregation with
-    * map-side partials: zero extra shuffles, embarrassingly parallel,
-    * and every doc row (empty ones included) reaches the aggregate, so
-    * no language can vanish from the report. The round-14 dictionary
-    * form paid a word-explode + distinct-word shuffle + broadcast to
-    * save kernel evaluations and MEASURED 2.2× slower at sf0.1
-    * (0.41 → 0.9+ s) — the amortization only pays when per-word output
-    * must survive the join ([[encode]]'s id streams, [[decodeRoundTrip]]'s
-    * decoded text), not for a five-row count table.
+    * Scale shape: one kernel pass per document and ONE lang-keyed
+    * aggregation with map-side partials: zero extra shuffles, and every
+    * doc row (empty ones included) reaches the aggregate, so no language
+    * can vanish from the report.
     */
   def fertilityByLang(
       docs: DataFrame,
@@ -484,45 +399,10 @@ object Bpe {
        |  CAST(sum(len(ss)) * 1000000 // greatest(sum(len(toks)), 1) AS BIGINT) AS fertility_ppm
        |FROM syms GROUP BY lang ORDER BY lang""".stripMargin
 
-  /** Subword vocab-sizing curve via the dictionary path: word counts are
-    * one vocab-sized aggregation, BPE runs once per distinct word, and
-    * symbol counts weight by word frequency — corpus-sized work is ONE
-    * token count aggregation; all BPE cost is vocab-sized. Output schema
-    * matches `TextAnalysis.vocabCoverage` (rank, token, cnt, cum_ppm) and
-    * the results are identical (spec-asserted) — this is a pure plan
-    * optimization.
-    */
-  def vocabCurve(
-      docs: DataFrame,
-      topK: Int = 100,
-      textCol: String = "text"): DataFrame = {
-    require(topK > 0, s"topK must be positive, got $topK")
-    val wc = docs.select(explode(expr(toksS(textCol))).as("__w"))
-      .groupBy("__w").agg(count(lit(1)).as("__wc"))
-    val counts = wc
-      .select(explode(syms(col("__w"))).as("t"), col("__wc"))
-      .groupBy("t").agg(sum(col("__wc")).as("cnt"))
-    val total = counts.agg(sum("cnt").as("__total"))
-    val top = counts.orderBy(col("cnt").desc, col("t")).limit(topK)
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("cnt").desc, col("t"))
-    top.crossJoin(broadcast(total))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .withColumn("cum_ppm",
-        expr("sum(cnt) over (order by cnt desc, t rows between unbounded preceding and current row) * 1000000L div __total"))
-      .select(col("rank"), col("t").as("token"), col("cnt"), col("cum_ppm"))
-  }
-
   /** Per-document encode summary: whitespace token count, BPE token
     * count, and the md5 of the comma-joined id sequence (order-exact —
-    * two documents agree iff their full BPE id streams agree).
-    *
-    * DICTIONARY PATH (the [[decodeRoundTrip]] shape): the per-word encode
-    * runs once per DISTINCT word, each word's ids pre-joined into one
-    * comma string; the per-doc stream reassembles in exact order
-    * ([[inOrder]]) and joining per-word strings with ',' is
-    * byte-identical to joining the flattened stream. The order-exactness
-    * argument that once kept this operator scan-side is answered by the
-    * positional reassembly.
+    * two documents agree iff their full BPE id streams agree). One
+    * projection per document over the kernel.
     */
   def encode(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     encodeWith(docs, merges, idCol, textCol)
@@ -548,26 +428,14 @@ object Bpe {
       docs: DataFrame,
       ms: Seq[(String, String)],
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val base = docs.select(col(idCol), expr(toksS(textCol)).as("__toks"))
-    val words = base.select(col(idCol), posexplode(col("__toks")).as(Seq("__p", "__w")))
-    def entry(w: Column) = {
-      val is = ids(w, ms)
-      struct(size(is).cast("long").as("__n"), concat_ws(",", is.cast("array<string>")).as("__ids"))
-    }
-    val perDoc = dictFanBack(words, entry, "__e")
-      .select(col(idCol), col("__p"),
-        col("__e.__n").as("__n"), col("__e.__ids").as("__ids"))
-      .groupBy(idCol)
-      .agg(
-        sum(col("__n")).as("__nb"),
-        inOrder("__ids", ",").as("__idstr"))
-    base.join(perDoc, Seq(idCol), "left")
+      textCol: String = "text"): DataFrame =
+    // the ids are projected first and read twice (count and md5), so the
+    // plan keeps the encode in its own projection, evaluated once
+    docs.select(col(idCol), col(textCol), ids(col(textCol), ms).as("__ids"))
       .select(col(idCol),
-        size(col("__toks")).cast("long").as("n_ws_tokens"),
-        coalesce(col("__nb"), lit(0L)).as("n_bpe_tokens"),
-        md5(coalesce(col("__idstr"), lit(""))).as("ids_md5"))
-  }
+        expr(s"cast(size(${toksS(textCol)}) as bigint)").as("n_ws_tokens"),
+        coalesce(size(col("__ids")).cast("long"), lit(0L)).as("n_bpe_tokens"),
+        md5(concat_ws(",", col("__ids").cast("array<string>"))).as("ids_md5"))
 
   /** DuckDB oracle twin of [[encodeWith]] — generated from the same merge
     * constants (the [[encodeSqlD]] discipline), so a frozen trained table
@@ -647,10 +515,8 @@ object Bpe {
        |  END)[1]"""
       .stripMargin.replace("\n", " ")
 
-  /** Per-document byte-fallback encode→decode round trip on the
-    * DICTIONARY PATH (the [[decodeRoundTrip]] shape: encode and decode
-    * run once per DISTINCT word, fan
-    * back by position, reassemble per doc). Output per document:
+  /** Per-document byte-fallback encode→decode round trip (the
+    * [[decodeRoundTrip]] projection under the byte model). Output per document:
     * (idCol, n_bpe_tokens, decoded_md5, roundtrip_ok, max_base_id) —
     * n_bpe_tokens counts the spaced stream (marker id 32 = the space
     * byte, between words), and max_base_id ≤ 255 is the BOUNDED-alphabet
@@ -661,35 +527,13 @@ object Bpe {
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      ms: Seq[(String, String)] = merges): DataFrame = {
-    val base = docs.select(col(idCol), expr(toksS(textCol)).as("__toks"))
-    val words = base.select(col(idCol), posexplode(col("__toks")).as(Seq("__p", "__w")))
-    def entry(w: Column) = {
-      val is = ids(w, ms, bytes = true)
-      struct(size(is).cast("long").as("__n"),
-        BpeCodec.of(w, BpeModel(ms, bytes = true), BpeOp.MaxBaseId).as("__maxb"),
-        decode(is, ms, bytes = true).as("__d"))
-    }
-    val perDoc = dictFanBack(words, entry, "__e")
-      .select(col(idCol), col("__p"), col("__e.__n").as("__n"),
-        col("__e.__maxb").as("__maxb"), col("__e.__d").as("__d"))
-      .groupBy(idCol)
-      .agg(
-        expr("sum(__n) + count(1) - 1").as("n_bpe_tokens"),
-        inOrder("__d", " ").as("__dd"),
-        max(col("__maxb")).as("max_base_id"))
-    base.join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bpe_tokens"), lit(0L)).as("n_bpe_tokens"),
-        md5(coalesce(col("__dd"), lit(""))).as("decoded_md5"),
-        (coalesce(col("__dd"), lit("")) === concat_ws(" ", col("__toks")))
-          .as("roundtrip_ok"),
-        coalesce(col("max_base_id"), lit(-1L)).as("max_base_id"))
-  }
+      ms: Seq[(String, String)] = merges): DataFrame =
+    roundTrip(docs, idCol, textCol, ms, bytes = true,
+      coalesce(BpeCodec.of(col(textCol), BpeModel(ms, bytes = true), BpeOp.MaxBaseId), lit(-1L))
+        .as("max_base_id"))
 
   /** DuckDB oracle twin of [[byteRoundTrip]] over a CTE `aug(doc_id,
-    * text)` — per-word scan form (the oracle verifies VALUES, not the
-    * dictionary plan). Yields CTEs ending in `bf(doc_id, n_bpe_tokens,
+    * text)` — per-word form (the oracle verifies VALUES, not the plan). Yields CTEs ending in `bf(doc_id, n_bpe_tokens,
     * decoded_md5, roundtrip_ok, max_base_id)`.
     */
   def byteRoundTripSqlD(ms: Seq[(String, String)] = merges): String = {

@@ -24,28 +24,20 @@ import org.apache.spark.sql.DataFrame
 private[graft] object Checkpoints {
 
   /** Truncate `df`'s lineage for the next iteration. `opName` names the
-    * refusing operator in the missing-checkpoint-dir error;
-    * `extraConfKeys` lets an operator keep honoring its own documented
-    * legacy key beside the engine-wide one.
+    * refusing operator in the missing-checkpoint-dir error.
     */
-  def iterCheckpoint(
-      df: DataFrame,
-      opName: String,
-      extraConfKeys: Seq[String] = Nil): DataFrame = {
-    val conf = df.sparkSession.conf
+  def iterCheckpoint(df: DataFrame, opName: String): DataFrame = {
+    val key = "spark.graft.reliableCheckpoint"
     // tolerant parse, refusing loudly BY KEY on junk: a bare .toBoolean
     // threw 'For input string: "1"' with no hint of which conf was wrong
     // (ADVICE r20)
-    val reliable = ("spark.graft.reliableCheckpoint" +: extraConfKeys)
-      .exists { k =>
-        conf.getOption(k).exists { v =>
-          val t = v.trim
-          if (t.equalsIgnoreCase("true")) true
-          else if (t.equalsIgnoreCase("false")) false
-          else throw new IllegalArgumentException(
-            s"$opName: conf $k must be true or false, got '$v'")
-        }
-      }
+    val reliable = df.sparkSession.conf.getOption(key).exists { v =>
+      val t = v.trim
+      if (t.equalsIgnoreCase("true")) true
+      else if (t.equalsIgnoreCase("false")) false
+      else throw new IllegalArgumentException(
+        s"$opName: conf $key must be true or false, got '$v'")
+    }
     if (reliable) {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         s"reliable checkpointing for $opName requires " +

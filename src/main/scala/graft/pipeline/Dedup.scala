@@ -923,7 +923,7 @@ object Dedup {
   }
 
   /** Lineage truncation for iterative CC state: reliable `checkpoint()`
-    * when `spark.graft.dedup.reliableCheckpoint=true` (requires a
+    * when `spark.graft.reliableCheckpoint=true` (requires a
     * `setCheckpointDir` — fail-fast with the remedy if absent, because
     * Spark's own error at materialization time names neither the conf nor
     * the caller), else `localCheckpoint`. Always lazy: the round's
@@ -931,10 +931,7 @@ object Dedup {
     * state and measures progress.
     */
   private def ccCheckpoint(df: DataFrame): DataFrame =
-    // the engine-wide reliable switch, plus this operator's own
-    // documented legacy key
-    Checkpoints.iterCheckpoint(df, "connected components",
-      extraConfKeys = Seq("spark.graft.dedup.reliableCheckpoint"))
+    Checkpoints.iterCheckpoint(df, "connected components")
 
   /** Connected components over a near-dup pair list — the cluster-election
     * step every production dedup pipeline runs AFTER pair generation:
@@ -963,7 +960,7 @@ object Dedup {
     * [[ccCheckpoint]] — `localCheckpoint` by default (blocks pinned to
     * executor storage; fastest, but an executor loss mid-loop fails the
     * job), or a RELIABLE `checkpoint()` to the cluster's checkpoint
-    * directory when `spark.graft.dedup.reliableCheckpoint=true` and
+    * directory when `spark.graft.reliableCheckpoint=true` and
     * `spark.sparkContext.setCheckpointDir` has been called — the mode a
     * 1000-executor run should use, since losing one executor during a
     * multi-round CC over a 100 TB corpus' pair graph must not restart

@@ -3490,10 +3490,9 @@ object PipelineQueries {
     }),
 
     // real subword BPE encode: a literal well-formed merge table applied
-    // in rank order by the native bpe_encode kernel, once per distinct
-    // word (broadcast dictionary); n_bpe_tokens is the count
-    // token-denominated operators should be denominated in (vs the
-    // whitespace approximation)
+    // in rank order by the native BPE kernel, one projection per
+    // document; n_bpe_tokens is the count token-denominated operators
+    // should be denominated in (vs the whitespace approximation)
     "ext_bpe_encode" -> ((s, dir) => {
       Bpe.encode(Tables.documents(s, dir)).orderBy("doc_id")
     }),
@@ -3644,12 +3643,11 @@ object PipelineQueries {
     }),
 
     // the SAME curve over the real BPE subword stream — the vocab-sizing
-    // view a tokenizer-training decision actually reads. Dictionary
-    // path: BPE runs once per DISTINCT word (Zipfian vocab), weighted by
-    // frequency — spec-equal to vocabCoverage(tokenizer = Bpe.syms)
-    // but with all BPE cost vocab-sized instead of corpus-sized
+    // view a tokenizer-training decision actually reads: the kernel's
+    // symbols swapped in as the curve's tokenizer
     "ext_bpe_vocab" -> ((s, dir) => {
-      Bpe.vocabCurve(Tables.documents(s, dir), topK = 20).orderBy("rank")
+      TextAnalysis.vocabCoverage(Tables.documents(s, dir), topK = 20,
+        tokenizer = c => Bpe.syms(col(c))).orderBy("rank")
     }),
 
     // unigram-LM surprisal band-pass input: mean integer-log2 inverse

@@ -371,14 +371,12 @@ object HistoryOrchestrator {
         case (mode, Seq((onlyMeta, _))) =>
           HistoryRouter.applyFinalResample(m.candles, mode, onlyMeta)
         case (mode, groups) =>
-          // one resample branch per distinct meta: persist the merged frame
-          // first so each branch re-reads the cache instead of recomputing
-          // the whole union+merge per branch (same bounded lifecycle as the
-          // AutoDaily cache — LRU-evictable, ContextCleaner-reclaimed)
-          val cached = m.candles.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          // one resample branch per distinct meta, each over the merged
+          // plan (not a persisted copy: the returned plan would keep the
+          // cache entry alive, and nothing could unpersist it)
           groups.map { case (meta, syms) =>
             HistoryRouter.applyFinalResample(
-              cached.filter(col("symbol").isin(syms: _*)), mode, meta)
+              m.candles.filter(col("symbol").isin(syms: _*)), mode, meta)
           }.reduce(_ unionByName _)
       }
       HistoryResult(

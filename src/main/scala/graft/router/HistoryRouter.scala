@@ -290,12 +290,6 @@ object HistoryRouter {
       mergedActions), warnings))
   }
 
-  /** H5 failure-path diagnosis (history.rs:205-274): run only AFTER the
-    * in-plan guard aborted an action. The blame logic:
-    * a provider mixing currencies within its own (symbol) is blamed first;
-    * otherwise the lowest-priority provider whose currency deviates from
-    * the top-priority provider's reference currency.
-    */
   /** The shared provider-frame tagging: each contribution resampled by its
     * own plan, carrying its priority and provider name. merge(),
     * mergeGrouped() and currencyStats() all consume this ONE construction
@@ -333,6 +327,12 @@ object HistoryRouter {
   private def refCurrencyOf(rows: Seq[(String, Int, String, Seq[String])]): Option[String] =
     rows.sortBy(_._2).flatMap(_._4.headOption).headOption
 
+  /** H5 failure-path diagnosis (history.rs:205-274): run only AFTER the
+    * in-plan guard aborted an action. The blame logic:
+    * a provider mixing currencies within its own (symbol) is blamed first;
+    * otherwise the lowest-priority provider whose currency deviates from
+    * the top-priority provider's reference currency.
+    */
   def diagnoseCurrency(results: Seq[ProviderHistory]): Option[BorsaError] = {
     val stats = currencyStats(results)
 
@@ -427,37 +427,30 @@ object HistoryRouter {
         // applies auto-resample per response, which is inherently
         // per-instrument): a daily-cadence symbol sharing a bulk frame
         // with an intraday symbol passes through byte-identical, only the
-        // subdaily partition is resampled. Cache the merged frame first:
-        // the decision pass materializes it and both branches re-read the
-        // cache instead of recomputing the whole upstream union+merge.
-        // Lifecycle: no explicit unpersist is possible (the returned plan
-        // still reads the cache); blocks are MEMORY_AND_DISK
-        // (LRU-evictable under pressure) and reclaimed by ContextCleaner
-        // once the frame becomes unreachable — bounded, not a leak.
-        val cached = merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // flags is one row per symbol; persist so the decision aggregate
-        // below AND the broadcast build in the mixed branch both read the
-        // materialized frame instead of re-running the inference window
+        // subdaily partition is resampled. Nothing is cached: the returned
+        // plan would keep reading a persisted frame, so no caller could
+        // unpersist it, and CacheManager holds a persisted plan until it
+        // is unpersisted — a per-request cache entry would never go away.
+        // The decision pass and the returned plan each read the upstream.
         val flags = graft.timeseries.Infer.isSubdaily(
-          cached.withColumn("secs", col("ts")), tiebreak = Seq("ts"))
+          merged.withColumn("secs", col("ts")), tiebreak = Seq("ts"))
           .select(col("symbol"), col("subdaily"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // Only TWO scalars cross the driver (any-subdaily / all-subdaily):
         // they pick the plan SHAPE. The mixed branch routes per-row via a
         // broadcast join on the one-row-per-symbol flag frame — never a
         // collected symbol list baked into the plan as an IN-list, which
         // at a large universe becomes a giant literal and a driver
         // round-trip proportional to the universe.
-        val counts = cached.select("symbol").distinct()
+        val counts = merged.select("symbol").distinct()
           .join(flags, Seq("symbol"), "left")
           .agg(count(lit(1)).as("n"),
             coalesce(sum(when(col("subdaily"), 1L).otherwise(0L)), lit(0L)).as("n_sub"))
           .head()
         val (n, nSub) = (counts.getLong(0), counts.getLong(1))
-        if (nSub == 0L) cached
-        else if (nSub == n) run(cached, ResamplePlan.Daily) // branch-free common case
+        if (nSub == 0L) merged
+        else if (nSub == n) run(merged, ResamplePlan.Daily) // branch-free common case
         else {
-          val flagged = cached.join(broadcast(flags), Seq("symbol"), "left")
+          val flagged = merged.join(broadcast(flags), Seq("symbol"), "left")
             .withColumn("__sub", coalesce(col("subdaily"), lit(false)))
             .drop("subdaily")
           // allowMissingColumns: the resampled side always carries a cleared

@@ -212,31 +212,32 @@ class PlanAssertionsSpec extends SparkSpec {
     assert(!plan.contains("SortMergeJoin"), s"the token-weight join must not sort-merge:\n${plan.take(2000)}")
   }
 
-  test("ext_bpe_encode: dictionary path — the vocab-sized dict broadcasts, the merge chain never sort-merges") {
-    // the encode moved from scan-side to the per-distinct-word dictionary
-    // (measured at sf0.1: 1.96 → 0.60 s shipped, 2.52 → 0.70 s trained):
-    // the expensive merge chain must run on the BROADCAST dict side, and
-    // the per-doc reassembly is the only corpus-keyed aggregation
-    val plan = planOf("ext_bpe_encode")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"the word dictionary must broadcast onto the token stream:\n${plan.take(2000)}")
-    // exactly one sort-merge join is expected: the doc-keyed LEFT join
-    // that restores zero-token documents (fixed-width rows, never text)
-    val smj = "SortMergeJoin".r.findAllIn(plan).size
-    assert(smj <= 1, s"only the zero-token restore join may sort-merge, got $smj:\n${plan.take(2000)}")
+  test("BPE per-document queries: one projection over the kernel — no Generate, no join, one Exchange (the presentation sort)") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    Seq("ext_bpe_encode", "ext_bpe_decode", "ext_bpe_bytes", "ext_bpe_trained").foreach { q =>
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      def nodes(p: PartialFunction[SparkPlan, SparkPlan]) = helper.collect(plan)(p).size
+      assert(nodes { case g: GenerateExec => g } == 0, s"$q explodes documents into words:\n$plan")
+      assert(nodes { case j: BaseJoinExec => j } == 0, s"$q joins:\n$plan")
+      assert(nodes { case e: Exchange => e } == 1, s"$q shuffles beyond the presentation sort:\n$plan")
+    }
   }
 
   test("ext_bpe_vocab: dictionary path — two vocab-sized aggregates, top-K prunes") {
     val plan = planOf("ext_bpe_vocab")
     assert(plan.contains("TakeOrderedAndProject"),
       s"top-K must prune, not global-sort:\n${plan.take(2000)}")
-    // the (word agg, symbol agg) chain appears twice in the printed plan —
-    // the counts subtree feeds both the grand-total and top-K branches and
-    // Spark shares no subplans — so the bound is 2 aggregates x 2 branches;
-    // the point of the guard: every exchange is VOCAB-sized (post-agg),
-    // never an exchange of corpus rows
+    // the kernel's symbols are counted with map-side partials, and that
+    // one aggregate appears twice in the printed plan — the counts subtree
+    // feeds both the grand-total and top-K branches and Spark shares no
+    // subplans; the point of the guard: every exchange is VOCAB-sized
+    // (post-agg), never an exchange of corpus rows
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(hashExchanges <= 4,
+    assert(hashExchanges <= 2,
       s"only the vocab-sized aggregates may exchange; got $hashExchanges:\n${plan.take(2000)}")
     assert(!plan.contains("SortMergeJoin"), "nothing here may sort-merge the corpus")
   }

@@ -116,6 +116,35 @@ class BpeSpec extends SparkSpec {
     val wantMd5 = java.security.MessageDigest.getInstance("MD5")
       .digest(wantIds.mkString(",").getBytes("UTF-8")).map("%02x".format(_)).mkString
     assert(out.getAs[String]("ids_md5") == wantMd5)
+
+    // edge inputs, with the values the encode, the code-point round trip
+    // and the byte round trip give them: NULL, empty and blank texts, runs
+    // of spaces, multi-byte + emoji, a repeated word
+    val edge = Seq[(Long, String)]((1L, null), (2L, ""), (3L, "   "), (4L, " the  and "),
+      (5L, "café 😀"), (6L, "the the the")).toDF("doc_id", "text")
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id").collect().map(_.toSeq.tail).toSeq
+    val (the, and) = (Bpe.VOCAB_BASE + 1, Bpe.VOCAB_BASE + 4)
+    val empty = md5("")
+    assert(rows(Bpe.encode(edge)) == Seq(
+      Seq(null, 0L, empty), Seq(0L, 0L, empty), Seq(0L, 0L, empty),
+      Seq(2L, 2L, md5(s"$the,$and")),
+      Seq(2L, 5L, md5("99,97,102,233,128512")),
+      Seq(3L, 3L, md5(s"$the,$the,$the"))))
+    assert(rows(Bpe.decodeRoundTrip(edge)) == Seq(
+      Seq(0L, empty, true), Seq(0L, empty, true), Seq(0L, empty, true),
+      Seq(3L, md5("the and"), true),
+      Seq(6L, md5("café 😀"), true),
+      Seq(5L, md5("the the the"), true)))
+    // byte model: café is 5 bytes, the emoji 4 (lead byte 0xF0 = 240);
+    // a text of compounds only has no base id (-1)
+    assert(rows(Bpe.byteRoundTrip(edge)) == Seq(
+      Seq(0L, empty, true, -1L), Seq(0L, empty, true, -1L), Seq(0L, empty, true, -1L),
+      Seq(3L, md5("the and"), true, -1L),
+      Seq(10L, md5("café 😀"), true, 240L),
+      Seq(5L, md5("the the the"), true, -1L)))
   }
 
   test("mixtureByBudget composes on BPE counts (budgets denominated in subword tokens)") {
@@ -153,27 +182,6 @@ class BpeSpec extends SparkSpec {
     // and differs from the whitespace curve (the recomposition is real)
     val ws = TextAnalysis.vocabCoverage(docs, topK = 10).collect()
     assert(ws.map(_.getAs[String]("token")).toSeq != bpe.map(_.getAs[String]("token")).toSeq)
-  }
-
-  test("dictionary path == scan-side path: docTokenCounts and vocabCurve are pure plan optimizations") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    // per-doc counts: dict-path == size of the exact scan-side stream
-    val direct = docs.select(col("doc_id"),
-        Bpe.nTokens(col("text")).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dict = Bpe.docTokenCounts(docs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(dict == direct, "dictionary fan-back must reproduce exact per-doc counts")
-    // vocab curve: dict-path == vocabCoverage over the scan-side stream
-    val want = TextAnalysis.vocabCoverage(docs, topK = 15, tokenizer = c => Bpe.syms(col(c)))
-      .collect().map(_.toSeq)
-    val got = Bpe.vocabCurve(docs, topK = 15).collect().map(_.toSeq)
-    assert(got.toSeq == want.toSeq)
-    // and the dictionary genuinely broadcasts (corpus never shuffles for
-    // the lookup)
-    val plan = Bpe.docTokenCounts(docs).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"dict must broadcast:\n${plan.take(1500)}")
-    assert(!plan.contains("SortMergeJoin"), "the token-dict join must not sort-merge")
   }
 
   test("train: learns the expected merges on a constructed corpus, in frequency order") {
@@ -434,44 +442,6 @@ class BpeSpec extends SparkSpec {
     }
     assert(ids(1L) == md5ids("the merger can scan the hash batch"))
     assert(ids(2L) == md5ids("join parlor stow"))
-  }
-
-  test("dictionary broadcast-ceiling guard: values invariant across dictMinCount, both arms exercised") {
-    // singletons (unique1/unique2) sit BELOW the default floor of 2 and
-    // must take the scan-side fallback arm; 'the' sits above it and must
-    // ride the broadcast dictionary -- the default run exercises both
-    val docs = Seq(
-      (1L, "the the the unique1"),
-      (2L, "the and in unique2"),
-      (3L, "")).toDF("doc_id", "text")
-    val key = "spark.graft.bpe.dictMinCount"
-    def withMin[T](v: Option[String])(f: => T): T = {
-      val prior = spark.conf.getOption(key)
-      v match { case Some(x) => spark.conf.set(key, x); case None => spark.conf.unset(key) }
-      try f finally prior match {
-        case Some(pv) => spark.conf.set(key, pv); case None => spark.conf.unset(key) }
-    }
-    def counts = Bpe.docTokenCounts(docs).orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    def roundTrip = Bpe.byteRoundTrip(docs).orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getBoolean(3), r.getLong(4))).toSeq
-    val cDefault = withMin(None)(counts)
-    assert(cDefault == withMin(Some("1"))(counts),
-      "pure dictionary path (floor 1) must produce identical counts")
-    assert(cDefault == withMin(Some("1000000"))(counts),
-      "pure scan-side form (unreachable floor) must produce identical counts")
-    assert(withMin(None)(roundTrip) == withMin(Some("1"))(roundTrip)
-      && withMin(None)(roundTrip) == withMin(Some("1000000"))(roundTrip),
-      "struct-entry fan-back (byteRoundTrip) must be invariant too")
-    // the guarded plan still broadcasts the (capped) dictionary
-    val plan = Bpe.docTokenCounts(docs).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"capped dictionary must broadcast:\n${plan.take(2000)}")
-    // a zero floor is a loud error, not a silent full dictionary
-    val e = intercept[IllegalArgumentException] {
-      withMin(Some("0"))(counts)
-    }
-    assert(e.getMessage.contains("dictMinCount"))
   }
 
   private def seededWords(seed: Int, alphabet: Seq[String], n: Int): Seq[String] = {

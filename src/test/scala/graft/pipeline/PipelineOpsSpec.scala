@@ -2027,7 +2027,7 @@ class PipelineOpsSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id1", "id2")
     val want = Dedup.connectedComponents(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.dedup.reliableCheckpoint", "true")
+    spark.conf.set("spark.graft.reliableCheckpoint", "true")
     try {
       // without a checkpoint dir the reliable path must fail fast naming
       // the remedy (Spark's own late error names neither conf nor caller)
@@ -2043,6 +2043,6 @@ class PipelineOpsSpec extends SparkSpec {
       val (starLabels, _) = Dedup.starContract(pairs, "id1", "id2", 50)
       val gotStar = starLabels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(gotStar == want)
-    } finally spark.conf.unset("spark.graft.dedup.reliableCheckpoint")
+    } finally spark.conf.unset("spark.graft.reliableCheckpoint")
   }
 }

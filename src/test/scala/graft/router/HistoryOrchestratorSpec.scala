@@ -238,7 +238,11 @@ class HistoryOrchestratorSpec extends SparkSpec {
     assert(clean.collect(clean.candles.count()) == Right(3L))
   }
 
-  test("H8 multi-meta download under AutoDaily: per-meta branches stay union-compatible") {
+  /** Hourly AAPL from a provider reporting a New York meta and hourly MSFT
+    * from one reporting none, downloaded together under AutoDaily: two
+    * distinct metas, so one final-resample branch per meta.
+    */
+  private def twoMetaAutoDailyDownload() = {
     val nyProv = new MockConnector("ny", MockConnector.Script(
       supportedIntervals = Seq(Interval.I1h),
       meta = Some(HistoryMeta(Some("America/New_York"), None))))
@@ -250,8 +254,12 @@ class HistoryOrchestratorSpec extends SparkSpec {
       .withRule(Policy.Selector(symbol = Some(Symbol("MSFT"))), Seq("plain"), strict = true)
     val r = HistoryRequest(Interval.I1h, Some(1704067200L), Some(1704067200L + 2 * 86400), None)
     val insts = Seq(inst, Instrument(Symbol("MSFT"), None, AssetKind.Equity))
-    val Right(res) = download(spark, insts, r, Seq(nyProv, utcProv), policy,
+    download(spark, insts, r, Seq(nyProv, utcProv), policy,
       Config(finalResample = HistoryRouter.FinalResample.AutoDaily))
+  }
+
+  test("H8 multi-meta download under AutoDaily: per-meta branches stay union-compatible") {
+    val Right(res) = twoMetaAutoDailyDownload()
     val bySymbol = res.candles.select("symbol", "ts").collect()
       .groupBy(_.getString(0)).view.mapValues(_.map(_.getLong(1)).sorted.toSeq).toMap
     // subdaily hourly series collapse to daily on BOTH branches, each on
@@ -262,6 +270,24 @@ class HistoryOrchestratorSpec extends SparkSpec {
       val l = java.time.Instant.ofEpochSecond(ts).atZone(ny)
       assert(l.getHour == 0 && l.getMinute == 0, s"AAPL bucket $ts not NY midnight: $l")
     }
+  }
+
+  test("AutoDaily histories and a multi-meta final resample leave the session's cache empty") {
+    spark.catalog.clearCache()
+    val hourly = new MockConnector("h",
+      MockConnector.Script(supportedIntervals = Seq(Interval.I1h)))
+    val subdailyReq = HistoryRequest(Interval.I1h, Some(0L), Some(2L * 86400), None)
+    (1 to 3).foreach { _ =>
+      val Right(auto) = history(spark, inst, subdailyReq, Seq(hourly), config =
+        Config(finalResample = HistoryRouter.FinalResample.AutoDaily))
+      assert(auto.candles.count() == 2)
+    }
+    val Right(res) = twoMetaAutoDailyDownload()
+    assert(res.candles.count() > 0)
+    // a persisted frame stays in CacheManager until it is unpersisted, and
+    // nothing unpersists a plan a request returned
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a history request must not leave a cache entry behind")
   }
 
   test("per-symbol AutoDaily in bulk: only the subdaily symbol is resampled; the daily symbol passes through byte-identical") {
