@@ -144,7 +144,12 @@ case class BpeModel(merges: Seq[(String, String)], bytes: Boolean) {
   def idArray(text: UTF8String): ArrayData = UnsafeArrayData.fromPrimitiveArray(ids(text))
   def spacedIdArray(text: UTF8String): ArrayData = UnsafeArrayData.fromPrimitiveArray(ids(text, spaced = true))
   def count(text: UTF8String): Long = ids(text).length.toLong
-  def maxBaseId(text: UTF8String): Long = ids(text).filter(_ < VocabBase).maxOption.getOrElse(-1).toLong
+  /** Largest atom id of an id stream, -1 when it has none; the marker id
+    * 32 is skipped (it is the space, which no word contains).
+    */
+  def maxBaseId(idArr: ArrayData): Long =
+    (0 until idArr.numElements()).filterNot(idArr.isNullAt).map(idArr.getInt)
+      .filter(id => id < VocabBase && id != ' ').maxOption.getOrElse(-1).toLong
   def syms(text: UTF8String): ArrayData = new GenericArrayData(ids(text).map { id =>
     UTF8String.fromString(
       if (id >= VocabBase) compounds(id - VocabBase) else Character.toString(if (bytes) carrier(id) else id)): Any
@@ -178,8 +183,10 @@ object BpeOp {
   /** Ids with the marker id 32 between words: decodes to the words joined by ' '. */
   case object SpacedIds extends BpeOp("spacedIdArray", ArrayType(IntegerType, containsNull = false))
   case object Count extends BpeOp("count", LongType)
-  /** Largest atom id, -1 when every symbol is a compound. */
-  case object MaxBaseId extends BpeOp("maxBaseId", LongType)
+  /** Largest atom id of a (spaced) id array, -1 when every symbol is a
+    * compound.
+    */
+  case object MaxBaseId extends BpeOp("maxBaseId", LongType, ArrayType(IntegerType))
   /** An id array back to text. */
   case object Decode extends BpeOp("decode", StringType, ArrayType(LongType))
 }
@@ -200,7 +207,7 @@ case class BpeCodec(child: Expression, model: BpeModel, op: BpeOp)
     case BpeOp.Ids => model.idArray(in.asInstanceOf[UTF8String])
     case BpeOp.SpacedIds => model.spacedIdArray(in.asInstanceOf[UTF8String])
     case BpeOp.Count => model.count(in.asInstanceOf[UTF8String])
-    case BpeOp.MaxBaseId => model.maxBaseId(in.asInstanceOf[UTF8String])
+    case BpeOp.MaxBaseId => model.maxBaseId(in.asInstanceOf[ArrayData])
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -213,7 +220,7 @@ case class BpeCodec(child: Expression, model: BpeModel, op: BpeOp)
 }
 
 object BpeCodec {
-  /** `op` over a text column, or over any integral id array for Decode. */
+  /** `op` over a text column, or over an id array for Decode and MaxBaseId. */
   def of(in: Column, model: BpeModel, op: BpeOp): Column =
     GraftSqlBridge.column(BpeCodec(GraftSqlBridge.expression(in.cast(op.input)), model, op))
 }

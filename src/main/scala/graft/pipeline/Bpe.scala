@@ -327,9 +327,9 @@ object Bpe {
   /** The round-trip projection [[decodeRoundTrip]] and [[byteRoundTrip]]
     * share: (idCol, n_bpe_tokens, decoded_md5, roundtrip_ok, extra…),
     * over the spaced id stream (marker id 32 between words, see
-    * [[decode]]). The spaced ids are projected first and read twice, so
-    * the plan keeps the encode in its own projection, evaluated once per
-    * document.
+    * [[decode]]). The spaced ids are projected first as `__ids` (the
+    * `extra` columns may read them too), so the plan keeps the encode in
+    * its own projection, evaluated once per document.
     */
   private def roundTrip(
       docs: DataFrame,
@@ -521,7 +521,8 @@ object Bpe {
     * n_bpe_tokens counts the spaced stream (marker id 32 = the space
     * byte, between words), and max_base_id ≤ 255 is the BOUNDED-alphabet
     * witness the byte model exists for (the code-point model emits ids
-    * up to 0x10FFFF on the same input).
+    * up to 0x10FFFF on the same input). max_base_id is read off the same
+    * spaced ids, so each document is encoded once.
     */
   def byteRoundTrip(
       docs: DataFrame,
@@ -529,7 +530,7 @@ object Bpe {
       textCol: String = "text",
       ms: Seq[(String, String)] = merges): DataFrame =
     roundTrip(docs, idCol, textCol, ms, bytes = true,
-      coalesce(BpeCodec.of(col(textCol), BpeModel(ms, bytes = true), BpeOp.MaxBaseId), lit(-1L))
+      coalesce(BpeCodec.of(col("__ids"), BpeModel(ms, bytes = true), BpeOp.MaxBaseId), lit(-1L))
         .as("max_base_id"))
 
   /** DuckDB oracle twin of [[byteRoundTrip]] over a CTE `aug(doc_id,

@@ -878,7 +878,7 @@ object PipelineQueries {
     * `% * +` arithmetic, so the SAME string parses in Spark AND DuckDB —
     * one constant, zero drift. Range ±2003, well inside 16-bit PCM.
     */
-  private def audioSampleD(d: String, t: String, v: String): String =
+  private[graft] def audioSampleD(d: String, t: String, v: String): String =
     s"((($d) % 997 + 1) * ($t) * ($t) + (13 + ($d) % 89) * ($t) + ($d)) % 4001 - 2000 + " +
       s"(CASE WHEN ($v) AND ($t) % 97 = 0 THEN 3 ELSE 0 END)"
 
@@ -1044,7 +1044,7 @@ object PipelineQueries {
     * is within Hamming distance 1 of its original BY CONSTRUCTION.
     * `eng` picks the integer-div spelling.
     */
-  private def rasterPx(eng: String)(d: String, x: String, y: String, isVar: String): String = {
+  private[graft] def rasterPx(eng: String)(d: String, x: String, y: String, isVar: String): String = {
     val div = if (eng == "spark") "DIV" else "//"
     val idx = s"(($y) * $imgW + ($x))"
     val idxWide = // widened to 64-bit BEFORE any arithmetic on both engines

@@ -5,9 +5,7 @@ import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, Future}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.connector.Connector
 import graft.core.Errors
@@ -22,9 +20,11 @@ import graft.routing.Policy
   * diagnosis + attribution (M1/H5/H6) → final resample (H7) → error
   * collapse (history.rs:155-176).
   *
-  * Connector results (record-level) are lifted into DataFrames so the merge
-  * is the same Catalyst plan the bulk/scan path uses — single-instrument
-  * history is just the multi-symbol pipeline with one symbol.
+  * Connector results stay records until the merge: each request's
+  * surviving records become ONE driver-built relation
+  * ([[HistoryRouter.requestFrame]]) whose merge runs as one small
+  * single-partition job — single-instrument history is just the
+  * multi-symbol pipeline with one symbol.
   */
 object HistoryOrchestrator {
 
@@ -65,37 +65,6 @@ object HistoryOrchestrator {
         if (left <= Duration.Zero) Duration.Zero
         else if (left < stageBound) left else stageBound
     }
-
-  val candleSchema: StructType = StructType(Seq(
-    StructField("symbol", StringType), StructField("ts", LongType),
-    StructField("open", DecimalType(38, 9)), StructField("high", DecimalType(38, 9)),
-    StructField("low", DecimalType(38, 9)), StructField("close", DecimalType(38, 9)),
-    StructField("close_unadj", DecimalType(38, 9)), StructField("volume", LongType),
-    StructField("currency", StringType)))
-
-  def candlesToDf(spark: SparkSession, candles: Seq[Candle]): DataFrame = {
-    val rows = candles.map { c =>
-      Row(c.symbol, c.ts, c.open.bigDecimal, c.high.bigDecimal, c.low.bigDecimal,
-        c.close.bigDecimal, c.closeUnadj.map(_.bigDecimal).orNull,
-        c.volume.map(Long.box).orNull, c.currency)
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), candleSchema)
-  }
-
-  val actionSchema: StructType = StructType(Seq(
-    StructField("symbol", StringType), StructField("ts", LongType),
-    StructField("kind", StringType), StructField("amount", DecimalType(38, 9)),
-    StructField("currency", StringType), StructField("numerator", LongType),
-    StructField("denominator", LongType)))
-
-  def actionsToDf(spark: SparkSession, actions: Seq[Action]): DataFrame = {
-    val rows = actions.map { a =>
-      Row(a.symbol, a.ts, a.kind, a.amount.map(_.bigDecimal).orNull,
-        a.currency.orNull, a.numerator.map(Long.box).orNull,
-        a.denominator.map(Long.box).orNull)
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), actionSchema)
-  }
 
   /** Range XOR period validation (download.rs:10-27,130-213). */
   def validateRequest(req: HistoryRequest): Either[BorsaError, HistoryRequest] = {
@@ -145,11 +114,11 @@ object HistoryOrchestrator {
         * presenting in the reference's canonical (ts, kind, payload) order.
         */
       actions: Option[DataFrame] = None,
-      /** The surviving per-provider control-plane inputs — kept so the lazy
-        * currency guard's failure can be mapped to the reference's typed
-        * error at ACTION time (see [[collect]]).
+      /** The request relation the merge read — kept so the lazy currency
+        * guard's failure can be mapped to the reference's typed error at
+        * ACTION time (see [[collect]]).
         */
-      providers: Seq[HistoryRouter.ProviderHistory] = Seq.empty) {
+      relation: DataFrame) {
 
     /** Run a Spark action over this result with H5 failure-path diagnosis:
       * a currency-guard abort is translated to
@@ -157,17 +126,16 @@ object HistoryOrchestrator {
       * (history.rs:205-274), everything else passes through.
       */
     def collect[T](action: => T): Either[BorsaError, T] =
-      HistoryRouter.diagnosed(providers)(action)
+      HistoryRouter.diagnosed(relation)(action)
   }
 
   /** Per-instrument CONTROL plane (driver-side, record-level): plan → H1/H2
-    * fan-out → H3 collect successes → H4 order/filter. No Spark action runs
-    * here; the returned ProviderHistory frames are lazy plans. Shared by
+    * fan-out → H3 collect successes → H4 order/filter. No Spark plan is
+    * built here; the returned ProviderHistory values hold records. Shared by
     * [[history]] (one instrument) and [[download]] (one data plane over all
     * instruments).
     */
   private def fetchOrdered(
-      spark: SparkSession,
       inst: Instrument,
       req: HistoryRequest,
       connectors: Seq[Connector],
@@ -219,12 +187,7 @@ object HistoryOrchestrator {
     val successes = fetched.collect {
       case (i, c, plan, Right(resp)) if resp.candles.nonEmpty =>
         HistoryRouter.ProviderHistory(c.name, i, resp.adjusted, resp.meta, plan,
-          // request flags (keepna/autoAdjust/prepost) interpret each
-          // provider frame BEFORE its resample plan — raw-vs-adjusted
-          // selection must happen on the provider cadence
-          graft.timeseries.Flags.applyRequestFlags(candlesToDf(spark, resp.candles), req),
-          actions = if (req.actions && resp.actions.nonEmpty)
-            Some(actionsToDf(spark, resp.actions)) else None)
+          resp.candles, if (req.actions) resp.actions else Seq.empty)
     }
     val errors = fetched.collect {
       case (_, c, _, Left(e)) if !e.isInstanceOf[BorsaError.NotFound] =>
@@ -250,6 +213,13 @@ object HistoryOrchestrator {
   private def adjustedOf(ordered: Seq[HistoryRouter.ProviderHistory]): Boolean =
     HistoryRouter.mergedAdjusted(ordered)
 
+  /** Request flags (keepna/autoAdjust/prepost) interpret the provider
+    * candles BEFORE any resample plan — raw-vs-adjusted selection must
+    * happen on the provider cadence.
+    */
+  private def flagsOf(req: HistoryRequest): DataFrame => DataFrame =
+    graft.timeseries.Flags.applyRequestFlags(_, req)
+
   private def metaOf(ordered: Seq[HistoryRouter.ProviderHistory]): Option[HistoryMeta] =
     HistoryRouter.mergedMeta(ordered)
 
@@ -266,16 +236,16 @@ object HistoryOrchestrator {
       case Right(_) => ()
     }
     val deadline = config.requestTimeout.map(Deadline.now + _)
-    fetchOrdered(spark, inst, req, connectors, policy, config, deadline).flatMap {
+    fetchOrdered(inst, req, connectors, policy, config, deadline).flatMap {
       case (ordered, errors) =>
         // H4 → M1/H5/H6 → H7
-        HistoryRouter.merge(ordered).map { m =>
+        HistoryRouter.merge(spark, ordered, flagsOf(req)).map { m =>
           HistoryResult(
             HistoryRouter.applyFinalResample(m.candles, config.finalResample, m.meta),
             m.attribution, m.adjusted, m.meta,
             warnings = errors.filter(_.isActionable),
             actions = m.actions,
-            providers = ordered)
+            relation = m.relation)
         }
     }
   }
@@ -283,11 +253,12 @@ object HistoryOrchestrator {
   /** H8 bulk download across instruments as ONE data plane: the control
     * plane (plan/fetch/order) stays per-instrument — H4 adjusted filtering
     * and provider ranking are instrument-local decisions — but every
-    * surviving provider frame is symbol-tagged already, so ALL of them feed
-    * a shared grouped merge ([[HistoryRouter.mergeGrouped]]): one
-    * first-wins window for the multi-provider instruments, a guard-free
-    * short-circuit branch preserving close_unadj for single-provider
-    * instruments, one attribution pass over the union. Priorities are
+    * surviving provider's records carry their symbol already, so ALL of
+    * them form one request relation feeding a shared grouped merge
+    * ([[HistoryRouter.mergeGrouped]]): one first-wins window for the
+    * multi-provider instruments, a guard-free short-circuit branch
+    * preserving close_unadj for single-provider instruments, one
+    * attribution pass over both. Priorities are
     * per-instrument ranks; the merge key (symbol, ts) means ranks only
     * ever compete within their own instrument. Per-instrument failures —
     * fetch errors AND currency violations — become warnings, partial
@@ -296,7 +267,8 @@ object HistoryOrchestrator {
     *
     * The final resample groups instruments by their merged meta (each
     * instrument's bucket alignment follows its own providers' timezone) —
-    * one resample branch per distinct meta, one branch in the common case.
+    * one resample branch per distinct meta, selected by the relation's
+    * meta-group column, one branch in the common case.
     */
   def download(
       spark: SparkSession,
@@ -323,7 +295,7 @@ object HistoryOrchestrator {
     val origin = graft.connector.Middleware.currentOrigin.value // MW6 scope capture
     val futures = instruments.map { i =>
       i -> Future(graft.connector.Middleware.currentOrigin.withValue(origin)(
-        fetchOrdered(spark, i, req, connectors, policy, config, deadline)))(ec)
+        fetchOrdered(i, req, connectors, policy, config, deadline)))(ec)
     }
     // without a deadline each fetch is already bounded by per-call provider
     // timeouts (Deep await ≤ providerTimeout+2s; Fallback ≤ N providers ×
@@ -354,29 +326,29 @@ object HistoryOrchestrator {
     // ONE grouped merge plan across all instruments (per-instrument
     // semantics: single-source short-circuit, per-symbol currency
     // isolation)
-    val allProviders = oks.flatMap { case (_, ordered, _) => ordered }
-    HistoryRouter.mergeGrouped(oks.map(_._2)).map { case (m, currencyWarnings) =>
+    val groups = oks.map(_._2)
+    val metaIds = HistoryRouter.metaGroups(groups).zipWithIndex.toMap
+    HistoryRouter.mergeGrouped(spark, groups, flagsOf(req)).map { case (m, currencyWarnings) =>
       // a currency-violating instrument contributes NOTHING — not rows (the
       // merge dropped them), and not its adjusted flag, meta, or a
       // final-resample branch: same treatment as a fetch-failed instrument
       val violSyms: Set[String] =
         currencyWarnings.collect { case BorsaError.Connector(sym, _) => sym }.toSet
       val contributing = oks.filterNot { case (i, _, _) => violSyms(i.symbol.value) }
-      val metaGroups: Seq[(Option[HistoryMeta], Seq[String])] =
-        contributing.groupBy { case (_, ordered, _) => metaOf(ordered) }
-          .view.mapValues(_.map(_._1.symbol.value)).toSeq
-      val finalCandles = (config.finalResample, metaGroups) match {
-        case (HistoryRouter.FinalResample.None, _) => m.candles
-        case (_, Seq()) => m.candles // every instrument dropped: empty frame
-        case (mode, Seq((onlyMeta, _))) =>
-          HistoryRouter.applyFinalResample(m.candles, mode, onlyMeta)
-        case (mode, groups) =>
-          // one resample branch per distinct meta, each over the merged
-          // plan (not a persisted copy: the returned plan would keep the
-          // cache entry alive, and nothing could unpersist it)
-          groups.map { case (meta, syms) =>
+      val liveMetas = contributing.map { case (_, ordered, _) => metaOf(ordered) }.distinct
+      val metaGroup = col(HistoryRouter.MetaGroupCol)
+      val finalCandles = (config.finalResample, liveMetas) match {
+        case (HistoryRouter.FinalResample.None, _) | (_, Seq()) =>
+          m.candles.drop(metaGroup) // Seq(): every instrument dropped, empty frame
+        case (mode, Seq(onlyMeta)) =>
+          HistoryRouter.applyFinalResample(m.candles.drop(metaGroup), mode, onlyMeta)
+        case (mode, metas) =>
+          // one resample branch per distinct meta, each selecting its
+          // instruments by their meta-group id, a data column — never a
+          // symbol IN-list, which grows with the universe
+          metas.map { meta =>
             HistoryRouter.applyFinalResample(
-              m.candles.filter(col("symbol").isin(syms: _*)), mode, meta)
+              m.candles.where(metaGroup === metaIds(meta)).drop(metaGroup), mode, meta)
           }.reduce(_ unionByName _)
       }
       HistoryResult(
@@ -386,7 +358,7 @@ object HistoryOrchestrator {
         contributing.flatMap { case (_, ordered, _) => metaOf(ordered) }.headOption,
         oks.flatMap(_._3.filter(_.isActionable)) ++ failWarnings ++ currencyWarnings,
         actions = m.actions,
-        providers = allProviders)
+        relation = m.relation)
     }
   }
 }

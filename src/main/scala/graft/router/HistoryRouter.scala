@@ -1,20 +1,24 @@
 package graft.router
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core.Errors.BorsaError
 import graft.core.Model._
-import graft.timeseries.{Attribution, Currency, Merge, Resample}
+import graft.timeseries.{Attribution, Merge, Resample}
 
 /** History orchestration (SURVEY §3.1, operators R6 + H1–H8).
   *
   * Control plane (interval negotiation, strategy dispatch, adjusted
   * preference) is pure Scala; the data plane (per-provider resample →
-  * priority merge → attribution → final resample) is ONE Catalyst plan:
-  * union → row_number dedup → aggregation. Candles per provider arrive as
-  * DataFrames with columns (symbol, ts, open, high, low, close,
-  * close_unadj, volume, currency) — ts in epoch seconds.
+  * priority merge → attribution → final resample) is ONE Catalyst plan
+  * over ONE relation per request: every provider's fetched candles
+  * (symbol, ts, open, high, low, close, close_unadj, volume, currency —
+  * ts in epoch seconds) in a single partition, with provider and priority
+  * as data columns → row_number dedup → aggregation.
   */
 object HistoryRouter {
 
@@ -67,16 +71,6 @@ object HistoryRouter {
   private def coarsestIntraday(supported: Seq[Interval]): Option[Interval] =
     supported.flatMap(s => s.minutes.map(m => (s, m))).sortBy(-_._2).headOption.map(_._1)
 
-  /** One provider's (already fetched) contribution. */
-  final case class ProviderHistory(
-      provider: String,
-      priority: Int,
-      adjusted: Boolean,
-      meta: Option[HistoryMeta],
-      plan: Option[ResamplePlan],
-      candles: DataFrame,
-      actions: Option[DataFrame] = None)
-
   /** Meta-aware bucket column — the reference's `choose_bucket_{day,week,
     * minutes}` (resample.rs:279-320): IANA timezone preferred (DST-exact via
     * the native [[graft.functions.TzBucket]] expression), fixed UTC offset
@@ -103,23 +97,121 @@ object HistoryRouter {
     }
   }
 
-  /** H3 — apply each provider's resample plan with its own meta
-    * (history.rs:521-576). NOTE: candle-shaped resample (open of earliest,
-    * close of latest) — not the tick kernel.
+  /** One provider's fetched contribution: its records and control-plane
+    * fields. The records reach Spark only through [[requestFrame]].
     */
-  def applyPlan(ph: ProviderHistory): DataFrame = {
-    ph.plan match {
-      case None => ph.candles
-      case Some(plan) =>
-        val bucket = bucketFor(plan, ph.meta, col("ts"))
-        // currency rides along as a group key: post-C2 it is functionally
-        // dependent on symbol, so this adds no groups and no extra shuffle
-        val keys =
-          if (ph.candles.columns.contains("currency")) Seq("symbol", "currency")
-          else Seq("symbol")
-        Resample.resampleCandles(ph.candles, bucket, keys)
+  final case class ProviderHistory(
+      provider: String,
+      priority: Int,
+      adjusted: Boolean,
+      meta: Option[HistoryMeta],
+      plan: Option[ResamplePlan],
+      candles: Seq[Candle],
+      actions: Seq[Action] = Seq.empty)
+
+  val candleSchema: StructType = StructType(Seq(
+    StructField("symbol", StringType), StructField("ts", LongType),
+    StructField("open", DecimalType(38, 9)), StructField("high", DecimalType(38, 9)),
+    StructField("low", DecimalType(38, 9)), StructField("close", DecimalType(38, 9)),
+    StructField("close_unadj", DecimalType(38, 9)), StructField("volume", LongType),
+    StructField("currency", StringType)))
+
+  def candleRow(c: Candle): Row =
+    Row(c.symbol, c.ts, c.open.bigDecimal, c.high.bigDecimal, c.low.bigDecimal,
+      c.close.bigDecimal, c.closeUnadj.map(_.bigDecimal).orNull,
+      c.volume.map(Long.box).orNull, c.currency)
+
+  val actionSchema: StructType = StructType(Seq(
+    StructField("symbol", StringType), StructField("ts", LongType),
+    StructField("kind", StringType), StructField("amount", DecimalType(38, 9)),
+    StructField("currency", StringType), StructField("numerator", LongType),
+    StructField("denominator", LongType)))
+
+  private def actionRow(a: Action): Row =
+    Row(a.symbol, a.ts, a.kind, a.amount.map(_.bigDecimal).orNull,
+      a.currency.orNull, a.numerator.map(Long.box).orNull,
+      a.denominator.map(Long.box).orNull)
+
+  /** Request-relation tag columns: each provider's rank and name, whether
+    * its instrument has several providers, the index of the instrument's
+    * merged meta in [[metaGroups]], and (until resampled) the index of the
+    * provider's (plan, meta) resample group.
+    */
+  private val Prio = "__prio"
+  private val MultiCol = "__multi"
+  private[router] val MetaGroupCol = "__meta_grp"
+  private val PlanGroupCol = "__plan_grp"
+
+  private val requestSchema: StructType = StructType(candleSchema.fields ++ Seq(
+    StructField(Prio, IntegerType), StructField("provider", StringType),
+    StructField(MultiCol, BooleanType), StructField(MetaGroupCol, IntegerType),
+    StructField(PlanGroupCol, IntegerType)))
+
+  private val candleValueCols =
+    Set("ts", "open", "high", "low", "close", "close_unadj", "volume")
+
+  /** The distinct merged metas of a request's instruments, in instrument
+    * order; an instrument's `__meta_grp` is its meta's index here.
+    */
+  def metaGroups(groups: Seq[Seq[ProviderHistory]]): Seq[Option[HistoryMeta]] =
+    groups.map(mergedMeta).distinct
+
+  /** H3 — one request's candles as ONE driver-built relation, one entry of
+    * `groups` per instrument (its ordered surviving providers). Provider and
+    * priority are data columns, so the plan's shape does not depend on how
+    * many providers or instruments answered, and `coalesce(1)` leaves every
+    * window and aggregate above it in one task with no Exchange. The
+    * request flags (`flags`, [[graft.timeseries.Flags.applyRequestFlags]])
+    * apply once, on the provider cadence before any resample. Each
+    * distinct (plan, meta) group is resampled once (history.rs:521-576),
+    * its tag columns riding along as group keys; there is one group in the
+    * common case.
+    */
+  def requestFrame(
+      spark: SparkSession,
+      groups: Seq[Seq[ProviderHistory]],
+      flags: DataFrame => DataFrame = identity): DataFrame = {
+    val metaIds = metaGroups(groups).zipWithIndex.toMap
+    val planGroups = groups.flatten.map(ph => (ph.plan, ph.meta)).distinct
+    val planIds = planGroups.zipWithIndex.toMap
+    val rows = new java.util.ArrayList[Row]()
+    for (g <- groups; ph <- g) {
+      val tags = Seq(ph.priority, ph.provider, g.sizeIs > 1, metaIds(mergedMeta(g)),
+        planIds((ph.plan, ph.meta)))
+      ph.candles.foreach(c => rows.add(Row.fromSeq(candleRow(c).toSeq ++ tags)))
+    }
+    val rel = flags(spark.createDataFrame(rows, requestSchema)).coalesce(1)
+    // a union of single-partition branches is itself one partition (Spark
+    // unions them partition-wise), so several groups add no Exchange
+    planGroups.zipWithIndex.map { case ((plan, meta), i) =>
+      val part = if (planGroups.sizeIs == 1) rel else rel.where(col(PlanGroupCol) === i)
+      applyPlan(part.drop(PlanGroupCol), plan, meta)
+    }.reduce(_ unionByName _)
+  }
+
+  /** One provider group's resample plan with its own meta (history.rs:
+    * 521-576). NOTE: candle-shaped resample (open of earliest, close of
+    * latest) — not the tick kernel. Every column but the candle values is
+    * a group key: symbol, currency (post-C2 functionally dependent on
+    * symbol) and the tags are constant per provider and symbol, so they
+    * add no groups.
+    */
+  private def applyPlan(df: DataFrame, plan: Option[ResamplePlan], meta: Option[HistoryMeta]): DataFrame =
+    plan match {
+      case None => df
+      case Some(p) =>
+        Resample.resampleCandles(df, bucketFor(p, meta, col("ts")),
+          df.columns.filterNot(candleValueCols).toSeq)
           .withColumnRenamed("bucket_ts", "ts")
     }
+
+  /** The request's corporate actions as one relation, in priority order;
+    * None when no provider reported any.
+    */
+  private def actionsFrame(spark: SparkSession, results: Seq[ProviderHistory]): Option[DataFrame] = {
+    val rows = results.sortBy(_.priority).flatMap(_.actions).map(actionRow)
+    if (rows.isEmpty) None
+    else Some(spark.createDataFrame(rows.asJava, actionSchema).coalesce(1))
   }
 
   /** H4 `order_results` / `filter_adjustedness` (history.rs:578-586,188-203):
@@ -149,35 +241,42 @@ object HistoryRouter {
   def mergedMeta(results: Seq[ProviderHistory]): Option[HistoryMeta] =
     results.sortBy(_.priority).flatMap(_.meta).headOption
 
-  /** Merged result: candles + deduped actions + flags + attribution. */
+  /** Merged result: candles + deduped actions + flags + attribution, and
+    * the request relation they were built from (the currency diagnosis
+    * reads it again, see [[diagnosed]]).
+    */
   final case class MergedHistory(
       candles: DataFrame,
       attribution: DataFrame,
       adjusted: Boolean,
       meta: Option[HistoryMeta],
-      actions: Option[DataFrame] = None)
+      actions: Option[DataFrame],
+      relation: DataFrame)
 
   /** Marker text of the in-plan currency guard; [[diagnosed]] keys on it. */
   private val CurrencyGuardMsg = "currency invariant violated"
 
-  /** H5+M1+H6 — the one-logical-plan merge: union with priority →
+  /** H5+M1+H6 — the one-logical-plan merge over the request relation:
     * currency guard → first-wins on (symbol, ts) → close_unadj cleared;
     * attribution spans from the winning rows.
     *
     * The currency invariant (history.rs:205-274: no symbol may mix
     * currencies across contributing providers, checked BEFORE the merge
     * hides rows) is enforced LAZILY, in-plan: a window min/max over
-    * `symbol` feeds a `raise_error` guard consumed by a filter. The guard
-    * window needs only hash-distribution by `symbol`, which the first-wins
-    * window (partitioned by (symbol, ts)) can reuse — so the clean path
-    * costs ZERO extra Spark jobs and zero extra exchanges, where the
-    * previous eager form ran 2 full driver-blocking scans per merge. On
-    * violation the consuming action throws; callers run actions through
-    * [[diagnosed]] to map the failure to the reference's typed error with
-    * the deviating provider named.
+    * `symbol` feeds a `raise_error` guard consumed by a filter. Both
+    * windows and the attribution sort run in the relation's single
+    * partition, so building the merge runs no job and collecting it runs
+    * one. On violation the consuming action throws; callers run actions
+    * through [[diagnosed]] to map the failure to the reference's typed
+    * error with the deviating provider named.
     */
-  def merge(results: Seq[ProviderHistory]): Either[BorsaError, MergedHistory] = {
+  def merge(
+      spark: SparkSession,
+      results: Seq[ProviderHistory],
+      flags: DataFrame => DataFrame = identity): Either[BorsaError, MergedHistory] = {
     require(results.nonEmpty, "merge of zero histories")
+    val relation = requestFrame(spark, Seq(results), flags).drop(MultiCol, MetaGroupCol)
+    val actions = actionsFrame(spark, results)
     // Single source passes through UNMERGED (history.rs:207-210
     // merge_history_or_tag_connector_error short-circuits len==1): no
     // first-wins, no currency guard, and crucially close_unadj raw-close
@@ -185,47 +284,34 @@ object HistoryRouter {
     // (borsa/tests/router/history/router_history_raw_close.rs).
     if (results.sizeIs == 1) {
       val r = results.head
-      val withProv = applyPlan(r).withColumn("provider", lit(r.provider))
-      val attribution = Attribution.spans(withProv, Seq("symbol"), "ts")
+      val attribution = Attribution.spans(relation, Seq("symbol"), "ts")
       return Right(MergedHistory(
-        withProv.drop("provider"), attribution, r.adjusted, r.meta, r.actions))
+        relation.drop(Prio, "provider"), attribution, r.adjusted, r.meta, actions, relation))
     }
-    val unioned = taggedUnion(results)
 
-    val guarded =
-      if (!unioned.columns.contains("currency")) unioned
-      else {
-        val wSym = org.apache.spark.sql.expressions.Window.partitionBy("symbol")
-        unioned
-          .withColumn("__cur_guard",
-            when(min(col("currency")).over(wSym) =!= max(col("currency")).over(wSym),
-              raise_error(concat(lit(s"$CurrencyGuardMsg for symbol "), col("symbol")))))
-          .where(col("__cur_guard").isNull)
-          .drop("__cur_guard")
-      }
+    val wSym = org.apache.spark.sql.expressions.Window.partitionBy("symbol")
+    val guarded = relation
+      .withColumn("__cur_guard",
+        when(min(col("currency")).over(wSym) =!= max(col("currency")).over(wSym),
+          raise_error(concat(lit(s"$CurrencyGuardMsg for symbol "), col("symbol")))))
+      .where(col("__cur_guard").isNull)
+      .drop("__cur_guard")
 
-    val merged = Merge.firstWins(guarded, Seq("symbol", "ts"), "__prio")
+    val merged = Merge.firstWins(guarded, Seq("symbol", "ts"), Prio)
       .withColumn("close_unadj", lit(null).cast("decimal(38,9)")) // merge.rs:93-95
     val attribution = Attribution.spans(merged, Seq("symbol"), "ts")
-    val candles = merged.drop("__prio")
-
-    // adjusted flag + meta algebra (merge.rs:32-37,76-102)
-    val adjusted = mergedAdjusted(results)
-    val meta = mergedMeta(results)
 
     // M1 action handling (merge.rs:104-109): concatenate all contributors'
-    // actions, then M3 canonical dedup
-    val actionFrames = results.sortBy(_.priority).flatMap(_.actions)
-    val mergedActions =
-      if (actionFrames.isEmpty) None
-      else Some(graft.timeseries.Merge.dedupActionsUnsorted(actionFrames.reduce(_ unionByName _)))
-
-    Right(MergedHistory(candles.drop("provider"), attribution, adjusted, meta, mergedActions))
+    // actions, then M3 canonical dedup; adjusted flag + meta algebra
+    // (merge.rs:32-37,76-102)
+    Right(MergedHistory(merged.drop(Prio, "provider"), attribution,
+      mergedAdjusted(results), mergedMeta(results),
+      actions.map(Merge.dedupActionsUnsorted(_)), relation))
   }
 
   /** H8 bulk data plane with PER-INSTRUMENT merge semantics (download.rs:
-    * 130-213 isolation) over one set of union branches — `groups` carries
-    * one entry per instrument (its ordered surviving providers):
+    * 130-213 isolation) over one request relation — `groups` carries one
+    * entry per instrument (its ordered surviving providers):
     *
     *  - instruments with a SINGLE contributing provider take the
     *    single-source short-circuit (history.rs:207-210): no first-wins,
@@ -238,85 +324,73 @@ object HistoryRouter {
     *    drops that symbol, instead of aborting the whole batch the way
     *    `merge`'s strict in-plan guard must for single-instrument history.
     *
-    * The violation check is one EAGER aggregation (≤ providers × symbols
-    * rows) over the multi-provider branch only — the per-instrument
-    * isolation contract requires knowing the violating symbols while the
-    * result (warnings) is being built. The reference pays full
-    * per-instrument materialization here; we pay one tiny stats job, and
-    * the data plane itself stays one lazy plan.
+    * The per-instrument isolation contract needs the violating symbols
+    * while the warnings are built, so the violation check is one eager
+    * aggregate (≤ providers × symbols rows) over the multi-provider rows of
+    * the relation: one job with one task. The reference materializes every
+    * instrument here; the data plane itself stays one lazy single-partition
+    * plan.
     *
-    * Returns the merged history plus per-symbol currency warnings.
+    * Returns the merged history plus per-symbol currency warnings. Its
+    * candles keep `__meta_grp`, the instrument's index in
+    * [[metaGroups]]`(groups)`, for the caller's per-meta final resample.
     */
-  def mergeGrouped(groups: Seq[Seq[ProviderHistory]]): Either[BorsaError, (MergedHistory, Seq[BorsaError])] = {
+  def mergeGrouped(
+      spark: SparkSession,
+      groups: Seq[Seq[ProviderHistory]],
+      flags: DataFrame => DataFrame = identity): Either[BorsaError, (MergedHistory, Seq[BorsaError])] = {
     require(groups.nonEmpty && groups.forall(_.nonEmpty), "mergeGrouped of zero histories")
-    val singles = groups.collect { case Seq(one) => one }
-    val multiProviders = groups.filter(_.sizeIs > 1).flatten
-
-    val singleFrames = singles.map(r => applyPlan(r).withColumn("provider", lit(r.provider)))
+    val relation = requestFrame(spark, groups, flags)
+    val hasSingles = groups.exists(_.sizeIs == 1)
+    val hasMulti = groups.exists(_.sizeIs > 1)
 
     val (multiFrame, violations) =
-      if (multiProviders.isEmpty) (None, Seq.empty[(String, BorsaError)])
+      if (!hasMulti) (None, Seq.empty[(String, BorsaError)])
       else {
-        val unioned = taggedUnion(multiProviders)
-        val viol = currencyViolations(multiProviders)
+        val multi = if (hasSingles) relation.where(col(MultiCol)) else relation
+        val viol = currencyViolations(multi)
         val clean =
-          if (viol.isEmpty) unioned
-          else unioned.filter(!col("symbol").isin(viol.map(_._1): _*))
-        val merged = Merge.firstWins(clean, Seq("symbol", "ts"), "__prio")
+          if (viol.isEmpty) multi
+          else multi.filter(!col("symbol").isin(viol.map(_._1): _*))
+        val merged = Merge.firstWins(clean, Seq("symbol", "ts"), Prio)
           .withColumn("close_unadj", lit(null).cast("decimal(38,9)")) // merge.rs:93-95
-          .drop("__prio")
         (Some(merged), viol)
       }
+    val singleFrame =
+      if (!hasSingles) None
+      else Some(if (hasMulti) relation.where(!col(MultiCol)) else relation)
 
-    val combined = (singleFrames ++ multiFrame).reduce(_ unionByName _)
+    val combined = (singleFrame ++ multiFrame).reduce(_ unionByName _)
     val attribution = Attribution.spans(combined, Seq("symbol"), "ts")
-    val candles = combined.drop("provider")
+    val candles = combined.drop(Prio, "provider", MultiCol)
 
     val all = groups.flatten
     val violSyms = violations.map(_._1)
-    val actionFrames = all.sortBy(_.priority).flatMap(_.actions)
-    val mergedActions =
-      if (actionFrames.isEmpty) None
-      else {
-        val deduped = graft.timeseries.Merge.dedupActionsUnsorted(actionFrames.reduce(_ unionByName _))
-        // a violating instrument contributes nothing — not even actions
-        // (reference: the whole instrument errored into warnings)
-        Some(if (violSyms.isEmpty) deduped
-             else deduped.filter(!col("symbol").isin(violSyms: _*)))
-      }
+    val mergedActions = actionsFrame(spark, all).map { acts =>
+      val deduped = Merge.dedupActionsUnsorted(acts)
+      // a violating instrument contributes nothing — not even actions
+      // (reference: the whole instrument errored into warnings)
+      if (violSyms.isEmpty) deduped else deduped.filter(!col("symbol").isin(violSyms: _*))
+    }
 
     val warnings = violations.map { case (sym, e) => BorsaError.Connector(sym, e) }
     Right((MergedHistory(candles, attribution, mergedAdjusted(all), mergedMeta(all),
-      mergedActions), warnings))
+      mergedActions, relation), warnings))
   }
 
-  /** The shared provider-frame tagging: each contribution resampled by its
-    * own plan, carrying its priority and provider name. merge(),
-    * mergeGrouped() and currencyStats() all consume this ONE construction
-    * so the stats job and the data plane cannot diverge.
+  /** ONE combined aggregation over a request relation keyed by (provider,
+    * priority, symbol) — its output is tiny (≤ providers × symbols rows),
+    * so the blame logic runs driver-side. Shared by [[diagnoseCurrency]]
+    * (history failure path) and [[currencyViolations]] (download isolation
+    * path), each over the relation its merge read.
     */
-  private def taggedUnion(results: Seq[ProviderHistory]): DataFrame =
-    results.map { r =>
-      applyPlan(r)
-        .withColumn("__prio", lit(r.priority))
-        .withColumn("provider", lit(r.provider))
-    }.reduce(_ unionByName _)
-
-  /** ONE combined aggregation keyed by (provider, priority, symbol) — its
-    * output is tiny (≤ providers × symbols rows), so the blame logic runs
-    * driver-side. Shared by [[diagnoseCurrency]] (history failure path) and
-    * [[currencyViolations]] (download isolation path).
-    */
-  private def currencyStats(results: Seq[ProviderHistory]): Array[(String, Int, String, Seq[String])] = {
-    val unioned = taggedUnion(results)
-    if (!unioned.columns.contains("currency")) return Array.empty
-    unioned
-      .groupBy("provider", "__prio", "symbol")
+  private def currencyStats(relation: DataFrame): Array[(String, Int, String, Seq[String])] =
+    relation
+      .groupBy("provider", Prio, "symbol")
       .agg(collect_set(col("currency")).as("curs"))
       .collect()
-      .map(r => (r.getAs[String]("provider"), r.getAs[Int]("__prio"),
+      .map(r => (r.getAs[String]("provider"), r.getAs[Int](Prio),
         r.getAs[String]("symbol"), r.getSeq[String](3).sorted))
-  }
 
   /** Reference currency for a symbol's blame pass: the highest-priority
     * provider that REPORTED one. `collect_set` skips nulls, so a
@@ -333,8 +407,8 @@ object HistoryRouter {
     * otherwise the lowest-priority provider whose currency deviates from
     * the top-priority provider's reference currency.
     */
-  def diagnoseCurrency(results: Seq[ProviderHistory]): Option[BorsaError] = {
-    val stats = currencyStats(results)
+  def diagnoseCurrency(relation: DataFrame): Option[BorsaError] = {
+    val stats = currencyStats(relation)
 
     // (a) provider-internal violation
     stats.filter(_._4.length > 1).sortBy(s => (s._2, s._3)).headOption match {
@@ -359,8 +433,8 @@ object HistoryRouter {
     * mix first, else the lowest-priority provider deviating from the
     * top-priority provider's reference currency).
     */
-  def currencyViolations(results: Seq[ProviderHistory]): Seq[(String, BorsaError)] = {
-    val stats = currencyStats(results)
+  def currencyViolations(relation: DataFrame): Seq[(String, BorsaError)] = {
+    val stats = currencyStats(relation)
     stats.groupBy(_._3).toSeq.sortBy(_._1).flatMap { case (sym, rows) =>
       val internal = rows.filter(_._4.length > 1).sortBy(_._2).headOption
       val blamed = internal.orElse {
@@ -375,13 +449,14 @@ object HistoryRouter {
 
   /** Run a Spark action over a merged plan, mapping an in-plan currency
     * guard failure to the reference's typed error (with the deviating
-    * provider identified by the one-pass [[diagnoseCurrency]]).
+    * provider identified by the one-pass [[diagnoseCurrency]] over the
+    * merge's request relation).
     */
-  def diagnosed[T](results: Seq[ProviderHistory])(action: => T): Either[BorsaError, T] =
+  def diagnosed[T](relation: DataFrame)(action: => T): Either[BorsaError, T] =
     try Right(action) catch {
       case t: Throwable if causeChain(t).exists(e =>
           Option(e.getMessage).exists(_.contains(CurrencyGuardMsg))) =>
-        Left(diagnoseCurrency(results)
+        Left(diagnoseCurrency(relation)
           .getOrElse(BorsaError.Data(CurrencyGuardMsg)))
     }
 

@@ -119,9 +119,10 @@ class BpeSpec extends SparkSpec {
 
     // edge inputs, with the values the encode, the code-point round trip
     // and the byte round trip give them: NULL, empty and blank texts, runs
-    // of spaces, multi-byte + emoji, a repeated word
+    // of spaces, multi-byte + emoji, a repeated word, tab words around a
+    // space (its marker id 32 must not count as a base id) and a single word
     val edge = Seq[(Long, String)]((1L, null), (2L, ""), (3L, "   "), (4L, " the  and "),
-      (5L, "café 😀"), (6L, "the the the")).toDF("doc_id", "text")
+      (5L, "café 😀"), (6L, "the the the"), (7L, "\t \t"), (8L, "x")).toDF("doc_id", "text")
     def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -132,19 +133,25 @@ class BpeSpec extends SparkSpec {
       Seq(null, 0L, empty), Seq(0L, 0L, empty), Seq(0L, 0L, empty),
       Seq(2L, 2L, md5(s"$the,$and")),
       Seq(2L, 5L, md5("99,97,102,233,128512")),
-      Seq(3L, 3L, md5(s"$the,$the,$the"))))
+      Seq(3L, 3L, md5(s"$the,$the,$the")),
+      Seq(2L, 2L, md5("9,9")),
+      Seq(1L, 1L, md5("120"))))
     assert(rows(Bpe.decodeRoundTrip(edge)) == Seq(
       Seq(0L, empty, true), Seq(0L, empty, true), Seq(0L, empty, true),
       Seq(3L, md5("the and"), true),
       Seq(6L, md5("café 😀"), true),
-      Seq(5L, md5("the the the"), true)))
+      Seq(5L, md5("the the the"), true),
+      Seq(3L, md5("\t \t"), true),
+      Seq(1L, md5("x"), true)))
     // byte model: café is 5 bytes, the emoji 4 (lead byte 0xF0 = 240);
-    // a text of compounds only has no base id (-1)
+    // a text of compounds only has no base id (-1); the tab is byte 9
     assert(rows(Bpe.byteRoundTrip(edge)) == Seq(
       Seq(0L, empty, true, -1L), Seq(0L, empty, true, -1L), Seq(0L, empty, true, -1L),
       Seq(3L, md5("the and"), true, -1L),
       Seq(10L, md5("café 😀"), true, 240L),
-      Seq(5L, md5("the the the"), true, -1L)))
+      Seq(5L, md5("the the the"), true, -1L),
+      Seq(3L, md5("\t \t"), true, 9L),
+      Seq(1L, md5("x"), true, 120L)))
   }
 
   test("mixtureByBudget composes on BPE counts (budgets denominated in subword tokens)") {

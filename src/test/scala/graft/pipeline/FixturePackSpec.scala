@@ -2,23 +2,35 @@ package graft.pipeline
 
 import graft.SparkSpec
 
-/** Pins the r22 packed fixture assembly (4 PCM samples / 8 raster bytes
-  * per hex+lpad call) byte-for-byte against INDEPENDENT Scala byte
-  * references — the staged media payloads feed every audio/image/video
-  * query, so a packing slip would surface as oracle mismatches corpus-
-  * wide; this spec catches it at the operator.
+/** Pins the compiled fixture assemblers byte-for-byte against references
+  * built from the SQL closed forms themselves — [[PipelineQueries.audioSampleD]]
+  * and [[PipelineQueries.rasterPx]], the strings the DuckDB oracle also
+  * evaluates, here evaluated by Spark through `expr` on a literal frame.
+  * The staged media payloads feed every audio/image/video query, so a
+  * transcription slip between the closed form and the compiled loop would
+  * surface as oracle mismatches corpus-wide; this spec catches it at the
+  * operator.
   */
 class FixturePackSpec extends SparkSpec {
   import spark.implicits._
+  import org.apache.spark.sql.functions.{col, expr}
 
   // ---- WAV fixture reference (mono 16-bit PCM, 8 kHz) --------------------
 
-  private def sampRef(d: Long, t: Long, v: Boolean): Long =
-    ((d % 997 + 1) * t * t + (13 + d % 89) * t + d) % 4001 - 2000 +
-      (if (v && t % 97 == 0) 3L else 0L)
+  private def nSamples(d: Long): Int = (650 + (d % 5) * 65).toInt
 
-  private def wavRef(d: Long, v: Boolean): Array[Byte] = {
-    val n = (650 + (d % 5) * 65).toInt
+  /** Every sample of each (doc, variant) clip, in order, from the closed form. */
+  private def samplesOf(clips: Seq[(Long, Boolean)]): Map[(Long, Boolean), Seq[Long]] =
+    clips.flatMap { case (d, v) => (0 until nSamples(d)).map(t => (d, t.toLong, v)) }
+      .toDF("d", "t", "v")
+      .select(col("d"), col("v"), col("t"),
+        expr(PipelineQueries.audioSampleD("d", "t", "v")).cast("long"))
+      .collect()
+      .groupBy(r => (r.getLong(0), r.getBoolean(1)))
+      .map { case (k, rs) => k -> rs.sortBy(_.getLong(2)).map(_.getLong(3)).toSeq }
+
+  private def wavRef(d: Long, v: Boolean, samples: Seq[Long]): Array[Byte] = {
+    val n = nSamples(d)
     val bb = java.nio.ByteBuffer.allocate(44 + n * 2)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb.put("RIFF".getBytes("US-ASCII")); bb.putInt(36 + n * 2)
@@ -27,7 +39,7 @@ class FixturePackSpec extends SparkSpec {
     bb.putShort(1); bb.putShort(1); bb.putInt(8000); bb.putInt(16000)
     bb.putShort(2); bb.putShort(16)
     bb.put("data".getBytes("US-ASCII")); bb.putInt(n * 2)
-    (0 until n).foreach(t => bb.putShort(sampRef(d, t.toLong, v).toShort))
+    samples.foreach(s => bb.putShort(s.toShort))
     bb.array()
   }
 
@@ -37,11 +49,12 @@ class FixturePackSpec extends SparkSpec {
     val out = PipelineQueries.audioFpMediaOf(ids.toDF("doc_id")).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("payload")).toMap
     assert(out.size == ids.size + ids.count(_ % 10 == 0))
+    val samples = samplesOf(ids.map((_, false)) ++ ids.filter(_ % 10 == 0).map((_, true)))
     ids.foreach { d =>
-      assert(java.util.Arrays.equals(out(d), wavRef(d, v = false)), s"doc $d")
+      assert(java.util.Arrays.equals(out(d), wavRef(d, v = false, samples((d, false)))), s"doc $d")
     }
     ids.filter(_ % 10 == 0).foreach { d =>
-      assert(java.util.Arrays.equals(out(d + 1000000L), wavRef(d, v = true)),
+      assert(java.util.Arrays.equals(out(d + 1000000L), wavRef(d, v = true, samples((d, true)))),
         s"variant of $d")
     }
   }
@@ -52,20 +65,21 @@ class FixturePackSpec extends SparkSpec {
   private val H = 8
   private val bmpRow = ((W * 3 + 3) / 4) * 4 // 28
 
-  private def pxRef(d: Long, x: Int, y: Int, isVar: Boolean): Long = {
-    val idx = (y * W + x).toLong
-    val k0 = (d * (W * H) + idx + 1) % 16777216
-    val k1 = ((k0 * 2654435761L) / 256) % 16777216
-    val k2 = ((k1 * 2654435761L) / 256) % 16777216
-    val base = ((k2 * 2654435761L) / 65536) % 256
-    if (isVar && x < W / 9 && y < H / 8) base / 2 + 64 else base
-  }
+  /** Every pixel of each (seed, variant) raster, from the closed form. */
+  private def pixelsOf(rasters: Seq[(Long, Boolean)]): Map[(Long, Int, Int, Boolean), Long] =
+    rasters.flatMap { case (d, v) => for (x <- 0 until W; y <- 0 until H) yield (d, x, y, v) }
+      .toDF("d", "x", "y", "v")
+      .select(col("d"), col("x"), col("y"), col("v"),
+        expr(PipelineQueries.rasterPx("spark")("d", "x", "y", "v")).cast("long"))
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getBoolean(3)) -> r.getLong(4))
+      .toMap
 
-  private def pgmRef(d: Long, isVar: Boolean): Array[Byte] =
+  private def pgmRef(d: Long, isVar: Boolean, px: Map[(Long, Int, Int, Boolean), Long]): Array[Byte] =
     s"P5\n$W $H\n255\n".getBytes("US-ASCII") ++
-      (0 until W * H).map(i => pxRef(d, i % W, i / W, isVar).toByte).toArray
+      (0 until W * H).map(i => px((d, i % W, i / W, isVar)).toByte).toArray
 
-  private def bmpRef(d: Long, isVar: Boolean): Array[Byte] = {
+  private def bmpRef(d: Long, isVar: Boolean, px: Map[(Long, Int, Int, Boolean), Long]): Array[Byte] = {
     def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
     def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
       ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
@@ -75,7 +89,7 @@ class FixturePackSpec extends SparkSpec {
       le32(imgSize) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0)
     val body = (0 until bmpRow * H).map { b =>
       if (b % bmpRow >= W * 3) 0.toByte
-      else pxRef(d, (b % bmpRow) / 3, H - 1 - b / bmpRow, isVar).toByte
+      else px((d, (b % bmpRow) / 3, H - 1 - b / bmpRow, isVar)).toByte
     }.toArray
     hdr ++ body
   }
@@ -87,8 +101,9 @@ class FixturePackSpec extends SparkSpec {
       (10L, 0L, false), (11L, 0L, true), (100L, 9999L, false), (101L, 9999L, true))
     val out = PipelineQueries.rasterPayload(rows.toDF("media_id", "__d", "__v"))
       .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("payload")).toMap
+    val px = pixelsOf(rows.map { case (_, d, v) => (d, v) }.distinct)
     rows.foreach { case (mid, d, v) =>
-      val want = if (mid % 2 == 0) bmpRef(d, v) else pgmRef(d, v)
+      val want = if (mid % 2 == 0) bmpRef(d, v, px) else pgmRef(d, v, px)
       assert(java.util.Arrays.equals(out(mid), want), s"media $mid (seed $d, var $v)")
     }
   }

@@ -2,6 +2,8 @@ package graft.router
 
 import scala.concurrent.duration._
 
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+
 import graft.SparkSpec
 import graft.connector.MockConnector
 import graft.core.Errors.BorsaError
@@ -50,6 +52,24 @@ class HistoryOrchestratorSpec extends SparkSpec {
     val Right(res) = history(spark, inst, r, Seq(fiveMin))
     // 1h of 5m candles re-aggregated to 15m buckets -> 4 rows
     assert(res.candles.count() == 4)
+  }
+
+  test("providers on different resample plans merge in one relation without an exchange") {
+    // `daily` serves D1 natively but only its first 5 days; `hourly` serves
+    // 1h, resampled to daily, and fills the other 5
+    val daily = new MockConnector("daily", MockConnector.Script(
+      supportedIntervals = Seq(Interval.D1), maxCandles = 5))
+    val hourly = new MockConnector("hourly", MockConnector.Script(
+      supportedIntervals = Seq(Interval.I1h)))
+    val Right(res) = history(spark, inst, req, Seq(daily, hourly),
+      Policy.ProviderPolicy().withGlobal(Seq("daily", "hourly")))
+    val ts = res.candles.select("ts").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ts == (0 until 10).map(1704067200L + _ * 86400L))
+    val attr = res.attribution.collect()
+      .map(r => (r.getAs[String]("provider"), r.getAs[Long]("n_points"))).toSeq
+    assert(attr == Seq(("daily", 5L), ("hourly", 5L)))
+    val plan = res.candles.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"the two resample groups shuffled:\n$plan")
   }
 
   test("all providers NotFound or OK-but-empty → NotFound, not Unsupported (router_history_not_found.rs)") {
@@ -102,7 +122,7 @@ class HistoryOrchestratorSpec extends SparkSpec {
     }
   }
 
-  test("H8 download is ONE merge plan (single first-wins exchange) and propagates merged actions") {
+  test("H8 download is ONE merge plan (one relation, one first-wins window, no exchange) and propagates merged actions") {
     import graft.core.Model.Action
     val div = Action("", 1704067200L, "dividend", Some(BigDecimal(1)), Some("USD"), None, None)
     val a = new MockConnector("pa", MockConnector.Script(actions = Seq(div)))
@@ -113,13 +133,18 @@ class HistoryOrchestratorSpec extends SparkSpec {
     val Right(res) = download(spark, insts, req, Seq(a, b),
       Policy.ProviderPolicy().withGlobal(Seq("pa", "pb")))
     assert(res.candles.select("symbol").distinct().count() == 3)
-    // one data plane: the 3-instrument × 2-provider union merges through a
-    // SINGLE exchange — the (symbol)-clustered shuffle that both the
-    // currency guard window and the first-wins window reuse. A
-    // per-instrument loop would show 3 independent merge plans instead.
+    // one data plane: the 3-instrument × 2-provider request is ONE
+    // single-partition relation (one resample group, so one leaf) merged
+    // by ONE first-wins window with no exchange. A per-instrument loop
+    // would show 3 independent merge plans instead.
+    val optimized = res.candles.queryExecution.optimizedPlan
+    val leaves = optimized.collectLeaves()
+    assert(leaves.size == 1 && leaves.forall(_.isInstanceOf[LocalRelation]),
+      s"expected one LocalRelation leaf, plan:\n$optimized")
     val plan = res.candles.queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges == 1, s"expected one merge exchange, plan:\n$plan")
+    assert(!plan.contains("Exchange"), s"the merge shuffled:\n$plan")
+    assert("Window \\[row_number\\(\\)".r.findAllIn(plan).size == 1,
+      s"expected one first-wins window, plan:\n$plan")
     // merged actions present in the bulk result (previously dropped)
     assert(res.actions.isDefined && res.actions.get.count() == 3)
   }
@@ -270,6 +295,76 @@ class HistoryOrchestratorSpec extends SparkSpec {
       val l = java.time.Instant.ofEpochSecond(ts).atZone(ny)
       assert(l.getHour == 0 && l.getMinute == 0, s"AAPL bucket $ts not NY midnight: $l")
     }
+    // each branch selects its instruments by their meta-group id, a data
+    // column: no symbol IN-list (nor its one-element form, symbol = 'X')
+    val optimized = res.candles.queryExecution.optimizedPlan
+    assert(!optimized.toString.contains(" IN ("), s"symbol IN-list in the plan:\n$optimized")
+    val symbolFilters = optimized.collect {
+      case f: Filter if f.condition.references.exists(_.name == "symbol") => f
+    }
+    assert(symbolFilters.isEmpty, s"per-meta branches filter on symbol:\n$optimized")
+  }
+
+  /** Jobs started while `body` runs (the listener bus is drained by a
+    * short wait, as in HistoryRouterSpec's H5 test).
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      Thread.sleep(300)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("H8 a 50-instrument × 3-provider download is one candle leaf and at most 2 jobs") {
+    val provs = Seq("pa", "pb", "pc").map(new MockConnector(_))
+    val insts = (1 to 50).map(i => Instrument(Symbol(f"S$i%02d"), None, AssetKind.Equity))
+    val ((res, rows), jobs) = jobsDuring {
+      val Right(res) = download(spark, insts, req, provs,
+        Policy.ProviderPolicy().withGlobal(Seq("pa", "pb", "pc")))
+      (res, res.collect(res.candles.collect()))
+    }
+    assert(rows.map(_.length) == Right(50 * 10))
+    val optimized = res.candles.queryExecution.optimizedPlan
+    assert(optimized.collectLeaves().size == 1,
+      s"expected one candle relation, got ${optimized.collectLeaves().size} leaves")
+    // the currency-stats aggregate and the collect, one job each
+    assert(jobs <= 2, s"download + collect ran $jobs jobs")
+  }
+
+  test("same-shape histories with different symbols and provider counts compile no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a provider that fails for one symbol only, so the surviving provider
+    // count differs between requests of the same shape
+    class FailsOn(n: String, syms: Set[String]) extends MockConnector(n) {
+      override def history(i: Instrument, r: HistoryRequest): Either[BorsaError, HistoryResponse] =
+        if (syms(i.symbol.value)) Left(BorsaError.Data("down")) else super.history(i, r)
+    }
+    val names = (1 to 6).map(i => s"cg$i")
+    val provs = names.map {
+      case "cg5" => new FailsOn("cg5", Set("CG2", "CG3"))
+      case "cg2" => new FailsOn("cg2", Set("CG3"))
+      case n     => new MockConnector(n)
+    }
+    val policy = Policy.ProviderPolicy().withGlobal(names)
+    def run(sym: String): Long = {
+      val Right(res) = history(spark, Instrument(Symbol(sym), None, AssetKind.Equity),
+        req, provs, policy)
+      val Right(rows) = res.collect(res.candles.collect())
+      assert(rows.length == 10)
+      res.attribution.count()
+    }
+    run("CG0") // warm-up: 6 providers
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Seq("CG1", "CG2", "CG3").foreach(run) // 6, 5 and 4 providers
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0,
+      "a repeated request shape missed the codegen cache")
   }
 
   test("AutoDaily histories and a multi-meta final resample leave the session's cache empty") {
@@ -400,6 +495,10 @@ class HistoryOrchestratorSpec extends SparkSpec {
     val bysym = mixed.candles.collect().groupBy(_.getAs[String]("symbol"))
     assert(bysym("AAPL").forall(_.getAs[java.math.BigDecimal]("close_unadj") != null))
     assert(bysym("MSFT").forall(_.getAs[java.math.BigDecimal]("close_unadj") == null))
+    // the single-source and first-wins branches read one single-partition
+    // relation, and their union stays one partition
+    val mixedPlan = mixed.candles.queryExecution.executedPlan.toString
+    assert(!mixedPlan.contains("Exchange"), s"mixed download shuffled:\n$mixedPlan")
   }
 
   test("download fans out instruments concurrently: N × slow provider ≈ one delay of wall-clock") {

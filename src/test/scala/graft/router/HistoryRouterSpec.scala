@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.core.Model.Interval
+import graft.core.Model.{Candle, Interval}
 import graft.core.Model.Interval._
 import graft.router.HistoryRouter._
 
@@ -50,7 +50,7 @@ class HistoryRouterSpec extends SparkSpec {
   // --------------------------------------------------------------- H4
 
   private def ph(p: String, prio: Int, adjusted: Boolean) =
-    ProviderHistory(p, prio, adjusted, None, None, candlesDf(p))
+    ProviderHistory(p, prio, adjusted, None, None, candles(p))
 
   private val schema = StructType(Seq(
     StructField("symbol", StringType), StructField("ts", LongType),
@@ -66,6 +66,12 @@ class HistoryRouterSpec extends SparkSpec {
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
+
+  private def candles(p: String, currency: String = "USD", n: Int = 3): Seq[Candle] =
+    (0 until n).map { i =>
+      val v = BigDecimal(100 + i + p.hashCode.abs % 10)
+      Candle("S", 1704067200L + i * 86400L, v, v + 1, v - 1, v, None, Some(100L), currency)
+    }
 
   test("H4 prefer-adjusted keeps only adjusted when any exists (history.rs:578-586)") {
     val res = orderAndFilter(Seq(ph("a", 0, false), ph("b", 1, true)), preferAdjusted = true)
@@ -84,9 +90,9 @@ class HistoryRouterSpec extends SparkSpec {
   // --------------------------------------------------------------- merge
 
   test("merge: first-wins by priority, attribution spans, flags (M1+H6)") {
-    val a = ProviderHistory("pa", 0, adjusted = true, None, None, candlesDf("pa", n = 2))
-    val b = ProviderHistory("pb", 1, adjusted = true, None, None, candlesDf("pb", n = 3))
-    val Right(m) = merge(Seq(a, b))
+    val a = ProviderHistory("pa", 0, adjusted = true, None, None, candles("pa", n = 2))
+    val b = ProviderHistory("pb", 1, adjusted = true, None, None, candles("pb", n = 3))
+    val Right(m) = merge(spark, Seq(a, b))
     val rows = m.candles.orderBy("ts").collect()
     assert(rows.length == 3)
     // ts 0,1 from pa (priority 0), ts 2 only in pb
@@ -97,28 +103,25 @@ class HistoryRouterSpec extends SparkSpec {
   }
 
   test("H5 mixed currency: in-plan guard aborts the action; diagnosis names the deviating provider") {
-    val a = ProviderHistory("pa", 0, adjusted = true, None, None, candlesDf("pa"))
-    val b = ProviderHistory("pb", 1, adjusted = true, None, None, candlesDf("pb", currency = "EUR"))
+    val a = ProviderHistory("pa", 0, adjusted = true, None, None, candles("pa"))
+    val b = ProviderHistory("pb", 1, adjusted = true, None, None, candles("pb", currency = "EUR"))
     // merge() itself is pure plan construction — the violation surfaces
     // only when an action runs, and diagnosed() maps it to the typed error
-    val Right(m) = merge(Seq(a, b))
-    diagnosed(Seq(a, b))(m.candles.count()) match {
+    val Right(m) = merge(spark, Seq(a, b))
+    diagnosed(m.relation)(m.candles.count()) match {
       case Left(graft.core.Errors.BorsaError.Connector("pb",
         graft.core.Errors.BorsaError.InconsistentCurrencyData)) => ()
       case other => fail(s"expected pb diagnosed, got $other")
     }
     // provider-INTERNAL violation blames that provider directly, even when
     // another (clean) provider also contributes
-    val mixedRows = Seq(
-      Row("S", 1704067200L, BigDecimal(1).bigDecimal, BigDecimal(2).bigDecimal,
-        BigDecimal(0).bigDecimal, BigDecimal(1).bigDecimal, 1L, "USD"),
-      Row("S", 1704153600L, BigDecimal(1).bigDecimal, BigDecimal(2).bigDecimal,
-        BigDecimal(0).bigDecimal, BigDecimal(1).bigDecimal, 1L, "EUR"))
-    val mixed = spark.createDataFrame(spark.sparkContext.parallelize(mixedRows, 1), schema)
+    val mixed = Seq(
+      Candle("S", 1704067200L, 1, 2, 0, 1, None, Some(1L), "USD"),
+      Candle("S", 1704153600L, 1, 2, 0, 1, None, Some(1L), "EUR"))
     val c = ProviderHistory("pc", 0, adjusted = true, None, None, mixed)
-    val d = ProviderHistory("pd", 1, adjusted = true, None, None, candlesDf("pd"))
-    val Right(m2) = merge(Seq(c, d))
-    diagnosed(Seq(c, d))(m2.candles.count()) match {
+    val d = ProviderHistory("pd", 1, adjusted = true, None, None, candles("pd"))
+    val Right(m2) = merge(spark, Seq(c, d))
+    diagnosed(m2.relation)(m2.candles.count()) match {
       case Left(graft.core.Errors.BorsaError.Connector("pc",
         graft.core.Errors.BorsaError.InconsistentCurrencyData)) => ()
       case other => fail(s"expected pc diagnosed, got $other")
@@ -133,17 +136,18 @@ class HistoryRouterSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val a = ProviderHistory("pa", 0, adjusted = true, None, None, candlesDf("pa", n = 2))
-      val b = ProviderHistory("pb", 1, adjusted = true, None, None, candlesDf("pb", n = 3))
-      val Right(m) = merge(Seq(a, b))
+      val a = ProviderHistory("pa", 0, adjusted = true, None, None, candles("pa", n = 2))
+      val b = ProviderHistory("pb", 1, adjusted = true, None, None, candles("pb", n = 3))
+      val Right(m) = merge(spark, Seq(a, b))
       Thread.sleep(300) // let any eagerly-submitted job reach the listener bus
       assert(jobs.get() == 0, "merge() must be pure plan construction — zero Spark jobs")
       val before = jobs.get()
-      m.candles.count()
+      assert(m.candles.collect().length == 3)
       Thread.sleep(300)
-      // ONE action ⇒ a small constant number of jobs (AQE may split stages),
-      // not the 2+ extra full-scan diagnostic jobs of the eager design
-      assert(jobs.get() > before, "sanity: the action itself runs")
+      // the guard window, the first-wins window and the projection all run
+      // in the request relation's single partition: no Exchange, so no
+      // second (shuffle-map) job
+      assert(jobs.get() - before == 1, s"collect ran ${jobs.get() - before} jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -187,20 +191,21 @@ class HistoryRouterSpec extends SparkSpec {
 
   test("currencyViolations: a null-currency top provider cannot mask a lower-priority mix (bulk/history guard parity)") {
     import graft.core.Errors.BorsaError
-    import graft.core.Model.Candle
-    def frame(cur: String) = HistoryOrchestrator.candlesToDf(spark, Seq(
-      Candle("A", 0L, BigDecimal(1), BigDecimal(2), BigDecimal(1), BigDecimal(1), None, Some(1L), cur)))
+    def records(cur: String) = Seq(
+      Candle("A", 0L, BigDecimal(1), BigDecimal(2), BigDecimal(1), BigDecimal(1), None, Some(1L), cur))
     def ph(name: String, prio: Int, cur: String) =
-      ProviderHistory(name, prio, adjusted = true, None, None, frame(cur))
+      ProviderHistory(name, prio, adjusted = true, None, None, records(cur))
+    def violations(results: Seq[ProviderHistory]) =
+      HistoryRouter.currencyViolations(requestFrame(spark, Seq(results)))
     val results = Seq(ph("p0", 0, null), ph("p1", 1, "USD"), ph("p2", 2, "EUR"))
     // the in-plan guard (min/max ignores nulls) WOULD fire on this data;
     // the bulk stats pass must agree: reference currency = the first
     // provider that reported one (p1/USD), deviation blamed on p2
-    HistoryRouter.currencyViolations(results) match {
+    violations(results) match {
       case Seq(("A", BorsaError.Connector("p2", BorsaError.InconsistentCurrencyData))) => ()
       case other => fail(s"expected p2 blamed for symbol A, got $other")
     }
     // clean null-mixed-with-one-currency stays clean (guard parity again)
-    assert(HistoryRouter.currencyViolations(Seq(ph("p0", 0, null), ph("p1", 1, "USD"))).isEmpty)
+    assert(violations(Seq(ph("p0", 0, null), ph("p1", 1, "USD"))).isEmpty)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.core.Model.HistoryMeta
+import graft.core.Model.{Candle, HistoryMeta}
 import graft.functions.TzBucketKernel
 import graft.router.HistoryRouter._
 
@@ -15,7 +15,7 @@ import graft.router.HistoryRouter._
   * /root/reference/borsa-core/tests/resample_props.rs:173
   * (`with_meta_dst_alignment`) and :282
   * (`utc_equivalence_between_with_meta_and_plain`), exercising
-  * `applyPlan`/`applyFinalResample` meta routing
+  * `requestFrame`/`applyFinalResample` meta routing
   * (borsa-core/src/timeseries/resample.rs:279-320 choose_bucket_*).
   */
 class RouterTzSpec extends SparkSpec {
@@ -49,13 +49,19 @@ class RouterTzSpec extends SparkSpec {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
   }
 
+  private def records(tss: Seq[Long]): Seq[Candle] =
+    tss.zipWithIndex.map { case (ts, i) =>
+      val v = BigDecimal(100 + i)
+      Candle("S", ts, v, v + 1, v - 1, v, None, Some(10L), "USD")
+    }
+
   private def bucketTss(ph: ProviderHistory): Seq[Long] =
-    applyPlan(ph).select("ts").collect().map(_.getLong(0)).toSeq.sorted
+    requestFrame(spark, Seq(Seq(ph))).select("ts").collect().map(_.getLong(0)).toSeq.sorted
 
   test("with_meta DST alignment: Daily plan through the router lands on Rome local midnight") {
     val meta = Some(HistoryMeta(Some("Europe/Rome"), None))
     val ph = ProviderHistory("pa", 0, adjusted = true, meta,
-      Some(ResamplePlan.Daily), candles(dstTss))
+      Some(ResamplePlan.Daily), records(dstTss))
     val buckets = bucketTss(ph)
     assert(buckets.nonEmpty)
     buckets.foreach { ts =>
@@ -68,7 +74,7 @@ class RouterTzSpec extends SparkSpec {
   test("with_meta DST alignment: Weekly plan lands on Rome local Monday midnight") {
     val meta = Some(HistoryMeta(Some("Europe/Rome"), None))
     val ph = ProviderHistory("pa", 0, adjusted = true, meta,
-      Some(ResamplePlan.Weekly), candles(dstTss))
+      Some(ResamplePlan.Weekly), records(dstTss))
     bucketTss(ph).foreach { ts =>
       val l = Instant.ofEpochSecond(ts).atZone(rome)
       assert(l.getDayOfWeek == java.time.DayOfWeek.MONDAY &&
@@ -81,7 +87,7 @@ class RouterTzSpec extends SparkSpec {
     for (minutes <- Seq(5, 60)) {
       val meta = Some(HistoryMeta(Some("Europe/Rome"), None))
       val ph = ProviderHistory("pa", 0, adjusted = true, meta,
-        Some(ResamplePlan.Minutes(minutes.toLong)), candles(dstTss))
+        Some(ResamplePlan.Minutes(minutes.toLong)), records(dstTss))
       val expected = dstTss.map(ts =>
         TzBucketKernel.bucket(ts, rome, minutes.toLong * 60L)).distinct.sorted
       assert(bucketTss(ph) == expected, s"minutes=$minutes")
@@ -93,9 +99,9 @@ class RouterTzSpec extends SparkSpec {
     for (plan <- Seq[ResamplePlan](ResamplePlan.Daily, ResamplePlan.Weekly,
         ResamplePlan.Minutes(15L))) {
       val withMeta = bucketTss(ProviderHistory("pa", 0, adjusted = true, metaUtc,
-        Some(plan), candles(dstTss)))
+        Some(plan), records(dstTss)))
       val plain = bucketTss(ProviderHistory("pa", 0, adjusted = true, None,
-        Some(plan), candles(dstTss)))
+        Some(plan), records(dstTss)))
       assert(withMeta == plain, s"plan=$plan")
     }
   }
@@ -104,7 +110,7 @@ class RouterTzSpec extends SparkSpec {
     val off = -18000L // UTC-5
     val meta = Some(HistoryMeta(None, Some(off)))
     val weekly = bucketTss(ProviderHistory("pa", 0, adjusted = true, meta,
-      Some(ResamplePlan.Weekly), candles(dstTss)))
+      Some(ResamplePlan.Weekly), records(dstTss)))
     val expectedWeekly = dstTss.map { s =>
       val day = Math.floorDiv(s + off, 86400L)
       val monday = day - Math.floorMod(day + 3, 7L)
@@ -113,7 +119,7 @@ class RouterTzSpec extends SparkSpec {
     assert(weekly == expectedWeekly)
 
     val mins = bucketTss(ProviderHistory("pa", 0, adjusted = true, meta,
-      Some(ResamplePlan.Minutes(90L)), candles(dstTss)))
+      Some(ResamplePlan.Minutes(90L)), records(dstTss)))
     val step = 90L * 60L
     val expectedMins = dstTss.map(s => (s + off) - Math.floorMod(s + off, step) - off)
       .distinct.sorted

@@ -1,5 +1,6 @@
 package graft.timeseries
 
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.sql.DataFrame
@@ -9,7 +10,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.core.Errors.BorsaError
 import graft.core.Model._
-import graft.router.{HistoryOrchestrator, HistoryRouter}
+import graft.router.HistoryRouter
 import graft.router.HistoryRouter.ProviderHistory
 
 /** Property ports of the reference kernel invariants that were still
@@ -41,7 +42,7 @@ class KernelPropsSpec extends SparkSpec {
 
   private def actionsDf(rows: Seq[Row]): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), HistoryOrchestrator.actionSchema)
+      spark.sparkContext.parallelize(rows, 1), HistoryRouter.actionSchema)
 
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
@@ -65,9 +66,8 @@ class KernelPropsSpec extends SparkSpec {
   // ------------------------------------------------------------ meta
 
   test("meta selection: first non-None by priority wins under every permutation (merge_props.rs:143)") {
-    val dummy = actionsDf(Seq.empty) // mergedMeta never touches the frames
-    def ph(priority: Int, meta: Option[HistoryMeta]) =
-      ProviderHistory(s"p$priority", priority, adjusted = true, meta, None, dummy)
+    def ph(priority: Int, meta: Option[HistoryMeta]) = // mergedMeta never reads the records
+      ProviderHistory(s"p$priority", priority, adjusted = true, meta, None, Seq.empty)
     val rome = HistoryMeta(Some("Europe/Rome"), None)
 
     // exactly one carrier, all 3 positions × all 6 permutations
@@ -99,6 +99,9 @@ class KernelPropsSpec extends SparkSpec {
 
   // ------------------------------------------------------------ currency
 
+  private def candlesDf(rows: Seq[Candle]): DataFrame =
+    spark.createDataFrame(rows.map(HistoryRouter.candleRow).asJava, HistoryRouter.candleSchema)
+
   private def candles(r: scala.util.Random, n: Int, currency: String): Seq[Candle] =
     (0 until n).map { _ =>
       val ts = 86400L * r.nextInt(8)
@@ -114,12 +117,10 @@ class KernelPropsSpec extends SparkSpec {
       val s2 = candles(r, r.nextInt(6), if (usd2) "USD" else "EUR")
       val sameCurrency = usd1 == usd2 || s1.isEmpty || s2.isEmpty
       val results = Seq(
-        ProviderHistory("p0", 0, adjusted = true, None, None,
-          HistoryOrchestrator.candlesToDf(spark, s1)),
-        ProviderHistory("p1", 1, adjusted = true, None, None,
-          HistoryOrchestrator.candlesToDf(spark, s2)))
-      val Right(m) = HistoryRouter.merge(results)
-      HistoryRouter.diagnosed(results)(m.candles.count()) match {
+        ProviderHistory("p0", 0, adjusted = true, None, None, s1),
+        ProviderHistory("p1", 1, adjusted = true, None, None, s2))
+      val Right(m) = HistoryRouter.merge(spark, results)
+      HistoryRouter.diagnosed(m.relation)(m.candles.count()) match {
         case Right(_) => assert(sameCurrency, s"seed=$seed: mixed currencies merged silently")
         case Left(BorsaError.Connector(p, BorsaError.InconsistentCurrencyData)) =>
           assert(!sameCurrency, s"seed=$seed: clean merge aborted")
@@ -130,8 +131,7 @@ class KernelPropsSpec extends SparkSpec {
       // the kernel-level analog (reference merge_candles_by_priority
       // checks inline; our C2 invariant composes around the kernel)
       val kernelMerged = Currency.ensureUniform(Merge.mergeCandlesByPriority(Seq(
-        HistoryOrchestrator.candlesToDf(spark, s1),
-        HistoryOrchestrator.candlesToDf(spark, s2))))
+        candlesDf(s1), candlesDf(s2))))
       assert(Try(kernelMerged.count()).isSuccess == sameCurrency, s"seed=$seed (kernel form)")
     }
   }
@@ -152,7 +152,7 @@ class KernelPropsSpec extends SparkSpec {
       val mixed = rows.map(_.currency).distinct.size > 1
       val (mode, bucket) = buckets(seed % buckets.size)
       val out = Resample.resampleCandles(
-        Currency.ensureUniform(HistoryOrchestrator.candlesToDf(spark, rows)),
+        Currency.ensureUniform(candlesDf(rows)),
         bucket, keys = Seq("symbol", "currency"))
       Try(out.select("currency").distinct().collect()) match {
         case scala.util.Success(cur) =>
