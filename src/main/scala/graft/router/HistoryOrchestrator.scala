@@ -12,19 +12,22 @@ import graft.core.Errors
 import graft.core.Errors.BorsaError
 import graft.core.Model._
 import graft.routing.Policy
+import graft.timeseries.Attribution
 
 /** The flagship §3.1 history pipeline end-to-end (H1–H8 over the connector
   * layer): eligibility → per-provider interval negotiation (R6) → Deep
   * parallel / Fallback sequential fan-out (H1/H2) → per-provider resample
-  * plan (H3) → adjusted ordering/filter (H4) → first-wins merge + currency
-  * diagnosis + attribution (M1/H5/H6) → final resample (H7) → error
-  * collapse (history.rs:155-176).
+  * plan (H3) → adjusted ordering/filter (H4) → currency check on the
+  * fetched records (H5) → first-wins merge (M1) → final resample (H7),
+  * attribution (H6) on demand; error collapse (history.rs:155-176).
   *
   * Connector results stay records until the merge: each request's
   * surviving records become ONE driver-built relation
   * ([[HistoryRouter.requestFrame]]) whose merge runs as one small
-  * single-partition job — single-instrument history is just the
-  * multi-symbol pipeline with one symbol.
+  * single-partition job. [[history]] is a one-instrument [[download]]:
+  * both verbs share the post-fetch path ([[assemble]]) and differ only in
+  * how they fetch (one instrument inline, or many concurrently) and in how
+  * a failed instrument is reported (`Left`, or a warning).
   */
 object HistoryOrchestrator {
 
@@ -103,7 +106,6 @@ object HistoryOrchestrator {
 
   final case class HistoryResult(
       candles: DataFrame,
-      attribution: DataFrame,
       adjusted: Boolean,
       meta: Option[HistoryMeta],
       warnings: Seq[BorsaError],
@@ -113,27 +115,29 @@ object HistoryOrchestrator {
         * apply [[graft.timeseries.Merge.canonicalActionOrder]] when
         * presenting in the reference's canonical (ts, kind, payload) order.
         */
-      actions: Option[DataFrame] = None,
-      /** The request relation the merge read — kept so the lazy currency
-        * guard's failure can be mapped to the reference's typed error at
-        * ACTION time (see [[collect]]).
-        */
-      relation: DataFrame) {
+      actions: Option[DataFrame],
+      /** The merged rows, still carrying `provider`. */
+      private val attributed: DataFrame) {
 
-    /** Run a Spark action over this result with H5 failure-path diagnosis:
-      * a currency-guard abort is translated to
-      * `Connector(deviatingProvider, InconsistentCurrencyData)`
-      * (history.rs:205-274), everything else passes through.
+    /** H6 provider spans (history.rs:588-634), planned on first access:
+      * two windows, an aggregate and a sort that most callers never read.
       */
-    def collect[T](action: => T): Either[BorsaError, T] =
-      HistoryRouter.diagnosed(relation)(action)
+    lazy val attribution: DataFrame = Attribution.spans(attributed, Seq("symbol"), "ts")
+
+    /** Run a Spark action over this result; a pass-through, as every
+      * failure the pipeline reports (the currency check included) is
+      * returned by the verb itself, before any action runs.
+      */
+    def collect[T](action: => T): Either[BorsaError, T] = Right(action)
   }
 
   /** Per-instrument CONTROL plane (driver-side, record-level): plan → H1/H2
-    * fan-out → H3 collect successes → H4 order/filter. No Spark plan is
-    * built here; the returned ProviderHistory values hold records. Shared by
-    * [[history]] (one instrument) and [[download]] (one data plane over all
-    * instruments).
+    * fan-out → H3 collect successes → H4 order/filter → H5 currency check.
+    * No Spark plan is built here; the returned ProviderHistory values hold
+    * records. A currency violation fails the instrument with its blamed
+    * provider (history.rs:205-274), so the violating records never enter
+    * the request relation. Shared by [[history]] (one instrument) and
+    * [[download]] (one data plane over all instruments).
     */
   private def fetchOrdered(
       inst: Instrument,
@@ -207,11 +211,9 @@ object HistoryOrchestrator {
         Some(s"history for ${inst.symbol.value}")))
     }
 
-    Right((HistoryRouter.orderAndFilter(successes, config.preferAdjusted), errors))
+    val ordered = HistoryRouter.orderAndFilter(successes, config.preferAdjusted)
+    HistoryRouter.currencyViolations(ordered).headOption.map(_._2).toLeft((ordered, errors))
   }
-
-  private def adjustedOf(ordered: Seq[HistoryRouter.ProviderHistory]): Boolean =
-    HistoryRouter.mergedAdjusted(ordered)
 
   /** Request flags (keepna/autoAdjust/prepost) interpret the provider
     * candles BEFORE any resample plan — raw-vs-adjusted selection must
@@ -220,55 +222,65 @@ object HistoryOrchestrator {
   private def flagsOf(req: HistoryRequest): DataFrame => DataFrame =
     graft.timeseries.Flags.applyRequestFlags(_, req)
 
-  private def metaOf(ordered: Seq[HistoryRouter.ProviderHistory]): Option[HistoryMeta] =
-    HistoryRouter.mergedMeta(ordered)
+  /** The post-fetch path of both verbs: ONE grouped merge over every
+    * surviving instrument ([[HistoryRouter.mergeGrouped]]), the H7 final
+    * resample, and the result. The final resample follows each
+    * instrument's merged meta (its bucket alignment follows its own
+    * providers' timezone): one resample branch per distinct meta,
+    * selected by the relation's meta-group column — never a symbol
+    * IN-list, which grows with the universe — and one branch in the common
+    * case.
+    */
+  private def assemble(
+      spark: SparkSession,
+      req: HistoryRequest,
+      config: Config,
+      oks: Seq[(Seq[HistoryRouter.ProviderHistory], Seq[BorsaError])],
+      failWarnings: Seq[BorsaError]): HistoryResult = {
+    val groups = oks.map(_._1)
+    val m = HistoryRouter.mergeGrouped(spark, groups, flagsOf(req))
+    val metaGroup = col(HistoryRouter.MetaGroupCol)
+    val candles = (config.finalResample, HistoryRouter.metaGroups(groups)) match {
+      case (HistoryRouter.FinalResample.None, _) => m.candles.drop(metaGroup)
+      case (mode, Seq(onlyMeta)) =>
+        HistoryRouter.applyFinalResample(m.candles.drop(metaGroup), mode, onlyMeta)
+      case (mode, metas) =>
+        metas.zipWithIndex.map { case (meta, i) =>
+          HistoryRouter.applyFinalResample(
+            m.candles.where(metaGroup === i).drop(metaGroup), mode, meta)
+        }.reduce(_ unionByName _)
+    }
+    HistoryResult(candles, m.adjusted, m.meta,
+      oks.flatMap(_._2.filter(_.isActionable)) ++ failWarnings, m.actions, m.attributed)
+  }
 
-  /** Execute the full pipeline for one instrument. */
+  /** Execute the full pipeline for one instrument: a one-instrument
+    * [[download]] whose failure is the result.
+    */
   def history(
       spark: SparkSession,
       inst: Instrument,
       req: HistoryRequest,
       connectors: Seq[Connector],
       policy: Policy.ProviderPolicy = Policy.ProviderPolicy(),
-      config: Config = Config()): Either[BorsaError, HistoryResult] = {
-    validateRequest(req) match {
-      case Left(e) => return Left(e)
-      case Right(_) => ()
+      config: Config = Config()): Either[BorsaError, HistoryResult] =
+    validateRequest(req).flatMap { _ =>
+      val deadline = config.requestTimeout.map(Deadline.now + _)
+      fetchOrdered(inst, req, connectors, policy, config, deadline)
+        .map(ok => assemble(spark, req, config, Seq(ok), Seq.empty))
     }
-    val deadline = config.requestTimeout.map(Deadline.now + _)
-    fetchOrdered(inst, req, connectors, policy, config, deadline).flatMap {
-      case (ordered, errors) =>
-        // H4 → M1/H5/H6 → H7
-        HistoryRouter.merge(spark, ordered, flagsOf(req)).map { m =>
-          HistoryResult(
-            HistoryRouter.applyFinalResample(m.candles, config.finalResample, m.meta),
-            m.attribution, m.adjusted, m.meta,
-            warnings = errors.filter(_.isActionable),
-            actions = m.actions,
-            relation = m.relation)
-        }
-    }
-  }
 
   /** H8 bulk download across instruments as ONE data plane: the control
-    * plane (plan/fetch/order) stays per-instrument — H4 adjusted filtering
-    * and provider ranking are instrument-local decisions — but every
-    * surviving provider's records carry their symbol already, so ALL of
-    * them form one request relation feeding a shared grouped merge
-    * ([[HistoryRouter.mergeGrouped]]): one first-wins window for the
-    * multi-provider instruments, a guard-free short-circuit branch
-    * preserving close_unadj for single-provider instruments, one
-    * attribution pass over both. Priorities are
+    * plane (plan/fetch/order/currency check) stays per-instrument — H4
+    * adjusted filtering, provider ranking and H5 blame are
+    * instrument-local decisions — but every surviving provider's records
+    * carry their symbol already, so ALL of them form one request relation
+    * feeding the shared post-fetch path ([[assemble]]). Priorities are
     * per-instrument ranks; the merge key (symbol, ts) means ranks only
     * ever compete within their own instrument. Per-instrument failures —
     * fetch errors AND currency violations — become warnings, partial
     * success succeeds (download.rs:130-213); merged actions ARE
     * propagated.
-    *
-    * The final resample groups instruments by their merged meta (each
-    * instrument's bucket alignment follows its own providers' timezone) —
-    * one resample branch per distinct meta, selected by the relation's
-    * meta-group column, one branch in the common case.
     */
   def download(
       spark: SparkSession,
@@ -318,47 +330,10 @@ object HistoryOrchestrator {
       case (_, Left(_: BorsaError.RequestTimeout)) => true
       case _                                       => false
     }) return Left(BorsaError.RequestTimeout("download"))
-    val oks = per.collect { case (i, Right((ordered, errs))) => (i, ordered, errs) }
+    val oks = per.collect { case (_, Right(ok)) => ok }
     val failWarnings = per.collect { case (i, Left(e)) =>
       BorsaError.Connector(i.symbol.value, e) }
     if (oks.isEmpty) return Left(Errors.collapse(failWarnings, "download", None))
-
-    // ONE grouped merge plan across all instruments (per-instrument
-    // semantics: single-source short-circuit, per-symbol currency
-    // isolation)
-    val groups = oks.map(_._2)
-    val metaIds = HistoryRouter.metaGroups(groups).zipWithIndex.toMap
-    HistoryRouter.mergeGrouped(spark, groups, flagsOf(req)).map { case (m, currencyWarnings) =>
-      // a currency-violating instrument contributes NOTHING — not rows (the
-      // merge dropped them), and not its adjusted flag, meta, or a
-      // final-resample branch: same treatment as a fetch-failed instrument
-      val violSyms: Set[String] =
-        currencyWarnings.collect { case BorsaError.Connector(sym, _) => sym }.toSet
-      val contributing = oks.filterNot { case (i, _, _) => violSyms(i.symbol.value) }
-      val liveMetas = contributing.map { case (_, ordered, _) => metaOf(ordered) }.distinct
-      val metaGroup = col(HistoryRouter.MetaGroupCol)
-      val finalCandles = (config.finalResample, liveMetas) match {
-        case (HistoryRouter.FinalResample.None, _) | (_, Seq()) =>
-          m.candles.drop(metaGroup) // Seq(): every instrument dropped, empty frame
-        case (mode, Seq(onlyMeta)) =>
-          HistoryRouter.applyFinalResample(m.candles.drop(metaGroup), mode, onlyMeta)
-        case (mode, metas) =>
-          // one resample branch per distinct meta, each selecting its
-          // instruments by their meta-group id, a data column — never a
-          // symbol IN-list, which grows with the universe
-          metas.map { meta =>
-            HistoryRouter.applyFinalResample(
-              m.candles.where(metaGroup === metaIds(meta)).drop(metaGroup), mode, meta)
-          }.reduce(_ unionByName _)
-      }
-      HistoryResult(
-        finalCandles,
-        m.attribution,
-        contributing.forall { case (_, ordered, _) => adjustedOf(ordered) },
-        contributing.flatMap { case (_, ordered, _) => metaOf(ordered) }.headOption,
-        oks.flatMap(_._3.filter(_.isActionable)) ++ failWarnings ++ currencyWarnings,
-        actions = m.actions,
-        relation = m.relation)
-    }
+    Right(assemble(spark, req, config, oks, failWarnings))
   }
 }

@@ -8,17 +8,19 @@ import org.apache.spark.sql.types._
 
 import graft.core.Errors.BorsaError
 import graft.core.Model._
-import graft.timeseries.{Attribution, Merge, Resample}
+import graft.timeseries.{Merge, Resample}
 
 /** History orchestration (SURVEY §3.1, operators R6 + H1–H8).
   *
   * Control plane (interval negotiation, strategy dispatch, adjusted
-  * preference) is pure Scala; the data plane (per-provider resample →
-  * priority merge → attribution → final resample) is ONE Catalyst plan
-  * over ONE relation per request: every provider's fetched candles
-  * (symbol, ts, open, high, low, close, close_unadj, volume, currency —
-  * ts in epoch seconds) in a single partition, with provider and priority
-  * as data columns → row_number dedup → aggregation.
+  * preference, the H5 currency check) is pure Scala over the fetched
+  * records; the data plane (per-provider resample → priority merge →
+  * final resample, attribution on demand) is ONE Catalyst plan over ONE
+  * relation per request: every provider's fetched candles (symbol, ts,
+  * open, high, low, close, close_unadj, volume, currency — ts in epoch
+  * seconds) in a single partition, with provider and priority as data
+  * columns → row_number dedup → aggregation. One instrument's history and
+  * a many-instrument download take the same [[mergeGrouped]].
   */
 object HistoryRouter {
 
@@ -205,13 +207,15 @@ object HistoryRouter {
           .withColumnRenamed("bucket_ts", "ts")
     }
 
-  /** The request's corporate actions as one relation, in priority order;
-    * None when no provider reported any.
+  /** The request's corporate actions as one relation, each instrument's in
+    * priority order and tagged, like its candles, with whether the
+    * instrument has several providers; None when no provider reported any.
     */
-  private def actionsFrame(spark: SparkSession, results: Seq[ProviderHistory]): Option[DataFrame] = {
-    val rows = results.sortBy(_.priority).flatMap(_.actions).map(actionRow)
+  private def actionsFrame(spark: SparkSession, groups: Seq[Seq[ProviderHistory]]): Option[DataFrame] = {
+    val rows = for (g <- groups; ph <- g.sortBy(_.priority); a <- ph.actions)
+      yield Row.fromSeq(actionRow(a).toSeq :+ (g.sizeIs > 1))
     if (rows.isEmpty) None
-    else Some(spark.createDataFrame(rows.asJava, actionSchema).coalesce(1))
+    else Some(spark.createDataFrame(rows.asJava, actionSchema.add(MultiCol, BooleanType)).coalesce(1))
   }
 
   /** H4 `order_results` / `filter_adjustedness` (history.rs:578-586,188-203):
@@ -231,8 +235,7 @@ object HistoryRouter {
 
   /** Merged adjusted-flag algebra (merge.rs:32-37,76-102): first
     * contributor AND all contributors — which reduces to all-adjusted over
-    * a non-empty contributor set. Shared by merge() and bulk download so
-    * the two paths cannot drift.
+    * a non-empty contributor set.
     */
   def mergedAdjusted(results: Seq[ProviderHistory]): Boolean =
     results.nonEmpty && results.forall(_.adjusted)
@@ -241,227 +244,83 @@ object HistoryRouter {
   def mergedMeta(results: Seq[ProviderHistory]): Option[HistoryMeta] =
     results.sortBy(_.priority).flatMap(_.meta).headOption
 
-  /** Merged result: candles + deduped actions + flags + attribution, and
-    * the request relation they were built from (the currency diagnosis
-    * reads it again, see [[diagnosed]]).
+  /** H5 currency invariant (history.rs:205-274) over one instrument's
+    * fetched records, checked before they reach the request relation: no
+    * symbol may mix currencies across its providers. A single provider is
+    * exempt, as the reference's single-source short-circuit
+    * (history.rs:207-210) skips the check, and null currencies are
+    * ignored. Each violating symbol is mapped to its blamed typed error:
+    * the first provider, by priority, that mixes currencies itself; else
+    * the first that deviates from the reference currency, the one reported
+    * by the highest-priority provider that reported any.
+    */
+  def currencyViolations(results: Seq[ProviderHistory]): Seq[(String, BorsaError)] =
+    if (results.sizeIs < 2) Seq.empty
+    else {
+      val reported = for {
+        ph <- results.sortBy(_.priority)
+        (sym, cs) <- ph.candles.groupBy(_.symbol)
+      } yield (sym, ph.provider, cs.flatMap(c => Option(c.currency)).distinct)
+      reported.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (sym, rows) =>
+        val ref = rows.flatMap(_._3.headOption).headOption
+        rows.find(_._3.sizeIs > 1)
+          .orElse(rows.find(r => ref.exists(c => r._3.exists(_ != c))))
+          .map(r => sym -> BorsaError.Connector(r._2, BorsaError.InconsistentCurrencyData))
+      }
+    }
+
+  /** A request's merged data plane: the candles, still carrying
+    * `__meta_grp` (the instrument's index in [[metaGroups]]) for the
+    * caller's per-meta final resample; the adjusted flag and meta, each
+    * instrument's merged algebra AND-ed and first-defined across
+    * instruments; the deduped actions; and the merged rows with their
+    * `provider`, from which attribution spans are built.
     */
   final case class MergedHistory(
       candles: DataFrame,
-      attribution: DataFrame,
       adjusted: Boolean,
       meta: Option[HistoryMeta],
       actions: Option[DataFrame],
-      relation: DataFrame)
+      attributed: DataFrame)
 
-  /** Marker text of the in-plan currency guard; [[diagnosed]] keys on it. */
-  private val CurrencyGuardMsg = "currency invariant violated"
-
-  /** H5+M1+H6 — the one-logical-plan merge over the request relation:
-    * currency guard → first-wins on (symbol, ts) → close_unadj cleared;
-    * attribution spans from the winning rows.
+  /** M1 over one request relation, with per-instrument semantics
+    * (download.rs:130-213 isolation); `groups` carries one entry per
+    * instrument, its ordered providers, already past [[currencyViolations]]:
     *
-    * The currency invariant (history.rs:205-274: no symbol may mix
-    * currencies across contributing providers, checked BEFORE the merge
-    * hides rows) is enforced LAZILY, in-plan: a window min/max over
-    * `symbol` feeds a `raise_error` guard consumed by a filter. Both
-    * windows and the attribution sort run in the relation's single
-    * partition, so building the merge runs no job and collecting it runs
-    * one. On violation the consuming action throws; callers run actions
-    * through [[diagnosed]] to map the failure to the reference's typed
-    * error with the deviating provider named.
-    */
-  def merge(
-      spark: SparkSession,
-      results: Seq[ProviderHistory],
-      flags: DataFrame => DataFrame = identity): Either[BorsaError, MergedHistory] = {
-    require(results.nonEmpty, "merge of zero histories")
-    val relation = requestFrame(spark, Seq(results), flags).drop(MultiCol, MetaGroupCol)
-    val actions = actionsFrame(spark, results)
-    // Single source passes through UNMERGED (history.rs:207-210
-    // merge_history_or_tag_connector_error short-circuits len==1): no
-    // first-wins, no currency guard, and crucially close_unadj raw-close
-    // provenance is PRESERVED when the provider's plan ran no resample
-    // (borsa/tests/router/history/router_history_raw_close.rs).
-    if (results.sizeIs == 1) {
-      val r = results.head
-      val attribution = Attribution.spans(relation, Seq("symbol"), "ts")
-      return Right(MergedHistory(
-        relation.drop(Prio, "provider"), attribution, r.adjusted, r.meta, actions, relation))
-    }
-
-    val wSym = org.apache.spark.sql.expressions.Window.partitionBy("symbol")
-    val guarded = relation
-      .withColumn("__cur_guard",
-        when(min(col("currency")).over(wSym) =!= max(col("currency")).over(wSym),
-          raise_error(concat(lit(s"$CurrencyGuardMsg for symbol "), col("symbol")))))
-      .where(col("__cur_guard").isNull)
-      .drop("__cur_guard")
-
-    val merged = Merge.firstWins(guarded, Seq("symbol", "ts"), Prio)
-      .withColumn("close_unadj", lit(null).cast("decimal(38,9)")) // merge.rs:93-95
-    val attribution = Attribution.spans(merged, Seq("symbol"), "ts")
-
-    // M1 action handling (merge.rs:104-109): concatenate all contributors'
-    // actions, then M3 canonical dedup; adjusted flag + meta algebra
-    // (merge.rs:32-37,76-102)
-    Right(MergedHistory(merged.drop(Prio, "provider"), attribution,
-      mergedAdjusted(results), mergedMeta(results),
-      actions.map(Merge.dedupActionsUnsorted(_)), relation))
-  }
-
-  /** H8 bulk data plane with PER-INSTRUMENT merge semantics (download.rs:
-    * 130-213 isolation) over one request relation — `groups` carries one
-    * entry per instrument (its ordered surviving providers):
+    *  - an instrument with a SINGLE provider passes through unmerged
+    *    (history.rs:207-210 short-circuits len==1): no first-wins, actions
+    *    as reported, and close_unadj raw-close provenance preserved unless
+    *    its resample plan ran (router_history_raw_close.rs);
+    *  - instruments with several providers share ONE first-wins window on
+    *    (symbol, ts), so priorities only compete within their own symbol;
+    *    close_unadj is cleared (merge.rs:93-95) and their actions are
+    *    concatenated and deduped (merge.rs:104-109, M3).
     *
-    *  - instruments with a SINGLE contributing provider take the
-    *    single-source short-circuit (history.rs:207-210): no first-wins,
-    *    no currency check, close_unadj raw-close provenance preserved
-    *    unless their resample plan ran — exactly what `history` on the
-    *    same instrument would produce;
-    *  - instruments with several providers share ONE first-wins merge
-    *    (priorities only compete within their own symbol);
-    *  - a currency violation inside one instrument becomes a WARNING and
-    *    drops that symbol, instead of aborting the whole batch the way
-    *    `merge`'s strict in-plan guard must for single-instrument history.
-    *
-    * The per-instrument isolation contract needs the violating symbols
-    * while the warnings are built, so the violation check is one eager
-    * aggregate (≤ providers × symbols rows) over the multi-provider rows of
-    * the relation: one job with one task. The reference materializes every
-    * instrument here; the data plane itself stays one lazy single-partition
-    * plan.
-    *
-    * Returns the merged history plus per-symbol currency warnings. Its
-    * candles keep `__meta_grp`, the instrument's index in
-    * [[metaGroups]]`(groups)`, for the caller's per-meta final resample.
+    * Every window runs in the relation's single partition, so building the
+    * merge runs no Spark job and collecting it runs one.
     */
   def mergeGrouped(
       spark: SparkSession,
       groups: Seq[Seq[ProviderHistory]],
-      flags: DataFrame => DataFrame = identity): Either[BorsaError, (MergedHistory, Seq[BorsaError])] = {
+      flags: DataFrame => DataFrame = identity): MergedHistory = {
     require(groups.nonEmpty && groups.forall(_.nonEmpty), "mergeGrouped of zero histories")
-    val relation = requestFrame(spark, groups, flags)
     val hasSingles = groups.exists(_.sizeIs == 1)
     val hasMulti = groups.exists(_.sizeIs > 1)
-
-    val (multiFrame, violations) =
-      if (!hasMulti) (None, Seq.empty[(String, BorsaError)])
-      else {
-        val multi = if (hasSingles) relation.where(col(MultiCol)) else relation
-        val viol = currencyViolations(multi)
-        val clean =
-          if (viol.isEmpty) multi
-          else multi.filter(!col("symbol").isin(viol.map(_._1): _*))
-        val merged = Merge.firstWins(clean, Seq("symbol", "ts"), Prio)
-          .withColumn("close_unadj", lit(null).cast("decimal(38,9)")) // merge.rs:93-95
-        (Some(merged), viol)
-      }
-    val singleFrame =
-      if (!hasSingles) None
-      else Some(if (hasMulti) relation.where(!col(MultiCol)) else relation)
-
-    val combined = (singleFrame ++ multiFrame).reduce(_ unionByName _)
-    val attribution = Attribution.spans(combined, Seq("symbol"), "ts")
-    val candles = combined.drop(Prio, "provider", MultiCol)
-
-    val all = groups.flatten
-    val violSyms = violations.map(_._1)
-    val mergedActions = actionsFrame(spark, all).map { acts =>
-      val deduped = Merge.dedupActionsUnsorted(acts)
-      // a violating instrument contributes nothing — not even actions
-      // (reference: the whole instrument errored into warnings)
-      if (violSyms.isEmpty) deduped else deduped.filter(!col("symbol").isin(violSyms: _*))
+    // single-provider rows as they are, unioned with `merge` of the
+    // multi-provider rows
+    def perInstrument(df: DataFrame)(merge: DataFrame => DataFrame): DataFrame = {
+      val singles = Option.when(hasSingles)(if (hasMulti) df.where(!col(MultiCol)) else df)
+      val multi = Option.when(hasMulti)(merge(if (hasSingles) df.where(col(MultiCol)) else df))
+      (singles ++ multi).reduce(_ unionByName _).drop(MultiCol)
     }
-
-    val warnings = violations.map { case (sym, e) => BorsaError.Connector(sym, e) }
-    Right((MergedHistory(candles, attribution, mergedAdjusted(all), mergedMeta(all),
-      mergedActions, relation), warnings))
+    val merged = perInstrument(requestFrame(spark, groups, flags)) { multi =>
+      Merge.firstWins(multi, Seq("symbol", "ts"), Prio)
+        .withColumn("close_unadj", lit(null).cast("decimal(38,9)")) // merge.rs:93-95
+    }.drop(Prio)
+    val actions = actionsFrame(spark, groups).map(perInstrument(_)(Merge.dedupActionsUnsorted(_)))
+    MergedHistory(merged.drop("provider"), groups.forall(mergedAdjusted),
+      groups.flatMap(mergedMeta).headOption, actions, merged)
   }
-
-  /** ONE combined aggregation over a request relation keyed by (provider,
-    * priority, symbol) — its output is tiny (≤ providers × symbols rows),
-    * so the blame logic runs driver-side. Shared by [[diagnoseCurrency]]
-    * (history failure path) and [[currencyViolations]] (download isolation
-    * path), each over the relation its merge read.
-    */
-  private def currencyStats(relation: DataFrame): Array[(String, Int, String, Seq[String])] =
-    relation
-      .groupBy("provider", Prio, "symbol")
-      .agg(collect_set(col("currency")).as("curs"))
-      .collect()
-      .map(r => (r.getAs[String]("provider"), r.getAs[Int](Prio),
-        r.getAs[String]("symbol"), r.getSeq[String](3).sorted))
-
-  /** Reference currency for a symbol's blame pass: the highest-priority
-    * provider that REPORTED one. `collect_set` skips nulls, so a
-    * top-priority provider with all-null currencies must not mask a
-    * lower-priority USD-vs-EUR mix (the in-plan guard's min/max ignores
-    * nulls the same way).
-    */
-  private def refCurrencyOf(rows: Seq[(String, Int, String, Seq[String])]): Option[String] =
-    rows.sortBy(_._2).flatMap(_._4.headOption).headOption
-
-  /** H5 failure-path diagnosis (history.rs:205-274): run only AFTER the
-    * in-plan guard aborted an action. The blame logic:
-    * a provider mixing currencies within its own (symbol) is blamed first;
-    * otherwise the lowest-priority provider whose currency deviates from
-    * the top-priority provider's reference currency.
-    */
-  def diagnoseCurrency(relation: DataFrame): Option[BorsaError] = {
-    val stats = currencyStats(relation)
-
-    // (a) provider-internal violation
-    stats.filter(_._4.length > 1).sortBy(s => (s._2, s._3)).headOption match {
-      case Some((p, _, _, _)) =>
-        return Some(BorsaError.Connector(p, BorsaError.InconsistentCurrencyData))
-      case None => ()
-    }
-    // (b) cross-provider deviation from the reference currency (the
-    // highest-priority provider that reported one)
-    val bySymbol = stats.groupBy(_._3)
-    bySymbol.toSeq.sortBy(_._1).flatMap { case (_, rows) =>
-      val ref = refCurrencyOf(rows.toSeq)
-      rows.sortBy(_._2).find(r => ref.exists(c => r._4.exists(_ != c)))
-    }.sortBy(_._2).headOption.map { case (p, _, _, _) =>
-      BorsaError.Connector(p, BorsaError.InconsistentCurrencyData)
-    }
-  }
-
-  /** Per-SYMBOL currency diagnosis for the bulk path: every violating
-    * symbol mapped to its blamed typed error (same blame order as
-    * [[diagnoseCurrency]], scoped within the symbol: provider-internal
-    * mix first, else the lowest-priority provider deviating from the
-    * top-priority provider's reference currency).
-    */
-  def currencyViolations(relation: DataFrame): Seq[(String, BorsaError)] = {
-    val stats = currencyStats(relation)
-    stats.groupBy(_._3).toSeq.sortBy(_._1).flatMap { case (sym, rows) =>
-      val internal = rows.filter(_._4.length > 1).sortBy(_._2).headOption
-      val blamed = internal.orElse {
-        val ref = refCurrencyOf(rows.toSeq)
-        rows.sortBy(_._2).find(r => ref.exists(c => r._4.exists(_ != c)))
-      }
-      blamed.map { case (p, _, _, _) =>
-        sym -> BorsaError.Connector(p, BorsaError.InconsistentCurrencyData)
-      }
-    }
-  }
-
-  /** Run a Spark action over a merged plan, mapping an in-plan currency
-    * guard failure to the reference's typed error (with the deviating
-    * provider identified by the one-pass [[diagnoseCurrency]] over the
-    * merge's request relation).
-    */
-  def diagnosed[T](relation: DataFrame)(action: => T): Either[BorsaError, T] =
-    try Right(action) catch {
-      case t: Throwable if causeChain(t).exists(e =>
-          Option(e.getMessage).exists(_.contains(CurrencyGuardMsg))) =>
-        Left(diagnoseCurrency(relation)
-          .getOrElse(BorsaError.Data(CurrencyGuardMsg)))
-    }
-
-  private def causeChain(t: Throwable): Seq[Throwable] =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16).toSeq
 
   /** H7 `apply_final_resample` (history.rs:636-664): forced daily/weekly, or
     * auto-daily when the series is subdaily; clears close_unadj whenever a

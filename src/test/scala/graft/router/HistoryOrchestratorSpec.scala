@@ -251,13 +251,15 @@ class HistoryOrchestratorSpec extends SparkSpec {
     }
     val usd = fix("usd_prov", "USD")
     val eur = fix("eur_prov", "EUR")
-    val Right(res) = history(spark, inst, req, Seq(usd, eur),
-      Policy.ProviderPolicy().withGlobal(Seq("usd_prov", "eur_prov")))
-    // the lazy guard aborts the action; HistoryResult.collect maps it
-    res.collect(res.candles.count()) match {
+    // the check runs on the fetched records: the call itself returns the
+    // blamed error, and no Spark job runs
+    val (mixed, jobs) = jobsDuring(history(spark, inst, req, Seq(usd, eur),
+      Policy.ProviderPolicy().withGlobal(Seq("usd_prov", "eur_prov"))))
+    mixed match {
       case Left(BorsaError.Connector("eur_prov", BorsaError.InconsistentCurrencyData)) => ()
       case other => fail(s"expected eur_prov diagnosed, got $other")
     }
+    assert(jobs == 0, s"a mixed-currency history ran $jobs jobs")
     // clean results pass actions through unchanged
     val Right(clean) = history(spark, inst, req, Seq(usd))
     assert(clean.collect(clean.candles.count()) == Right(3L))
@@ -322,20 +324,53 @@ class HistoryOrchestratorSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("H8 a 50-instrument × 3-provider download is one candle leaf and at most 2 jobs") {
+  test("H8 a 50-instrument × 3-provider download is one candle leaf, built with no job and collected in one") {
     val provs = Seq("pa", "pb", "pc").map(new MockConnector(_))
     val insts = (1 to 50).map(i => Instrument(Symbol(f"S$i%02d"), None, AssetKind.Equity))
-    val ((res, rows), jobs) = jobsDuring {
-      val Right(res) = download(spark, insts, req, provs,
-        Policy.ProviderPolicy().withGlobal(Seq("pa", "pb", "pc")))
-      (res, res.collect(res.candles.collect()))
-    }
+    val (Right(res), callJobs) = jobsDuring(download(spark, insts, req, provs,
+      Policy.ProviderPolicy().withGlobal(Seq("pa", "pb", "pc"))))
+    val (rows, collectJobs) = jobsDuring(res.collect(res.candles.collect()))
     assert(rows.map(_.length) == Right(50 * 10))
     val optimized = res.candles.queryExecution.optimizedPlan
     assert(optimized.collectLeaves().size == 1,
       s"expected one candle relation, got ${optimized.collectLeaves().size} leaves")
-    // the currency-stats aggregate and the collect, one job each
-    assert(jobs <= 2, s"download + collect ran $jobs jobs")
+    // the currency check reads the fetched records, so the call runs no
+    // job; the collect is the one job
+    assert(callJobs == 0, s"download ran $callJobs jobs")
+    assert(collectJobs == 1, s"collect ran $collectJobs jobs")
+  }
+
+  test("history(inst) equals download(Seq(inst)): candles, actions, attribution, adjusted, meta, warnings") {
+    import graft.core.Model.Action
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def same(label: String, connectors: Seq[MockConnector], r: HistoryRequest = req,
+        config: Config = Config()): Unit = {
+      val policy = Policy.ProviderPolicy().withGlobal(connectors.map(_.name))
+      val Right(h) = history(spark, inst, r, connectors, policy, config)
+      val Right(d) = download(spark, Seq(inst), r, connectors, policy, config)
+      assert(rows(h.candles) == rows(d.candles), label)
+      assert(h.actions.map(rows) == d.actions.map(rows), label)
+      assert(rows(h.attribution) == rows(d.attribution), label)
+      assert((h.adjusted, h.meta, h.warnings) == (d.adjusted, d.meta, d.warnings), label)
+    }
+    same("one provider with close_unadj", Seq(new MockConnector("solo",
+      MockConnector.Script(closeUnadjDelta = Some(BigDecimal("0.25"))))))
+    same("two overlapping providers", Seq(
+      new MockConnector("short", MockConnector.Script(maxCandles = 6)),
+      new MockConnector("full"),
+      new MockConnector("down", MockConnector.Script(
+        behaviors = Map("history" -> MockConnector.Fail(BorsaError.Data("boom")))))))
+    same("two providers on different resample plans", Seq(
+      new MockConnector("daily", MockConnector.Script(
+        supportedIntervals = Seq(Interval.D1), maxCandles = 5)),
+      new MockConnector("hourly", MockConnector.Script(supportedIntervals = Seq(Interval.I1h)))))
+    val div = Action("", 1704067200L, "dividend", Some(BigDecimal(1)), Some("USD"), None, None)
+    same("one provider reporting the same dividend twice", Seq(new MockConnector("dup",
+      MockConnector.Script(actions = Seq(div, div)))))
+    same("an AutoDaily intraday series", Seq(new MockConnector("h",
+      MockConnector.Script(supportedIntervals = Seq(Interval.I1h)))),
+      HistoryRequest(Interval.I1h, Some(0L), Some(2L * 86400), None),
+      Config(finalResample = HistoryRouter.FinalResample.AutoDaily))
   }
 
   test("same-shape histories with different symbols and provider counts compile no new code") {

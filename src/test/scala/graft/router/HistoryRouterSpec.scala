@@ -92,25 +92,23 @@ class HistoryRouterSpec extends SparkSpec {
   test("merge: first-wins by priority, attribution spans, flags (M1+H6)") {
     val a = ProviderHistory("pa", 0, adjusted = true, None, None, candles("pa", n = 2))
     val b = ProviderHistory("pb", 1, adjusted = true, None, None, candles("pb", n = 3))
-    val Right(m) = merge(spark, Seq(a, b))
+    val m = mergeGrouped(spark, Seq(Seq(a, b)))
     val rows = m.candles.orderBy("ts").collect()
     assert(rows.length == 3)
     // ts 0,1 from pa (priority 0), ts 2 only in pb
-    val attr = m.attribution.collect()
+    val attr = graft.timeseries.Attribution.spans(m.attributed, Seq("symbol"), "ts").collect()
     assert(attr.map(r => (r.getAs[String]("provider"), r.getAs[Long]("n_points"))).toSeq
       == Seq(("pa", 2L), ("pb", 1L)))
     assert(m.adjusted)
   }
 
-  test("H5 mixed currency: in-plan guard aborts the action; diagnosis names the deviating provider") {
+  test("H5 mixed currency: the record check names the deviating provider") {
     val a = ProviderHistory("pa", 0, adjusted = true, None, None, candles("pa"))
     val b = ProviderHistory("pb", 1, adjusted = true, None, None, candles("pb", currency = "EUR"))
-    // merge() itself is pure plan construction — the violation surfaces
-    // only when an action runs, and diagnosed() maps it to the typed error
-    val Right(m) = merge(spark, Seq(a, b))
-    diagnosed(m.relation)(m.candles.count()) match {
-      case Left(graft.core.Errors.BorsaError.Connector("pb",
-        graft.core.Errors.BorsaError.InconsistentCurrencyData)) => ()
+    // the check reads the fetched records: no plan, no action
+    currencyViolations(Seq(a, b)) match {
+      case Seq(("S", graft.core.Errors.BorsaError.Connector("pb",
+        graft.core.Errors.BorsaError.InconsistentCurrencyData))) => ()
       case other => fail(s"expected pb diagnosed, got $other")
     }
     // provider-INTERNAL violation blames that provider directly, even when
@@ -120,10 +118,9 @@ class HistoryRouterSpec extends SparkSpec {
       Candle("S", 1704153600L, 1, 2, 0, 1, None, Some(1L), "EUR"))
     val c = ProviderHistory("pc", 0, adjusted = true, None, None, mixed)
     val d = ProviderHistory("pd", 1, adjusted = true, None, None, candles("pd"))
-    val Right(m2) = merge(spark, Seq(c, d))
-    diagnosed(m2.relation)(m2.candles.count()) match {
-      case Left(graft.core.Errors.BorsaError.Connector("pc",
-        graft.core.Errors.BorsaError.InconsistentCurrencyData)) => ()
+    currencyViolations(Seq(c, d)) match {
+      case Seq(("S", graft.core.Errors.BorsaError.Connector("pc",
+        graft.core.Errors.BorsaError.InconsistentCurrencyData))) => ()
       case other => fail(s"expected pc diagnosed, got $other")
     }
   }
@@ -138,15 +135,16 @@ class HistoryRouterSpec extends SparkSpec {
     try {
       val a = ProviderHistory("pa", 0, adjusted = true, None, None, candles("pa", n = 2))
       val b = ProviderHistory("pb", 1, adjusted = true, None, None, candles("pb", n = 3))
-      val Right(m) = merge(spark, Seq(a, b))
+      assert(currencyViolations(Seq(a, b)).isEmpty)
+      val m = mergeGrouped(spark, Seq(Seq(a, b)))
       Thread.sleep(300) // let any eagerly-submitted job reach the listener bus
-      assert(jobs.get() == 0, "merge() must be pure plan construction — zero Spark jobs")
+      assert(jobs.get() == 0, "the check and the merge must build no Spark job")
       val before = jobs.get()
       assert(m.candles.collect().length == 3)
       Thread.sleep(300)
-      // the guard window, the first-wins window and the projection all run
-      // in the request relation's single partition: no Exchange, so no
-      // second (shuffle-map) job
+      // the first-wins window and the projection run in the request
+      // relation's single partition: no Exchange, so no second
+      // (shuffle-map) job
       assert(jobs.get() - before == 1, s"collect ran ${jobs.get() - before} jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -196,16 +194,17 @@ class HistoryRouterSpec extends SparkSpec {
     def ph(name: String, prio: Int, cur: String) =
       ProviderHistory(name, prio, adjusted = true, None, None, records(cur))
     def violations(results: Seq[ProviderHistory]) =
-      HistoryRouter.currencyViolations(requestFrame(spark, Seq(results)))
+      HistoryRouter.currencyViolations(results)
     val results = Seq(ph("p0", 0, null), ph("p1", 1, "USD"), ph("p2", 2, "EUR"))
-    // the in-plan guard (min/max ignores nulls) WOULD fire on this data;
-    // the bulk stats pass must agree: reference currency = the first
-    // provider that reported one (p1/USD), deviation blamed on p2
+    // null currencies are ignored, as SQL min/max and collect_set ignore
+    // them: reference currency = the first provider that reported one
+    // (p1/USD), deviation blamed on p2; history and download share this
+    // one check
     violations(results) match {
       case Seq(("A", BorsaError.Connector("p2", BorsaError.InconsistentCurrencyData))) => ()
       case other => fail(s"expected p2 blamed for symbol A, got $other")
     }
-    // clean null-mixed-with-one-currency stays clean (guard parity again)
+    // clean null-mixed-with-one-currency stays clean
     assert(violations(Seq(ph("p0", 0, null), ph("p1", 1, "USD"))).isEmpty)
   }
 }

@@ -119,14 +119,13 @@ class KernelPropsSpec extends SparkSpec {
       val results = Seq(
         ProviderHistory("p0", 0, adjusted = true, None, None, s1),
         ProviderHistory("p1", 1, adjusted = true, None, None, s2))
-      val Right(m) = HistoryRouter.merge(spark, results)
-      HistoryRouter.diagnosed(m.relation)(m.candles.count()) match {
-        case Right(_) => assert(sameCurrency, s"seed=$seed: mixed currencies merged silently")
-        case Left(BorsaError.Connector(p, BorsaError.InconsistentCurrencyData)) =>
+      HistoryRouter.currencyViolations(results) match {
+        case Seq() => assert(sameCurrency, s"seed=$seed: mixed currencies merged silently")
+        case Seq((_, BorsaError.Connector(p, BorsaError.InconsistentCurrencyData))) =>
           assert(!sameCurrency, s"seed=$seed: clean merge aborted")
           // the lower-priority provider deviates from p0's reference currency
           assert(p == "p1", s"seed=$seed: blamed $p")
-        case Left(other) => fail(s"seed=$seed: unexpected error $other")
+        case other => fail(s"seed=$seed: unexpected result $other")
       }
       // the kernel-level analog (reference merge_candles_by_priority
       // checks inline; our C2 invariant composes around the kernel)
