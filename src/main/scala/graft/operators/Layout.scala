@@ -13,7 +13,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - partitionBy(date-ish column): prunes whole directories for time-range
   *    queries (partition pruning happens before IO).
   *  - bucketBy(symbol, N): rows with equal keys land in the same bucket
-  *    file; N chosen so bucket ≈ 100-500 MB at target scale.
+  *    file. The caller states N; the staged stores use the session's
+  *    shuffle partitions (`ShingleStage.sessionBuckets`), so a bucketed
+  *    scan runs one task per core and joins at the session's width.
   *  - sortBy(ts) within buckets: merges/as-of scans read presorted runs.
   */
 object Layout {
@@ -25,7 +27,7 @@ object Layout {
       df: DataFrame,
       table: String,
       bucketCol: String = "symbol",
-      buckets: Int = 32,
+      buckets: Int,
       sortCol: Option[String] = Some("ts")): Unit = {
     val w = df.write.mode(SaveMode.Overwrite).format("parquet")
       .bucketBy(buckets, bucketCol)

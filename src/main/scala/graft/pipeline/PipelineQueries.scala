@@ -1491,40 +1491,62 @@ object PipelineQueries {
 
   /** Every at-rest artifact build (shingle, signature, pair, link and
     * media stores) — the one staging entry point, which Bench runs
-    * outside its timed region — in dependency order with PER-ARTIFACT
-    * wall seconds, the attribution Bench emits as `staging_detail`:
-    * staging is ~half the bench wall as one number otherwise, and an
-    * opaque aggregate lets any round park cost there invisibly (r16
-    * judge, "What's wrong" #2).
-    * An artifact that depends on an earlier one (the band stores read
-    * their signature stores, the pair/truth/blocked stores read the
-    * shingle table) is billed only its OWN build because the dependency
-    * is already staged by its predecessor entry.
+    * outside its timed region — with PER-ARTIFACT wall seconds, the
+    * attribution Bench emits as `staging_detail`: staging is ~half the
+    * bench wall as one number otherwise, and an opaque aggregate lets any
+    * round park cost there invisibly (r16 judge, "What's wrong" #2).
+    *
+    * The 17 builds run concurrently on a pool of `defaultParallelism`
+    * daemon threads: most are independent, and one build alone leaves
+    * the executors mostly idle. A build that reads another store (the
+    * band stores read their signature stores, the pair/truth/blocked
+    * stores read the shingle table) waits for it through
+    * [[ShingleStage]], which builds each store once. Each entry's
+    * seconds are that build's own wall time, so the walls overlap and an
+    * entry includes any wait on a shared dependency; the wall of the
+    * whole staging is the caller's to time. The result keeps the declared
+    * order. The call returns or throws only once every build has ended;
+    * the first failure in declared order is thrown, carrying the later
+    * ones as suppressed.
     */
   def stageAllDetail(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(name: String)(f: => Any): (String, Double) = {
-      val t0 = System.nanoTime()
-      f
-      (name, (System.nanoTime() - t0) / 1e9)
-    }
-    Seq(
-      timed("shingles") { ShingleStage.shingleHashes(s, dir, nearAug(Tables.documents(s, dir))) },
-      timed("sig_store") { sigStoreFor(s, dir) },
-      timed("sig_band_store") { sigBandStoreFor(s, dir) },
-      timed("img_store") { imgStoreFor(s, dir) },
-      timed("img_band_store") { imgBandStoreFor(s, dir) },
-      timed("vec_store") { vecStoreFor(s, dir) },
-      timed("pair_store") { pairStoreFor(s, dir) },
-      timed("truth_store") { truthStoreFor(s, dir) },
-      timed("blocked_store") { blockedStoreFor(s, dir) },
-      timed("sitemap_pages") { sitemapPagesFor(s, dir) },
-      timed("link_store") { linkStoreFor(s, dir) },
-      timed("rank_store") { rankStoreFor(s, dir) },
-      timed("crawled_store") { crawledStoreFor(s, dir) },
-      timed("media_audio") { audioFpMediaStore(s, dir) },
-      timed("media_video_frames") { videoFrameMediaStore(s, dir) },
-      timed("media_raster") { rasterMediaStore(s, dir, withVariants = false) },
-      timed("media_raster_variants") { rasterMediaStore(s, dir, withVariants = true) })
+    val builds: Seq[(String, () => Any)] = Seq(
+      "shingles" -> (() => ShingleStage.shingleHashes(s, dir, nearAug(Tables.documents(s, dir)))),
+      "sig_store" -> (() => sigStoreFor(s, dir)),
+      "sig_band_store" -> (() => sigBandStoreFor(s, dir)),
+      "img_store" -> (() => imgStoreFor(s, dir)),
+      "img_band_store" -> (() => imgBandStoreFor(s, dir)),
+      "vec_store" -> (() => vecStoreFor(s, dir)),
+      "pair_store" -> (() => pairStoreFor(s, dir)),
+      "truth_store" -> (() => truthStoreFor(s, dir)),
+      "blocked_store" -> (() => blockedStoreFor(s, dir)),
+      "sitemap_pages" -> (() => sitemapPagesFor(s, dir)),
+      "link_store" -> (() => linkStoreFor(s, dir)),
+      "rank_store" -> (() => rankStoreFor(s, dir)),
+      "crawled_store" -> (() => crawledStoreFor(s, dir)),
+      "media_audio" -> (() => audioFpMediaStore(s, dir)),
+      "media_video_frames" -> (() => videoFrameMediaStore(s, dir)),
+      "media_raster" -> (() => rasterMediaStore(s, dir, withVariants = false)),
+      "media_raster_variants" -> (() => rasterMediaStore(s, dir, withVariants = true)))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(s.sparkContext.defaultParallelism,
+      r => { val t = new Thread(r, "graft-staging"); t.setDaemon(true); t })
+    try {
+      val running = builds.map { case (name, build) =>
+        pool.submit(() => {
+          val t0 = System.nanoTime()
+          build()
+          (name, (System.nanoTime() - t0) / 1e9)
+        })
+      }
+      val ended = running.map { f =>
+        try Right(f.get())
+        catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) }
+      }
+      ended.collect { case Left(e) => e } match {
+        case Seq() => ended.collect { case Right(t) => t }
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+      }
+    } finally pool.shutdown()
   }
 
   /** The RESOLVED OUTLINK table (doc_id, url, href), staged — link
@@ -1624,11 +1646,13 @@ object PipelineQueries {
     // consumers self-join on sh, and DedupStageSpec's "sh-bucketed
     // blocked store" test PROVES the bucketed form pairs with zero
     // exchanges under a shuffle join), but at the bench SFs the self-join
-    // BROADCASTS, so the bucket partitioning is never used while the
-    // bucketed scan's fixed 32-task layout costs ~0.3 s per execution
-    // (ngram probe: 0.76 s plain vs 1.01 s bucketed min; bench rep-
-    // consistent +0.45 s on both consumers). The staged fixture therefore
-    // keeps the plain layout; the spec pins the mechanism a corpus-scale
+    // BROADCASTS, so the bucket partitioning is never used. That A/B
+    // measured the bucketed scan at a fixed 32 buckets, ~0.3 s per
+    // execution on 4 cores (ngram probe: 0.76 s plain vs 1.01 s bucketed
+    // min; bench rep-consistent +0.45 s on both consumers). Staged stores
+    // now bucket to the session's shuffle partitions, so that cost no
+    // longer applies; the plain layout stays until a new A/B at that
+    // width says otherwise. The spec pins the mechanism a corpus-scale
     // deployment would switch on.
     ShingleStage.stagedTable(s, s"blockedstore_$dir", {
       val sh = ShingleStage.shingleHashes(s, dir, nearAug(Tables.documents(s, dir)))

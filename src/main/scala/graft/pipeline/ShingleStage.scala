@@ -16,6 +16,14 @@ import graft.operators.Layout
   * Staging is keyed by corpus name: the first caller pays the build, later
   * callers (across queries in the same JVM) get `spark.table` reads. A new
   * JVM re-stages with SaveMode.Overwrite — idempotent.
+  *
+  * Bucket count: every bucketed store has the session's shuffle partition
+  * count (`spark.sql.shuffle.partitions`, which `LocalSession` sets to its
+  * cores). A staged store lives one JVM and only that session's plans read
+  * it, so its buckets match the width the scans and joins run at: a
+  * bucketed scan runs one task per bucket, and a join that inherits the
+  * bucketing needs no exchange when the other side shuffles to the same
+  * count.
   */
 object ShingleStage {
 
@@ -58,7 +66,7 @@ object ShingleStage {
   def shingleHashes(spark: SparkSession, corpusKey: String, docs: => DataFrame): DataFrame =
     stage(spark, corpusKey, "graft_shingles_") { name =>
       Layout.writeBucketed(Dedup.shingleHashes(docs), name,
-        bucketCol = "doc_id", buckets = 32, sortCol = None)
+        bucketCol = "doc_id", buckets = sessionBuckets(spark), sortCol = None)
     }
 
   /** Generic one-time staged table for other materialized substrates (the
@@ -93,12 +101,17 @@ object ShingleStage {
       spark: SparkSession,
       key: String,
       bucketCol: String,
-      buckets: Int = 32,
       sortCol: Option[String] = None)(build: => DataFrame): DataFrame =
     stagedWrite(spark, key) { name =>
       Layout.writeBucketed(build, name, bucketCol = bucketCol,
-        buckets = buckets, sortCol = sortCol)
+        buckets = sessionBuckets(spark), sortCol = sortCol)
     }
+
+  /** The bucket count of every staged store: the session's shuffle
+    * partitions (see the header).
+    */
+  def sessionBuckets(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
 
   /** Drop all staged tables (tests). */
   def reset(spark: SparkSession): Unit = {

@@ -846,9 +846,11 @@ object UrlOps {
     * — without that, the store grows linearly in FETCHES instead of
     * URLs) append to the managed bucketed table `table`, and the next
     * epoch's [[freshViaStore]] probe sees them. `buckets` must match
-    * the table's existing bucket spec (the engine refuses loudly on a
+    * the table's existing bucket spec; it defaults to the session's
+    * shuffle partitions, the count every staged store is bucketed to
+    * ([[ShingleStage.sessionBuckets]]). The engine refuses loudly on a
     * mismatch — a mis-bucketed append would silently break the
-    * co-partitioned probe). Each append lands one file per bucket per
+    * co-partitioned probe. Each append lands one file per bucket per
     * epoch; multi-file buckets keep the exchange-free probe but lose
     * the sorted-scan metadata, so long-running crawls compact the
     * store on their maintenance cadence (rewrite sorted — the
@@ -861,10 +863,8 @@ object UrlOps {
     * leave partial bucket files. Nothing in this API enforces it; the
     * crawl loop's epoch cadence is the serialization point.
     */
-  def crawledStoreAppend(
-      newlyCrawled: DataFrame,
-      table: String,
-      buckets: Int = 32,
+  def crawledStoreAppend(newlyCrawled: DataFrame, table: String)(
+      buckets: Int = ShingleStage.sessionBuckets(newlyCrawled.sparkSession),
       urlCol: String = "url"): Unit = {
     require(buckets >= 1, s"crawledStoreAppend: buckets must be positive, got $buckets")
     val spark = newlyCrawled.sparkSession

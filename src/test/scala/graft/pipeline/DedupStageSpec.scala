@@ -550,6 +550,51 @@ class DedupStageSpec extends SparkSpec {
     }
   }
 
+  /** The catalog name of staged store `store` of data dir `d`. */
+  private def stagedName(d: String, store: String): String =
+    if (store == "shingles") "graft_shingles_" + d.replaceAll("[^A-Za-z0-9]", "_")
+    else "graft_staged_" + s"${store}_$d".replaceAll("[^A-Za-z0-9]", "_")
+
+  private def stagingThreads: Seq[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq.filter(_.getName == "graft-staging")
+  }
+
+  test("stageAllDetail: a failing build throws only after the others end; a rerun on full data stages every store at the session's width") {
+    // a data dir without embeddings.parquet: only the vec store fails
+    val partial = java.nio.file.Files.createTempDirectory("graft_stage_partial")
+    val links = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try links.iterator.forEachRemaining { p =>
+      if (p.getFileName.toString != "embeddings.parquet")
+        java.nio.file.Files.createSymbolicLink(partial.resolve(p.getFileName), p)
+    } finally links.close()
+    ShingleStage.reset(spark)
+    val failure = intercept[Exception](PipelineQueries.stageAllDetail(spark, partial.toString))
+    assert(failure.getMessage.contains("embeddings"), failure.getMessage)
+    // every other build had written its store when the call threw
+    val others = Seq("shingles", "sigstore", "sigbands", "imgstore", "imgbands", "pairstore",
+      "truthstore", "blockedstore", "sitemappages", "linkstore", "rankstore", "crawledstore",
+      "audiofp", "videoframes", "raster_false", "raster_true").map(stagedName(partial.toString, _))
+    assert(others.filterNot(spark.catalog.tableExists) == Nil)
+    assert(!spark.catalog.tableExists(stagedName(partial.toString, "vecstore")))
+    stagingThreads.foreach(_.join(10000))
+    assert(stagingThreads.filter(_.isAlive) == Nil, "the staging pool outlived the call")
+
+    ShingleStage.reset(spark)
+    val detail = PipelineQueries.stageAllDetail(spark, dir)
+    assert(detail.map(_._1) == Seq("shingles", "sig_store", "sig_band_store", "img_store",
+      "img_band_store", "vec_store", "pair_store", "truth_store", "blocked_store",
+      "sitemap_pages", "link_store", "rank_store", "crawled_store", "media_audio",
+      "media_video_frames", "media_raster", "media_raster_variants"), "declared order")
+    // every bucketed store has the session's shuffle partitions as buckets
+    val width = spark.sessionState.conf.numShufflePartitions
+    val bucketed = Seq("shingles", "sigbands", "imgbands", "vecstore", "crawledstore")
+      .map(stagedName(dir, _))
+    val buckets = bucketed.map(t => t -> spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).bucketSpec.map(_.numBuckets))
+    assert(buckets == bucketed.map(_ -> Some(width)))
+  }
+
   test("stageAllDetail leaves the session's cache empty (the sitemap entry frame is released)") {
     spark.catalog.clearCache()
     ShingleStage.reset(spark) // force every artifact to build

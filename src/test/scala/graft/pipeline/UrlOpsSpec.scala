@@ -601,7 +601,7 @@ class UrlOpsSpec extends SparkSpec {
       UrlOps.crawledStoreAppend(
         Seq("https://c.com/p/500", "https://fresh.org/x", "https://fresh.org/x",
           "https://c.com/p/1").toDF("url"),
-        "crawled_store_spec", buckets = 8)
+        "crawled_store_spec")(buckets = 8)
       val after = spark.table("crawled_store_spec")
       assert(after.count() == 202,
         s"append must add exactly the two novel urls, got ${after.count()}")
@@ -614,9 +614,33 @@ class UrlOpsSpec extends SparkSpec {
       // the co-partitioned probe
       val mis = intercept[Exception](
         UrlOps.crawledStoreAppend(Seq("https://c.com/p/900").toDF("url"),
-          "crawled_store_spec", buckets = 4))
+          "crawled_store_spec")(buckets = 4))
       assert(mis.getMessage.toLowerCase.contains("bucket"), mis.getMessage)
     } finally spark.sql("DROP TABLE IF EXISTS crawled_store_spec")
+  }
+
+  test("crawledStoreAppend: the default bucket count appends to a staged store; the probe stays bucketed") {
+    // staged the way the crawled store is: bucketed and sorted on url, at
+    // the session's width
+    val key = "spec_crawled_default"
+    val table = "graft_staged_" + key
+    val crawled = (1 to 200).map(i => s"https://c.com/p/$i").toDF("url")
+    ShingleStage.stagedBucketed(spark, key, "url", sortCol = Some("url"))(crawled.distinct())
+    try {
+      UrlOps.crawledStoreAppend(Seq("https://c.com/p/500", "https://c.com/p/1").toDF("url"), table)()
+      assert(spark.table(table).count() == 201)
+      val cands = Seq("https://c.com/p/500", "https://c.com/p/900").toDF("url")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val probed = UrlOps.freshViaStore(cands, spark.table(table))
+        assert(probed.collect().map(_.getString(0)).toSeq == Seq("https://c.com/p/900"))
+        val plan = probed.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1,
+          s"expected ONE exchange (candidates only):\n${plan.take(3000)}")
+        assert(plan.contains("Bucketed: true"), s"store scan must read its buckets:\n${plan.take(3000)}")
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("domainStats: shares sum to ~1e6 and the NULL row stays visible") {
