@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Perceptual audio fingerprinting + content-level audio near-dup — the
   * audio member of the multimodal dedup family ([[ImageHash]] for
@@ -199,11 +198,7 @@ object AudioFingerprint {
           lit(s"audioNearDups: fingerprint format version "), col("fp_version"),
           lit(s" != $FpVersion — rebuild the store (band values of different " +
             "formats land in different ranges; a mixed probe matches garbage)")))))
-    val sub = checked.select(col(idCol), col(fpCol).cast("long").as("__h"))
-      .withColumn("__band", explode(expr(
-        "transform(sequence(0, 3), b -> struct(b as b, shiftright(__h, b * 16) & 65535 as v))")))
-      .select(col(idCol), col("__h"), col("__band.b").as("__b"), col("__band.v").as("__v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sub = ImageHash.hammingBands(checked.select(col(idCol), col(fpCol).cast("long").as("__h")))
     sub.as("x").join(sub.as("y"), Seq("__b", "__v"))
       .where(col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("id1"), col(s"y.$idCol").as("id2"),

@@ -197,9 +197,10 @@ object Dedup {
       dfCap: Long = 0L): DataFrame = {
     // the windowed shingle derivation feeds 5+ plan branches (rare-df scan,
     // both self-join sides, both size lookups); without materialization each
-    // branch rescans and re-sorts — persist it once. Lifecycle: the cache
-    // is released by ContextCleaner when the returned frame is GC'd;
-    // long-lived drivers bound peak cache with spark.catalog.clearCache()
+    // branch rescans and re-sorts — persist it once. Lifecycle: the
+    // session's CacheManager holds the cache until it is unpersisted (the
+    // returned frame cannot know its last consumer), so long-lived drivers
+    // bound peak cache with spark.catalog.clearCache()
     val sh = shingleRows(docs, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ngramJaccardPairsOf(sh, idCol, dfCap)
@@ -369,7 +370,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     // persisted shingle-hash substrate; cache lifecycle as in
-    // [[ngramJaccardPairs]] (ContextCleaner on GC / clearCache())
+    // [[ngramJaccardPairs]] (held until unpersisted / clearCache())
     val sh = shingleHashes(docs, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     minhashNearDupsOf(sh, thresholdPpm, idCol)
@@ -500,20 +501,15 @@ object Dedup {
     *
     * ID-DISJOINTNESS CONTRACT: batch document ids and store cluster ids
     * are nodes of ONE component graph, so they must live in disjoint id
-    * spaces — a batch doc whose id numerically equals an existing
-    * cluster_id would be silently conflated into that cluster. Any
-    * monotone id allocator satisfies this for free (new doc ids are
-    * always above every historical id, and cluster ids are elected
-    * minima of historical ids); `checkIdDisjointness = true` verifies it
-    * with one anti-join count before the main query (a debug-path guard:
-    * one extra driver barrier, so it is opt-in, not the default).
+    * spaces; `checkIdDisjointness = true` verifies it before the election
+    * (see [[incrementalClusterLabels]]).
     *
     * Scale: batch text is scanned once (signature aggregation); the store
     * side reads signatures only — the historical corpus never rescans.
     * CC runs on the near-dup pair graph (batch-sized, not corpus-sized).
-    * The persisted batch-signature intermediate lives until the returned
-    * frame's references are garbage collected (Spark's ContextCleaner
-    * unpersists it); long-lived drivers looping over many corpora should
+    * The persisted batch-signature intermediate stays in the session's
+    * `CacheManager` until it is unpersisted (the session-scoped cache
+    * convention); long-lived drivers looping over many corpora should
     * bound peak cache with `spark.catalog.clearCache()` between rounds —
     * the same lifecycle as [[ngramJaccardPairs]] / [[simhashNearDups]].
     */
@@ -524,19 +520,9 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       checkIdDisjointness: Boolean = false,
-      storeBands: Option[DataFrame] = None): DataFrame = {
-    if (checkIdDisjointness) {
-      val clashes = batch.select(col(idCol).as("cluster_id"))
-        .join(sigStore.select("cluster_id").distinct(), Seq("cluster_id"), "left_semi")
-      val sample = clashes.limit(3).collect().map(_.get(0))
-      require(sample.isEmpty,
-        s"minhashDedupIncremental: batch ids collide with store cluster ids " +
-          s"(e.g. ${sample.mkString(", ")}) — the component graph would conflate " +
-          "them into one cluster; remap one id space first")
-    }
-    minhashDedupIncrementalSigs(batch.select(col(idCol)),
-      minhashSignature(batch, idCol, textCol), sigStore, thresholdPpm, idCol, storeBands)
-  }
+      storeBands: Option[DataFrame] = None): DataFrame =
+    incrementalSigs(batch.select(col(idCol)), minhashSignature(batch, idCol, textCol),
+      sigStore, thresholdPpm, idCol, storeBands, checkIdDisjointness)
 
   /** [[minhashDedupIncremental]] from PRECOMPUTED batch signatures: use
     * when fixed-width SIGNATURES already exist at rest (re-labeling a
@@ -556,7 +542,18 @@ object Dedup {
       sigStore: DataFrame,
       thresholdPpm: Long = 500000L,
       idCol: String = "doc_id",
-      storeBands: Option[DataFrame] = None): DataFrame = {
+      storeBands: Option[DataFrame] = None): DataFrame =
+    incrementalSigs(batchIds, batchSigs, sigStore, thresholdPpm, idCol, storeBands,
+      checkIdDisjointness = false)
+
+  private def incrementalSigs(
+      batchIds: DataFrame,
+      batchSigs: DataFrame,
+      sigStore: DataFrame,
+      thresholdPpm: Long,
+      idCol: String,
+      storeBands: Option[DataFrame],
+      checkIdDisjointness: Boolean): DataFrame = {
     // feeds the band explode, both sim verifications, and the final label
     // join — persist so the signature derivation runs once. (Measured:
     // the explode+aggregate form beats the scan-side rowSigS expression
@@ -570,16 +567,7 @@ object Dedup {
     val edges = minhashSigPairs(bsig, thresholdPpm, idCol).select("id1", "id2")
       .unionByName(
         matches.select(col(idCol).as("id1"), col("cluster_id").as("id2")).distinct())
-    val comps = connectedComponentsAuto(edges)
-    val storeClusters = sigStore.select("cluster_id").distinct()
-    val storeMin = comps.join(storeClusters, comps("id") === storeClusters("cluster_id"))
-      .groupBy("comp").agg(min(col("cluster_id")).as("__store_min"))
-    batchIds.select(col(idCol))
-      .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .join(storeMin, Seq("comp"), "left")
-      .select(col(idCol),
-        coalesce(col("__store_min"), col("comp"), col(idCol)).as("cluster_id"),
-        col("__store_min").isNull.as("is_novel"))
+    incrementalClusterLabels(batchIds, edges, sigStore, idCol, checkIdDisjointness)
   }
 
   /** The APPEND step that closes the incremental near-dup loop: the new
@@ -663,7 +651,7 @@ object Dedup {
     * pipeline should keep the BEST copy, not the one that happened to get
     * the lowest id. Keeper per cluster = highest `scoreCol`, ties to the
     * lower id (total order — identical corpora elect identical keepers).
-    * Input is any (idCol, cluster_id) labeling ([[connectedComponents]]
+    * Input is any (idCol, cluster_id) labeling ([[clusterLabels]]
     * output, [[minhashDedupIncremental]], semanticDedup) joined with a
     * per-doc score; output adds `keeper_id` and `is_keeper`.
     *
@@ -904,7 +892,8 @@ object Dedup {
     */
   def simhashNearDups(docs: DataFrame, maxDist: Int = 3, idCol: String = "doc_id"): DataFrame = {
     // persisted fingerprint substrate feeding both self-join sides; cache
-    // lifecycle as in [[ngramJaccardPairs]] (ContextCleaner / clearCache())
+    // lifecycle as in [[ngramJaccardPairs]] (held until unpersisted /
+    // clearCache())
     val sh = simhash(docs, idCol)
       .withColumn("lo", col("simhash") % 65536L)
       .withColumn("hi", expr("simhash DIV 65536"))
@@ -939,22 +928,157 @@ object Dedup {
     * collapse into one {A,B,C} cluster with a single elected keeper before
     * dropping documents, or chained duplicates survive pairwise dedup.
     *
-    * Min-label propagation: each node starts as its own component; every
-    * iteration is ONE distributed pass (edges ⋈ labels → per-node neighbor
-    * min → least(own, neighbor)) and the loop runs until a fixpoint —
-    * O(cluster diameter) iterations. Near-dup graphs are band-generated
-    * cliques and short chains (diameter ≲ a few), so the pathological
-    * O(n)-chain case the large-star/small-star algorithm exists for does
-    * not arise; `maxIters` fail-fasts rather than looping forever if it
-    * ever does. The convergence check is one scalar per iteration on the
-    * driver (inherent to iterative fixpoints) and is FUSED with the
-    * lineage-truncating checkpoint: the per-round `localCheckpoint` is
-    * LAZY (`eager = false`), so the convergence `count()` is the single
-    * job that both materializes the checkpoint blocks and returns the
-    * changed-row count — one driver barrier per round, not two (the
-    * eager-checkpoint-then-count form paid two full driver syncs per
-    * round, and under host contention the second one dominated tail
-    * latency).
+    * Two arms, chosen by the graph's size, with identical output:
+    *
+    *  - SMALL GRAPHS of long ids take a bounded driver union-find: the
+    *    post-threshold near-dup pair graph is tiny relative to the corpus
+    *    (pairs are what dedup REMOVES), and at that size every distributed
+    *    round is pure fixed overhead — a join, an aggregation, a
+    *    checkpoint, and a driver barrier per round just to relabel a few
+    *    thousand nodes (measured: 1.75 s of ext_dedup_minhash_incr's
+    *    4.1 s was distributed CC over 1,308 edges). The probe is
+    *    `take(limit + 1)` on the edge projection — it stops scanning as
+    *    soon as the graph proves big, and `driverEdgeLimit` edges of two
+    *    longs bound driver memory the way the k-centroid collects do.
+    *  - LARGER graphs, or non-long ids, run [[starContract]] distributed:
+    *    it converges in O(log n) rounds on every input, long chains
+    *    included.
+    *
+    * `driverEdgeLimit = 0` forces the distributed arm (the specs compare
+    * the two arms through it).
+    *
+    * NOTE the probe gives this call EAGER-action semantics: the
+    * `take(limit + 1)` runs a Spark job at CALL time (unlike the lazy
+    * operators around it). The (idA, idB) projection is persisted around
+    * the probe so a big graph's partially-computed probe scan is REUSED
+    * by the distributed arm instead of thrown away and recomputed (the
+    * pairs plan upstream is often an expensive band-join); there the
+    * session's `CacheManager` holds it until it is unpersisted (the
+    * session-scoped cache convention), and the small-graph arm
+    * unpersists it at once since its labels are driver-built.
+    *
+    * Returns (id, comp): every node of `pairs` labeled with the minimum id
+    * reachable from it. Nodes absent from `pairs` are not returned —
+    * [[clusterLabels]] labels them as singletons.
+    */
+  def connectedComponents(
+      pairs: DataFrame,
+      idA: String = "id1",
+      idB: String = "id2",
+      driverEdgeLimit: Int = 500000): DataFrame = {
+    import org.apache.spark.sql.types.LongType
+    val longIds = pairs.schema(idA).dataType == LongType &&
+      pairs.schema(idB).dataType == LongType
+    if (!longIds || driverEdgeLimit <= 0) return starContract(pairs, idA, idB)._1
+    val proj = pairs.select(col(idA), col(idB))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = proj.take(driverEdgeLimit + 1)
+    // big graph: the distributed arm reads THROUGH the persisted
+    // projection, so whatever the probe materialized is not re-paid
+    if (rows.length > driverEdgeLimit) return starContract(proj, idA, idB)._1
+    proj.unpersist()
+    // path-compressing union-find with min-id roots
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    rows.foreach { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    parent.keysIterator.map(id => (id, find(id))).toSeq.toDF("id", "comp")
+  }
+
+  /** Cluster election over an id universe: every `idCol` row of
+    * `universe` labeled with the minimum id of its [[connectedComponents]]
+    * component over `pairs` (id1, id2). Rows with no pair — a document too
+    * short to shingle, a vector no neighbour came near — label
+    * themselves, so nothing silently drops out of the election.
+    *
+    * Output (idCol, cluster_id, is_keeper), is_keeper marking the row
+    * whose id names its cluster. A caller that needs no keeper flag drops
+    * it, and Catalyst prunes its expression.
+    */
+  def clusterLabels(universe: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
+    val comps = connectedComponents(pairs)
+    val cluster = coalesce(col("comp"), col(idCol))
+    universe.select(col(idCol))
+      .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
+      .select(col(idCol), cluster.as("cluster_id"), (cluster === col(idCol)).as("is_keeper"))
+  }
+
+  /** The store-min election that closes every incremental near-dup pass
+    * ([[minhashDedupIncremental]], `Similarity.semanticDedupIncremental`):
+    * `edges` (id1, id2) hold the batch's pairs among itself plus its
+    * matches into `store`'s clusters, as (batch id, cluster_id). Each id
+    * of `universe` (the batch) labels with the minimum store cluster id in
+    * its component — a batch document bridging two store clusters merges
+    * them — else its component's minimum id, else itself. `is_novel`
+    * marks a component no store cluster touches. Output (idCol,
+    * cluster_id, is_novel).
+    *
+    * ID-DISJOINTNESS CONTRACT: batch ids and store cluster ids are nodes
+    * of ONE component graph, so they must live in disjoint id spaces — a
+    * batch id numerically equal to an existing cluster_id would be
+    * silently conflated into that cluster. Any monotone id allocator
+    * satisfies this for free (new ids are always above every historical
+    * id, and cluster ids are elected minima of historical ids);
+    * `checkIdDisjointness = true` verifies it with one semi-join before
+    * the election (a debug-path guard: one extra driver barrier, so the
+    * callers leave it off by default).
+    */
+  def incrementalClusterLabels(
+      universe: DataFrame,
+      edges: DataFrame,
+      store: DataFrame,
+      idCol: String,
+      checkIdDisjointness: Boolean): DataFrame = {
+    val storeClusters = store.select("cluster_id").distinct()
+    if (checkIdDisjointness) {
+      val clashes = universe.select(col(idCol).as("cluster_id"))
+        .join(storeClusters, Seq("cluster_id"), "left_semi")
+      val sample = clashes.limit(3).collect().map(_.get(0))
+      require(sample.isEmpty,
+        s"incrementalClusterLabels: batch ids collide with store cluster ids " +
+          s"(e.g. ${sample.mkString(", ")}) — the component graph would conflate " +
+          "them into one cluster; remap one id space first")
+    }
+    val comps = connectedComponents(edges)
+    val storeMin = comps.join(storeClusters, comps("id") === storeClusters("cluster_id"))
+      .groupBy("comp").agg(min(col("cluster_id")).as("__store_min"))
+    universe.select(col(idCol))
+      .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
+      .join(storeMin, Seq("comp"), "left")
+      .select(col(idCol),
+        coalesce(col("__store_min"), col("comp"), col(idCol)).as("cluster_id"),
+        col("__store_min").isNull.as("is_novel"))
+  }
+
+  /** Star-contraction connected components, the distributed arm of
+    * [[connectedComponents]]: alternating large-star / small-star
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC'14):
+    *
+    *  - large-star: every node connects its STRICTLY LARGER neighbors to
+    *    the minimum of its closed neighborhood;
+    *  - small-star: every node connects its smaller-or-equal neighbors
+    *    (and itself) to that minimum.
+    *
+    * Each half-round is one aggregation (per-node neighborhood min) plus
+    * one equi-join, and components contract geometrically, so the
+    * fixpoint arrives in O(log n) rounds even on adversarial LONG CHAINS
+    * (a diameter-d path would need d rounds of min-label propagation). At
+    * the fixpoint the edge set IS the component forest (stars rooted at
+    * component minima) and labels fall out of one final per-node min.
     *
     * FAULT TOLERANCE: per-round state truncates lineage via
     * [[ccCheckpoint]] — `localCheckpoint` by default (blocks pinned to
@@ -965,176 +1089,12 @@ object Dedup {
     * 1000-executor run should use, since losing one executor during a
     * multi-round CC over a 100 TB corpus' pair graph must not restart
     * the whole election. Both modes keep the lazy (`eager = false`)
-    * fused-barrier contract.
+    * fused-barrier contract: each round's convergence probe is the single
+    * job that both materializes the checkpoint and measures progress.
     *
-    * Returns (id, comp): every node of `pairs` labeled with the minimum id
-    * reachable from it. Nodes absent from `pairs` are singletons — callers
-    * union them back (see ext_dedup_clusters).
-    */
-  def connectedComponents(
-      pairs: DataFrame,
-      idA: String = "id1",
-      idB: String = "id2",
-      maxIters: Int = 30): DataFrame = {
-    // lazy checkpoints throughout: each is materialized by the first job
-    // that reads it (the round's convergence count), never by a dedicated
-    // materialization job of its own
-    val edges = ccCheckpoint(
-      pairs.select(col(idA).as("u"), col(idB).as("v"))
-        .unionByName(pairs.select(col(idB).as("u"), col(idA).as("v")))
-        .distinct())
-    var labels = ccCheckpoint(
-      edges.select(col("u").as("id")).distinct()
-        .withColumn("comp", col("id")))
-    var iter = 0
-    var changed = 1L
-    while (changed > 0) {
-      require(iter < maxIters,
-        s"connectedComponents did not converge in $maxIters iterations — " +
-          "component diameter exceeds the near-dup assumption; raise maxIters " +
-          "or switch to connectedComponentsStar (O(log n) rounds on long chains)")
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "u"), "u")
-        .groupBy(col("v").as("id"))
-        .agg(min(col("comp")).as("nmin"))
-      val next = ccCheckpoint(
-        labels.withColumnRenamed("comp", "old")
-          .join(neighborMin, Seq("id"), "left")
-          .select(col("id"), least(col("old"), coalesce(col("nmin"), col("old"))).as("comp"),
-            col("old")))
-      // this count IS the round's materialization: it executes the marked
-      // RDD (caching its blocks, truncating lineage) and measures progress
-      // in the same pass — the fused single barrier
-      changed = next.where(col("comp") =!= col("old")).count()
-      labels = next.drop("old")
-      iter += 1
-    }
-    labels
-  }
-
-  /** [[connectedComponents]] with two adaptive paths wired in:
-    *
-    *  - SMALL GRAPHS take a bounded driver union-find: the post-threshold
-    *    near-dup pair graph is tiny relative to the corpus (pairs are
-    *    what dedup REMOVES), and at that size every distributed min-label
-    *    round is pure fixed overhead — a join, an aggregation, a
-    *    checkpoint, and a driver barrier per round just to relabel a few
-    *    thousand nodes (measured: 1.75 s of ext_dedup_minhash_incr's
-    *    4.1 s was CC over 1,308 edges). The probe is `take(limit + 1)`
-    *    on the long-cast edge projection — it stops scanning as soon as
-    *    the graph proves big, and `driverEdgeLimit` edges of two longs
-    *    bound driver memory the way the k-centroid collects do. Output
-    *    is identical by construction (comp = min reachable id,
-    *    spec-asserted against the distributed path).
-    *  - LARGE graphs (or non-long ids) run min-label for up to
-    *    `minLabelIters` rounds (the cheap distributed path for
-    *    band-generated near-dup graphs, diameter ≲ a few), and if the
-    *    graph turns out adversarial — a component whose diameter exceeds
-    *    the budget — rerun with [[connectedComponentsStar]] instead of
-    *    failing. The fallback restarts from the edges (min-label progress
-    *    is per-node labels, not contracted edges, so nothing transfers),
-    *    which costs at most the budgeted min-label rounds — bounded and
-    *    rare by construction.
-    *
-    * Dispatch is deterministic: the same input takes the same path and
-    * every path yields the same (id, comp = min reachable id) labels.
-    *
-    * NOTE the probe gives this call EAGER-action semantics: the
-    * `take(limit + 1)` runs a Spark job at CALL time (unlike the lazy
-    * operators around it). The (idA, idB) projection is persisted
-    * around the probe so a big graph's partially-computed probe scan is
-    * REUSED by the distributed path instead of thrown away and
-    * recomputed (the pairs plan upstream is often an expensive
-    * band-join); the cache releases with the last reference
-    * (ContextCleaner — the pageRank edge-persist lifecycle), and the
-    * small-graph path unpersists immediately since the labels are
-    * driver-built.
-    */
-  def connectedComponentsAuto(
-      pairs: DataFrame,
-      idA: String = "id1",
-      idB: String = "id2",
-      minLabelIters: Int = 12,
-      starIters: Int = 50,
-      driverEdgeLimit: Int = 500000): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val longIds = pairs.schema(idA).dataType == LongType &&
-      pairs.schema(idB).dataType == LongType
-    if (!longIds || driverEdgeLimit <= 0)
-      return distributedCc(pairs, idA, idB, minLabelIters, starIters)
-    val proj = pairs.select(col(idA), col(idB))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rows = proj.take(driverEdgeLimit + 1)
-    if (rows.length > driverEdgeLimit) {
-      // big graph: the distributed path reads THROUGH the persisted
-      // projection, so whatever the probe materialized is not re-paid
-      distributedCc(proj, idA, idB, minLabelIters, starIters)
-    } else {
-      proj.unpersist()
-      // path-compressing union-find with min-id roots
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      rows.foreach { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        parent.getOrElseUpdate(a, a)
-        parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      parent.keysIterator.map(id => (id, find(id))).toSeq.toDF("id", "comp")
-    }
-  }
-
-  private def distributedCc(
-      pairs: DataFrame, idA: String, idB: String,
-      minLabelIters: Int, starIters: Int): DataFrame =
-    try connectedComponents(pairs, idA, idB, minLabelIters)
-    catch {
-      case e: IllegalArgumentException if e.getMessage != null &&
-          e.getMessage.contains("did not converge") =>
-        connectedComponentsStar(pairs, idA, idB, starIters)
-    }
-
-  /** Star-contraction connected components — the documented upgrade path
-    * for graphs where [[connectedComponents]]' min-label O(diameter)
-    * degrades (adversarial LONG CHAINS: a diameter-d path needs d
-    * min-label rounds but only O(log d) star rounds). Alternating
-    * large-star / small-star contraction (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14):
-    *
-    *  - large-star: every node connects its STRICTLY LARGER neighbors to
-    *    the minimum of its closed neighborhood;
-    *  - small-star: every node connects its smaller-or-equal neighbors
-    *    (and itself) to that minimum.
-    *
-    * Each half-round is one aggregation (per-node neighborhood min) plus
-    * one equi-join — the same distributed shape as a min-label round —
-    * but components contract geometrically, so the fixpoint arrives in
-    * O(log n) rounds. At the fixpoint the edge set IS the component
-    * forest (stars rooted at component minima) and labels fall out of one
-    * final per-node min. Same output contract as [[connectedComponents]]:
-    * (id, comp) for every node of `pairs`, comp = minimum reachable id.
-    *
-    * Keep min-label as the fast path for band-generated near-dup graphs
-    * (diameter ≲ a few, and min-label's per-round constant is smaller);
-    * reach for this when `maxIters` fail-fasts or the graph is adversarial.
-    */
-  def connectedComponentsStar(
-      pairs: DataFrame,
-      idA: String = "id1",
-      idB: String = "id2",
-      maxIters: Int = 50): DataFrame = starContract(pairs, idA, idB, maxIters)._1
-
-  /** [[connectedComponentsStar]] plus the round count (spec-visible so the
-    * O(log n) convergence claim is asserted, not asserted-in-prose).
+    * Returns the [[connectedComponents]] labels plus the round count
+    * (spec-visible, so the O(log n) convergence claim is asserted, not
+    * asserted-in-prose).
     */
   private[pipeline] def starContract(
       pairs: DataFrame,
@@ -1167,9 +1127,9 @@ object Dedup {
       canonical(smaller.unionByName(self))
     }
 
-    // lazy checkpoints (the connectedComponents convention): the round's
-    // first fixpoint probe materializes the marked RDD — no dedicated
-    // materialization job, one fewer driver barrier per round
+    // lazy checkpoints: the round's first fixpoint probe materializes the
+    // marked RDD — no dedicated materialization job, one fewer driver
+    // barrier per round
     val nodes = ccCheckpoint(
       pairs.select(col(idA).as("id"))
         .unionByName(pairs.select(col(idB).as("id")))
@@ -1181,15 +1141,14 @@ object Dedup {
     var done = cur.isEmpty // edgeless input: all singletons
     while (!done) {
       require(iter < maxIters,
-        s"connectedComponentsStar did not converge in $maxIters rounds — " +
+        s"connectedComponents did not converge in $maxIters star rounds — " +
           "this exceeds the O(log n) bound; the input is likely not a static graph")
       val next = ccCheckpoint(smallStar(largeStar(cur)))
       // edge-set fixpoint (label stability alone is not a sound stop for
-      // star contraction), probed as ONE symmetric-difference job — the
-      // same fused-single-barrier convention as min-label's convergence
-      // count: both sides are canonical DISTINCT (lo, hi) sets, so an edge
-      // appearing exactly once in their union lies in exactly one set, and
-      // this count both materializes `next`'s lazy checkpoint and decides
+      // star contraction), probed as ONE symmetric-difference job: both
+      // sides are canonical DISTINCT (lo, hi) sets, so an edge appearing
+      // exactly once in their union lies in exactly one set, and this
+      // count both materializes `next`'s lazy checkpoint and decides
       // convergence in a single driver sync (the former two `except`
       // probes paid two full passes per round)
       done = next.unionByName(cur).groupBy("lo", "hi")
@@ -1197,11 +1156,12 @@ object Dedup {
       cur = next
       iter += 1
     }
-    // fixpoint edges are stars rooted at component minima
-    val starLabels = sym(cur).groupBy("u").agg(min(col("v")).as("nm"))
-      .select(col("u").as("id"), least(col("u"), col("nm")).as("comp"))
-    val labels = nodes.join(starLabels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+    // fixpoint edges are stars rooted at component minima; every node's
+    // self-edge carries the nodes no surviving edge touches (self-loops)
+    val labels = closedMins(sym(cur)
+        .unionByName(nodes.select(col("id").as("u"), col("id").as("v"))))
+      .select(col("u").as("id"), col("m").as("comp"))
     (labels, iter)
   }
 }
+

@@ -303,6 +303,21 @@ object ImageHash {
         "transform(sequence(0, 3), b -> b * 65536 + (shiftright(sh, b * 16) & 65535))")))
       .select("bv", "store_id", "cluster_id", "sh")
 
+  /** The 4×16-bit band explode shared by the Hamming self-joins
+    * ([[imageNearDups]], [[frameSetNearDups]],
+    * `AudioFingerprint.audioNearDups`): one row per (input row, band)
+    * carrying every column of `hashed` (whose 64-bit hash is `__h`) plus
+    * the band index `__b` and its 16-bit value `__v`. Persisted, since both
+    * self-join sides read it.
+    */
+  private[pipeline] def hammingBands(hashed: DataFrame): DataFrame =
+    hashed
+      .withColumn("__band", explode(expr(
+        "transform(sequence(0, 3), b -> struct(b as b, shiftright(__h, b * 16) & 65535 as v))")))
+      .select(hashed.columns.map(col) ++
+        Seq(col("__band.b").as("__b"), col("__band.v").as("__v")): _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
   def imageNearDups(
       hashes: DataFrame,
       maxDist: Int = 3,
@@ -310,11 +325,7 @@ object ImageHash {
       hashCol: String = "dhash"): DataFrame = {
     require(maxDist >= 0 && maxDist <= 3,
       s"imageNearDups: 4×16-bit banding guarantees recall only to distance 3, got $maxDist")
-    val sub = hashes.select(col(idCol), col(hashCol).cast("long").as("__h"))
-      .withColumn("__band", explode(expr(
-        "transform(sequence(0, 3), b -> struct(b as b, shiftright(__h, b * 16) & 65535 as v))")))
-      .select(col(idCol), col("__h"), col("__band.b").as("__b"), col("__band.v").as("__v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sub = hammingBands(hashes.select(col(idCol), col(hashCol).cast("long").as("__h")))
     sub.as("x").join(sub.as("y"), Seq("__b", "__v"))
       .where(col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("id1"), col(s"y.$idCol").as("id2"),
@@ -355,14 +366,8 @@ object ImageHash {
     require(minFramesHit >= 1, s"frameSetNearDups: minFramesHit must be >= 1, got $minFramesHit")
     require(maxDist >= 0 && maxDist <= 3,
       s"frameSetNearDups: 4×16-bit banding guarantees recall only to distance 3, got $maxDist")
-    val sub = frames
-      .select(col(videoCol).as("__vid"), col(frameCol).as("__f"),
-        col(hashCol).cast("long").as("__h"))
-      .withColumn("__band", explode(expr(
-        "transform(sequence(0, 3), b -> struct(b as b, shiftright(__h, b * 16) & 65535 as v))")))
-      .select(col("__vid"), col("__f"), col("__h"),
-        col("__band.b").as("__b"), col("__band.v").as("__v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sub = hammingBands(frames.select(col(videoCol).as("__vid"), col(frameCol).as("__f"),
+      col(hashCol).cast("long").as("__h")))
     sub.as("x").join(sub.as("y"), Seq("__b", "__v"))
       .where(col("x.__vid") < col("y.__vid"))
       .select(col("x.__vid").as("id1"), col("y.__vid").as("id2"),

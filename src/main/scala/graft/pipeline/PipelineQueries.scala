@@ -2266,8 +2266,8 @@ object PipelineQueries {
         .where(col("url").isNotNull).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the filter build reads the crawled store once (eager, the
-      // connectedComponentsAuto discipline); production maintains it at
-      // rest on the store's own cadence
+      // Dedup.connectedComponents probe discipline); production maintains
+      // it at rest on the store's own cadence
       val bloom = UrlOps.crawledUrlBloom(crawled,
         expectedUrls = math.max(crawled.count(), 1L))
       Robots.fetchSchedule(
@@ -2697,10 +2697,8 @@ object PipelineQueries {
       val aug = nearAug(Tables.documents(s, dir))
       // pairs come from the staged pair store (a dedup-pass artifact, built
       // once per corpus); the query pays CC + scoring + the election only
-      val comps = Dedup.connectedComponentsAuto(pairStoreFor(s, dir))
-      val labeled = aug.select("doc_id")
-        .join(comps.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+      val labeled = Dedup.clusterLabels(aug, pairStoreFor(s, dir), "doc_id")
+        .drop("is_keeper")
         .join(TextAnalysis.qualityScore(aug), "doc_id")
       Dedup.electKeepersByScore(labeled, "quality_ppm").orderBy("doc_id")
     }),
@@ -2721,15 +2719,10 @@ object PipelineQueries {
     // the post-pair step that makes dedup safe under chained duplicates
     // ((A,B) + (B,C) ⇒ one {A,B,C} cluster, one keeper)
     "ext_dedup_clusters" -> ((s, dir) => {
-      val comps = Dedup.connectedComponentsAuto(pairStoreFor(s, dir))
       // universe = the CORPUS, not the shingle table: a document too short
       // to shingle (< 3 tokens) has no sh rows but must still surface as a
       // singleton keeper rather than silently vanish from the election
-      nearAug(Tables.documents(s, dir)).select("doc_id")
-        .join(comps.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("comp"), col("doc_id")).as("cluster_id"),
-          (coalesce(col("comp"), col("doc_id")) === col("doc_id")).as("is_keeper"))
+      Dedup.clusterLabels(nearAug(Tables.documents(s, dir)), pairStoreFor(s, dir), "doc_id")
         .orderBy("doc_id")
     }),
 
@@ -2741,10 +2734,8 @@ object PipelineQueries {
     // data-card statistic of any dedup pass (how much corpus mass sits at
     // each duplication multiplicity; sum(n_clusters) = post-dedup size)
     "ext_dedup_stats" -> ((s, dir) => {
-      val comps = Dedup.connectedComponentsAuto(pairStoreFor(s, dir))
-      val labeled = nearAug(Tables.documents(s, dir)).select("doc_id")
-        .join(comps.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+      val labeled = Dedup.clusterLabels(
+        nearAug(Tables.documents(s, dir)), pairStoreFor(s, dir), "doc_id").drop("is_keeper")
       Dedup.clusterStats(labeled).orderBy("cluster_size")
     }),
 
@@ -2752,10 +2743,8 @@ object PipelineQueries {
     // duplicated content trains at its deduplicated rate; weights feed
     // the rate-driven samplers directly
     "ext_dedup_soft" -> ((s, dir) => {
-      val comps = Dedup.connectedComponentsAuto(pairStoreFor(s, dir))
-      val labeled = nearAug(Tables.documents(s, dir)).select("doc_id")
-        .join(comps.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+      val labeled = Dedup.clusterLabels(
+        nearAug(Tables.documents(s, dir)), pairStoreFor(s, dir), "doc_id").drop("is_keeper")
       Dedup.softDedupWeights(labeled).orderBy("doc_id")
     }),
 
@@ -3370,13 +3359,7 @@ object PipelineQueries {
       val media = rasterMediaStore(s, dir, withVariants = true)
       val pairs = ImageHash.imageNearDups(
         ImageHash.imagePhash(media), maxDist = 3)
-      val comps = Dedup.connectedComponentsAuto(pairs)
-      media.select("media_id")
-        .join(comps.withColumnRenamed("id", "media_id"), Seq("media_id"), "left")
-        .select(col("media_id"),
-          coalesce(col("comp"), col("media_id")).as("cluster_id"),
-          (coalesce(col("comp"), col("media_id")) === col("media_id")).as("is_keeper"))
-        .orderBy("media_id")
+      Dedup.clusterLabels(media, pairs, "media_id").orderBy("media_id")
     }),
 
     // INCREMENTAL image dedup: the base corpus is the at-rest fingerprint

@@ -1585,7 +1585,9 @@ object Similarity {
     * Thresholds are deliberately split: batch↔batch pairs use EXACT cosine
     * (floats are in hand — one scan), batch↔store uses the ADC estimate
     * (floats are gone — quantization error is the price of the 64× store).
-    * The ID-DISJOINTNESS contract of the minhash twin applies unchanged.
+    * The ID-DISJOINTNESS contract of [[Dedup.incrementalClusterLabels]]
+    * applies unchanged; its opt-in check covers the batch rows with a
+    * vector, the only ones that enter the component graph.
     */
   def semanticDedupIncremental(
       batch: DataFrame,
@@ -1598,17 +1600,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       checkIdDisjointness: Boolean = false): DataFrame = {
-    if (checkIdDisjointness) {
-      // the minhash twin's opt-in debug guard, same contract: batch ids and
-      // store cluster ids are nodes of ONE component graph
-      val clashes = batch.select(col(idCol).as("cluster_id"))
-        .join(vecStore.select("cluster_id").distinct(), Seq("cluster_id"), "left_semi")
-      val sample = clashes.limit(3).collect().map(_.get(0))
-      require(sample.isEmpty,
-        s"semanticDedupIncremental: batch ids collide with store cluster ids " +
-          s"(e.g. ${sample.mkString(", ")}) — the component graph would conflate " +
-          "them into one cluster; remap one id space first")
-    }
     val b0 = batch.where(col(vecCol).isNotNull)
       .select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .withColumn("__cell", ivfCellOf(col("__v"), centroids))
@@ -1638,16 +1629,8 @@ object Similarity {
     val matches = ivfPqStoreMatches(batch, vecStore, centroids, cbs, nprobe, tauPpm, idCol, vecCol)
     val edges = pairs.unionByName(
       matches.select(col(idCol).as("id1"), col("cluster_id").as("id2")).distinct())
-    val comps = Dedup.connectedComponentsAuto(edges)
-    val storeClusters = vecStore.select("cluster_id").distinct()
-    val storeMin = comps.join(storeClusters, comps("id") === storeClusters("cluster_id"))
-      .groupBy("comp").agg(min(col("cluster_id")).as("__store_min"))
-    batch.where(col(vecCol).isNotNull).select(col(idCol))
-      .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .join(storeMin, Seq("comp"), "left")
-      .select(col(idCol),
-        coalesce(col("__store_min"), col("comp"), col(idCol)).as("cluster_id"),
-        col("__store_min").isNull.as("is_novel"))
+    Dedup.incrementalClusterLabels(batch.where(col(vecCol).isNotNull), edges, vecStore,
+      idCol, checkIdDisjointness)
   }
 
   /** The APPEND step closing the incremental semantic loop: new store rows
@@ -1674,12 +1657,10 @@ object Similarity {
   /** SemDeDup-style semantic deduplication: cluster the corpus into
     * centroid cells, find within-cell pairs with cosine >= `minCos`, and
     * collapse the pair graph into clusters with one elected keeper each
-    * (min-id, via [[Dedup.connectedComponentsAuto]] — near-dup similarity
-    * is not transitive, so (A,B)+(B,C) must merge before dropping
-    * anything; the auto dispatcher keeps min-label as the fast path and
-    * falls back to star contraction if a component's diameter exceeds the
-    * near-dup assumption, so adversarial chains converge in O(log n)
-    * rounds without user code).
+    * (min-id, via [[Dedup.clusterLabels]] — near-dup similarity is not
+    * transitive, so (A,B)+(B,C) must merge before dropping anything; a
+    * graph too big for the driver union-find runs star contraction, so
+    * adversarial chains converge in O(log n) rounds).
     *
     * The cell assignment is the blocking step (the published SemDeDup
     * recipe: k-means the embeddings, then compare ONLY within a cluster):
@@ -1732,11 +1713,6 @@ object Similarity {
         col("x.__cell") === col("y.__cell") && col("x.__id") < col("y.__id"))
       .where(dot(col("x.__v"), col("y.__v")) / (col("x.__nrm") * col("y.__nrm")) >= minCos)
       .select(col("x.__id").as("id1"), col("y.__id").as("id2"))
-    val comps = Dedup.connectedComponentsAuto(pairs)
-    corpus.where(col(vecCol).isNotNull).select(col(idCol))
-      .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("comp"), col(idCol)).as("cluster_id"),
-        (coalesce(col("comp"), col(idCol)) === col(idCol)).as("is_keeper"))
+    Dedup.clusterLabels(corpus.where(col(vecCol).isNotNull), pairs, idCol)
   }
 }

@@ -533,11 +533,22 @@ object TextAnalysis {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     require(evalShingles.nonEmpty, "contaminationInline: evalShingles must be non-empty")
+    val evalMap = evalShingles.map(_ -> 1L).toMap
+    inlineProbe(docs, idCol, textCol)(s => element_at(typedLit(evalMap), s).isNotNull)
+  }
+
+  /** The scan-side body of the two streaming contamination probes: each
+    * document's distinct word 3-shingles (none under 3 tokens), `n_hit` =
+    * how many satisfy `hit`, and the ppm share. Output (idCol, n_sh, n_hit,
+    * contaminated_ppm); `docs` columns that collide with its internal or
+    * output names are refused.
+    */
+  private def inlineProbe(docs: DataFrame, idCol: String, textCol: String)(
+      hit: Column => Column): DataFrame = {
     val reserved = Seq("__toks", "__shs", "n_sh", "n_hit", "contaminated_ppm")
       .filter(docs.columns.contains)
     require(reserved.isEmpty,
       s"docs columns collide with output/internal names (rename them): ${reserved.mkString(", ")}")
-    val evalMap = evalShingles.map(_ -> 1L).toMap
     docs
       .withColumn("__toks", expr(toksS(textCol)))
       .withColumn("__shs", expr(
@@ -546,8 +557,7 @@ object TextAnalysis {
           |    i -> concat_ws(' ', element_at(__toks, i), element_at(__toks, i + 1), element_at(__toks, i + 2))),
           |  array_repeat('', 0)))""".stripMargin.replace("\n", " ")))
       .withColumn("n_sh", size(col("__shs")).cast("long"))
-      .withColumn("n_hit", size(filter(col("__shs"),
-        s => element_at(typedLit(evalMap), s).isNotNull)).cast("long"))
+      .withColumn("n_hit", size(filter(col("__shs"), hit)).cast("long"))
       .select(col(idCol), col("n_sh"), col("n_hit"),
         expr("n_hit * 1000000L DIV greatest(n_sh, 1L)").as("contaminated_ppm"))
   }
@@ -611,27 +621,12 @@ object TextAnalysis {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     require(bfBytes != null && bfBytes.nonEmpty, "contaminationBloomInline: empty filter")
-    val reserved = Seq("__toks", "__shs", "n_sh", "n_hit", "contaminated_ppm")
-      .filter(docs.columns.contains)
-    require(reserved.isEmpty,
-      s"docs columns collide with output/internal names (rename them): ${reserved.mkString(", ")}")
     import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    def mightContain(s: Column): Column = GraftSqlBridge.column(
+    inlineProbe(docs, idCol, textCol)(s => GraftSqlBridge.column(
       BloomFilterMightContain(
         Literal(bfBytes, org.apache.spark.sql.types.BinaryType),
-        GraftSqlBridge.expression(xxhash64(s))))
-    docs
-      .withColumn("__toks", expr(toksS(textCol)))
-      .withColumn("__shs", expr(
-        """array_distinct(IF(size(__toks) >= 3,
-          |  transform(sequence(1, size(__toks) - 2),
-          |    i -> concat_ws(' ', element_at(__toks, i), element_at(__toks, i + 1), element_at(__toks, i + 2))),
-          |  array_repeat('', 0)))""".stripMargin.replace("\n", " ")))
-      .withColumn("n_sh", size(col("__shs")).cast("long"))
-      .withColumn("n_hit", size(filter(col("__shs"), s => mightContain(s))).cast("long"))
-      .select(col(idCol), col("n_sh"), col("n_hit"),
-        expr("n_hit * 1000000L DIV greatest(n_sh, 1L)").as("contaminated_ppm"))
+        GraftSqlBridge.expression(xxhash64(s)))))
   }
 
   /** The eval set's distinct shingles as a driver-side set (the literal

@@ -280,9 +280,10 @@ object UrlOps {
     * of its chain — by POINTER DOUBLING: each round replaces every
     * pointer with its pointer's pointer (`p ← p∘p`, terminals fixed), so
     * a chain of length L resolves in ⌈log2 L⌉ self-joins, not L — the
-    * O(log n) discipline of [[graft.pipeline.Dedup.connectedComponentsStar]]
-    * applied to a functional graph. `maxRounds` = 6 reaches 2^6 = 64
-    * hops, four times a browser's redirect ceiling.
+    * O(log n) discipline of star contraction (the distributed arm of
+    * [[graft.pipeline.Dedup.connectedComponents]]) applied to a
+    * functional graph. `maxRounds` = 6 reaches 2^6 = 64 hops, four times
+    * a browser's redirect ceiling.
     *
     * Convention (cycle-safe by construction, no cycle detection pass):
     * a source whose pointer still has an outgoing edge after the rounds
@@ -294,17 +295,17 @@ object UrlOps {
     * takes the MINIMUM (deterministic; real alias maps are functional
     * and the collision is provenance noise).
     *
-    * Scale shape — ADAPTIVE (the connectedComponentsAuto discipline,
-    * with its eager take-probe semantics): a pointer map at or under
-    * `driverEdgeLimit` rows resolves on the driver (a memo-free walk,
+    * Scale shape — ADAPTIVE (the [[graft.pipeline.Dedup.connectedComponents]]
+    * discipline, with its eager take-probe semantics): a pointer map at or
+    * under `driverEdgeLimit` rows resolves on the driver (a memo-free walk,
     * ≤ limit × 2^maxRounds lookups, identical hop bound and labels) —
     * the distributed form costs `maxRounds` mostly-fixed-overhead
     * shuffle joins that dwarf a small map's actual work; above the
     * limit, the `maxRounds` self-joins run distributed, each round
-    * persisted (the pageRank edge-persist lifecycle — caches release
-    * via ContextCleaner), and the probe's persisted projection is
-    * reused, not re-paid. Alias tables are node-level fixed-width
-    * rows, orders below the document count.
+    * persisted (the pageRank edge-persist lifecycle — the session's
+    * CacheManager holds each until it is unpersisted), and the probe's
+    * persisted projection is reused, not re-paid. Alias tables are
+    * node-level fixed-width rows, orders below the document count.
     *
     * Output: (srcCol, terminal) — every non-self-edge source appears
     * exactly once; terminal NULL per the cycle convention above.
@@ -322,7 +323,7 @@ object UrlOps {
       .select(col(srcCol).as("__s"), col(dstCol).as("__n"))
       .where(col("__s").isNotNull && col("__n").isNotNull && col("__s") =!= col("__n"))
       .groupBy("__s").agg(min("__n").as("__n"))
-    // adaptive dispatch (the connectedComponentsAuto discipline, eager
+    // adaptive dispatch (the Dedup.connectedComponents discipline, eager
     // take-probe semantics): a small alias map resolves on the DRIVER —
     // the distributed form costs maxRounds shuffle joins of mostly
     // fixed overhead, ~3 s of pure scheduling for a 4k-row map — with

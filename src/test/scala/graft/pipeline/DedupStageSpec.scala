@@ -105,10 +105,7 @@ class DedupStageSpec extends SparkSpec {
     // the election's corpus side selects ids only — column pruning must
     // reach the parquet scan (a scan reading text for an id-only join is
     // exactly the waste the staged store exists to avoid)
-    val comps = Dedup.connectedComponents(pairsStaged)
-    val labeled = Tables.documents(spark, dir).select("doc_id")
-      .join(comps.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+    val labeled = Dedup.clusterLabels(Tables.documents(spark, dir), pairsStaged, "doc_id")
     val plan = labeled.queryExecution.executedPlan.toString
     assert(!plan.contains("text:string"),
       s"corpus text leaked into the election scan:\n${plan.take(3000)}")

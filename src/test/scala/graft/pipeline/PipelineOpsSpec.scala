@@ -239,10 +239,26 @@ class PipelineOpsSpec extends SparkSpec {
 
   // ------------------------------------------------------- components
 
+  // reference union-find: node -> minimum id of its component
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(n => n -> find(n)).toMap
+  }
+
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("connectedComponents: chains collapse transitively, min id labels the cluster") {
     val pairs = Seq((2L, 1L), (2L, 3L), (5L, 4L), (9L, 9L)).toDF("id1", "id2")
-    val got = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = labels(Dedup.connectedComponents(pairs))
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 9L -> 9L))
   }
 
@@ -250,20 +266,8 @@ class PipelineOpsSpec extends SparkSpec {
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
       val pairs = Seq.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-      // reference union-find
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-      val want = nodes.map(n => n -> find(n)).toMap
-      val got = Dedup.connectedComponents(pairs.toDF("id1", "id2")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = unionFind(pairs)
+      val got = labels(Dedup.connectedComponents(pairs.toDF("id1", "id2")))
       assert(got == want, s"seed $seed: got $got want $want")
     }
   }
@@ -274,89 +278,132 @@ class PipelineOpsSpec extends SparkSpec {
     val docs = Seq((1L, "only two"), (2L, "a b c d e f"), (3L, "a b c d e f"))
       .toDF("doc_id", "text")
     val sh = Dedup.shingleHashes(docs)
-    val comps = Dedup.connectedComponents(Dedup.minhashNearDupsOf(sh, 200000L))
-    val out = docs.select("doc_id")
-      .join(comps.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select($"doc_id", coalesce($"comp", $"doc_id").as("cluster_id"))
+    val out = Dedup.clusterLabels(docs, Dedup.minhashNearDupsOf(sh, 200000L), "doc_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(1L) == 1L, "short doc must surface as its own singleton keeper")
     assert(out(2L) == 2L && out(3L) == 2L, "exact dups must share a cluster under the min id")
   }
 
-  test("connectedComponents: fails fast instead of looping past maxIters") {
-    // a 6-node chain needs ~3 propagation rounds; maxIters=1 must raise
-    val chain = (0L until 5L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(chain, maxIters = 1)
-    }
-    assert(e.getMessage.contains("converge"))
-  }
-
-  test("connectedComponentsStar: property — equals min-label CC on random pair sets") {
+  test("connectedComponentsStar: property — equals union-find on random pair sets") {
+    // driverEdgeLimit = 0 forces the distributed (star-contraction) arm
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed + 100)
       val pairs = Seq.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-        .toDF("id1", "id2")
-      val want = Dedup.connectedComponents(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val got = Dedup.connectedComponentsStar(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = unionFind(pairs)
+      val got = labels(Dedup.connectedComponents(pairs.toDF("id1", "id2"), driverEdgeLimit = 0))
       assert(got == want, s"seed $seed: got $got want $want")
     }
   }
 
   test("connectedComponentsStar: self-loops and edgeless nodes label as singletons") {
     val pairs = Seq((2L, 1L), (9L, 9L)).toDF("id1", "id2")
-    val got = Dedup.connectedComponentsStar(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = labels(Dedup.connectedComponents(pairs, driverEdgeLimit = 0))
     assert(got == Map(1L -> 1L, 2L -> 1L, 9L -> 9L))
   }
 
-  test("connectedComponentsAuto: small graphs take the driver union-find; == distributed") {
+  test("connectedComponents: small graphs take the driver union-find; == distributed") {
     // well-within-limit graph: the bounded union-find path, same labels
     val pairs = Seq((2L, 1L), (2L, 3L), (5L, 4L)).toDF("id1", "id2")
-    val got = Dedup.connectedComponentsAuto(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
-    // property: driver path == forced-distributed path on random graphs
+    assert(labels(Dedup.connectedComponents(pairs)) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
+    // property: each arm == the reference union-find on random graphs
     // (including duplicate and self edges)
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed + 300)
       val rp = Seq.fill(80)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-        .toDF("id1", "id2")
-      val driver = Dedup.connectedComponentsAuto(rp).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Dedup.connectedComponentsAuto(rp, driverEdgeLimit = 0).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(driver == dist, s"seed $seed: driver $driver vs distributed $dist")
+      val want = unionFind(rp)
+      val driver = labels(Dedup.connectedComponents(rp.toDF("id1", "id2")))
+      val dist = labels(Dedup.connectedComponents(rp.toDF("id1", "id2"), driverEdgeLimit = 0))
+      assert(driver == want && dist == want,
+        s"seed $seed: driver $driver vs distributed $dist vs union-find $want")
     }
   }
 
-  test("connectedComponentsAuto: over the driver limit, min-label runs; long chains fall back to star") {
+  test("connectedComponents: over the driver limit, star labels a 200-node chain 0") {
     // force the distributed arm with driverEdgeLimit=0: a 200-node chain
-    // blows the 12-round min-label budget; auto must fall back to star
-    // contraction and still label everything 0
+    // (diameter 199) must still label everything 0
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val labels = Dedup.connectedComponentsAuto(chain, driverEdgeLimit = 0).collect()
+    val got = Dedup.connectedComponents(chain, driverEdgeLimit = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
-    assert(labels.length == 200 && labels.forall(_._2 == 0L))
+    assert(got.length == 200 && got.forall(_._2 == 0L))
     // a tiny driver limit routes even a 3-edge graph distributed — the
     // probe must not mislabel (take(limit+1) sees only part of the graph)
     val pairs = Seq((2L, 1L), (2L, 3L), (5L, 4L)).toDF("id1", "id2")
-    val got = Dedup.connectedComponentsAuto(pairs, driverEdgeLimit = 1).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
+    assert(labels(Dedup.connectedComponents(pairs, driverEdgeLimit = 1)) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
   }
 
   test("connectedComponentsStar: a 1000-node chain converges in O(log n) rounds") {
-    // the adversarial case min-label exists to avoid: diameter 999 would
-    // need 999 min-label rounds; star contraction must stay logarithmic
+    // the adversarial case for label propagation: diameter 999 would need
+    // 999 min-label rounds; star contraction must stay logarithmic
     val chain = (0L until 999L).map(i => (i, i + 1)).toDF("id1", "id2")
     val (labels, rounds) = Dedup.starContract(chain, "id1", "id2", maxIters = 50)
     assert(rounds <= 2 * 10 + 4, s"expected O(log2 1000) rounds, took $rounds")
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 1000 && got.forall(_._2 == 0L),
       s"all nodes must label 0, got ${got.filter(_._2 != 0L).take(5).toSeq}")
+  }
+
+  // universe: 1 pairless, {2,3,4} a 3-chain, 9 a self-pair only
+  private val electionPairs = Seq((2L, 3L), (3L, 4L), (9L, 9L))
+  private val electionIds = Seq(1L, 2L, 3L, 4L, 9L)
+
+  // the election inputs with long ids (the driver union-find arm) or int
+  // ids (non-long ids take the distributed star arm); rows read back as
+  // longs, and the arm is checked by the checkpointed star state in the plan
+  private def election(intIds: Boolean, pairs: Seq[(Long, Long)])(
+      run: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame): Set[(Long, Long, Boolean)] = {
+    val ids = electionIds.toDF("doc_id")
+    val edges = pairs.toDF("id1", "id2")
+    val cast = (df: org.apache.spark.sql.DataFrame) =>
+      if (intIds) df.select(df.columns.map(c => col(c).cast("int").as(c)): _*) else df
+    val out = run(cast(ids), cast(edges))
+    assert(out.queryExecution.optimizedPlan.toString.contains("LogicalRDD") == intIds,
+      s"intIds=$intIds took the wrong arm:\n${out.queryExecution.optimizedPlan}")
+    out.collect().map(r =>
+      (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue, r.getBoolean(2))).toSet
+  }
+
+  test("clusterLabels: pairless ids, a chain and a self-pair label by min id on both arms") {
+    val uf = unionFind(electionPairs)
+    val want = electionIds.map { i =>
+      val c = uf.getOrElse(i, i)
+      (i, c, c == i)
+    }.toSet
+    assert(want == Set((1L, 1L, true), (2L, 2L, true), (3L, 2L, false), (4L, 2L, false),
+      (9L, 9L, true)))
+    for (intIds <- Seq(false, true)) {
+      val got = election(intIds, electionPairs)(Dedup.clusterLabels(_, _, "doc_id"))
+      assert(got == want, s"intIds=$intIds: got $got")
+    }
+  }
+
+  test("incrementalClusterLabels: a store cluster merging two batch docs wins the election") {
+    // store cluster 0 matches batch docs 1 and 4, bridging {1} and {2,3,4}
+    val edges = electionPairs ++ Seq((1L, 0L), (4L, 0L))
+    val storeIds = Seq(0L, 50L)
+    val uf = unionFind(edges)
+    val want = electionIds.map { i =>
+      val c = uf.getOrElse(i, i)
+      val storeMin = storeIds.filter(s => uf.get(s).contains(c)).minOption
+      (i, storeMin.getOrElse(c), storeMin.isEmpty)
+    }.toSet
+    assert(want == Set((1L, 0L, false), (2L, 0L, false), (3L, 0L, false), (4L, 0L, false),
+      (9L, 9L, true)))
+    for (intIds <- Seq(false, true)) {
+      val store = storeIds.toDF("cluster_id").select(
+        col("cluster_id").cast(if (intIds) "int" else "bigint").as("cluster_id"))
+      val got = election(intIds, edges)(Dedup.incrementalClusterLabels(_, _, store, "doc_id",
+        checkIdDisjointness = true))
+      assert(got == want, s"intIds=$intIds: got $got")
+    }
+    // a batch id equal to a store cluster id is refused when checked
+    val e = intercept[IllegalArgumentException] {
+      Dedup.incrementalClusterLabels(Seq(50L).toDF("doc_id"), edges.toDF("id1", "id2"),
+        storeIds.toDF("cluster_id"), "doc_id", checkIdDisjointness = true)
+    }
+    assert(e.getMessage.contains("collide"))
   }
 
   test("gopherFilter: each rule trips its own reason bit; clean prose keeps") {
@@ -1033,19 +1080,19 @@ class PipelineOpsSpec extends SparkSpec {
   test("semanticDedup: adversarial long chain in one cell converges via the auto CC fallback") {
     // 20 unit vectors 6 degrees apart in one cell: consecutive cosine
     // cos(6°) ≈ 0.9945 >= 0.99, skip-one cos(12°) ≈ 0.978 < 0.99 — a pure
-    // 19-diameter chain. Min-label alone needs ~19 rounds and fail-fasts at
-    // the auto dispatcher's 12-round budget; the star-contraction fallback
-    // (wired through connectedComponentsAuto this round) must engage
-    // inside semanticDedup and still elect one min-id keeper.
+    // 19-diameter chain. Int ids route the components step to the
+    // distributed star-contraction arm (long ids of a graph this small take
+    // the driver union-find), which must converge inside semanticDedup and
+    // still elect one min-id keeper.
     val cents = Seq(Seq(1.0, 0.0)) // single cell: no blocking interference
     val chain = (0 until 20).map { i =>
       val a = math.toRadians(6.0 * i)
-      (i.toLong + 1L, Array(math.cos(a).toFloat, math.sin(a).toFloat))
+      (i + 1, Array(math.cos(a).toFloat, math.sin(a).toFloat))
     }
     val out = Similarity.semanticDedup(chain.toDF("vec_id", "embedding"), cents, 0.99)
       .orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    assert(out == (1L to 20L).map(i => (i, 1L, i == 1L)))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getBoolean(2))).toSeq
+    assert(out == (1 to 20).map(i => (i, 1, i == 1)))
   }
 
   test("semanticDedup: giant-cell guard fails fast before the quadratic pair join") {
@@ -2025,6 +2072,8 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("connectedComponents + star: reliable checkpoint path labels identically") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id1", "id2")
+    // the driver arm checkpoints nothing; the distributed (star) arm,
+    // forced with driverEdgeLimit = 0, checkpoints every round
     val want = Dedup.connectedComponents(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
@@ -2032,17 +2081,15 @@ class PipelineOpsSpec extends SparkSpec {
       // without a checkpoint dir the reliable path must fail fast naming
       // the remedy (Spark's own late error names neither conf nor caller)
       if (spark.sparkContext.getCheckpointDir.isEmpty) {
-        val e = intercept[IllegalArgumentException](Dedup.connectedComponents(pairs))
+        val e = intercept[IllegalArgumentException](
+          Dedup.connectedComponents(pairs, driverEdgeLimit = 0))
         assert(e.getMessage.contains("setCheckpointDir"))
       }
       val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
       spark.sparkContext.setCheckpointDir(dir)
-      val got = Dedup.connectedComponents(pairs).collect()
+      val got = Dedup.connectedComponents(pairs, driverEdgeLimit = 0).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == want)
-      val (starLabels, _) = Dedup.starContract(pairs, "id1", "id2", 50)
-      val gotStar = starLabels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(gotStar == want)
     } finally spark.conf.unset("spark.graft.reliableCheckpoint")
   }
 }

@@ -368,7 +368,7 @@ class UrlOpsSpec extends SparkSpec {
       "x" -> None, "y" -> None, "z" -> None,
       "m" -> Some("t1"))
     // both dispatch arms must produce identical labels (the
-    // connectedComponentsAuto equivalence discipline)
+    // Dedup.connectedComponents equivalence discipline)
     for (limit <- Seq(500000, 0)) {
       val got = UrlOps.resolveAliases(edges, driverEdgeLimit = limit).collect()
         .map(r => r.getString(0) -> Option(r.getString(1))).toMap
