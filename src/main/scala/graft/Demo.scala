@@ -94,7 +94,8 @@ object Demo {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     pipeline.TextAnalysis.tokenStats(docs).show(3)
     pipeline.Dedup.simhash(docs).show(3)
-    println(s"minhash near-dups on clean corpus: ${pipeline.Dedup.minhashNearDups(docs).count()}")
+    val nearDups = pipeline.Dedup.minhashNearDupsOf(pipeline.Dedup.shingleHashes(docs))
+    println(s"minhash near-dups on clean corpus: ${nearDups.count()}")
 
     println("== embedding similarity (native vec_dot expression) ==")
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")

@@ -156,71 +156,32 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact shingle-Jaccard for every candidate pair: join the exploded
-    * shingles of both sides, count the intersection, divide by the union.
-    * jaccard_ppm = |∩| * 1e6 / |∪| in exact integer arithmetic. The O(n²)
-    * work is bounded by the candidate set — this NEVER self-joins the
-    * whole corpus.
+  /** Stop-shingle blocking: the (id, sh) rows whose shingle has document
+    * frequency <= dfCap; dfCap <= 0 disables blocking. Ultra-common
+    * shingles cause quadratic join blowup and never certify near-dups on
+    * their own, so every blocked-quadratic consumer drops them BEFORE
+    * pairing.
     */
-  def jaccardForPairs(
-      docs: DataFrame,
-      pairs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val sh = shingleRows(docs, idCol, textCol)
-    val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
-    val inter = pairs
-      .join(sh.as("x"), col("id1") === col(s"x.$idCol"))
-      .join(sh.as("y"), col("id2") === col(s"y.$idCol") && col("x.sh") === col("y.sh"))
-      .groupBy("id1", "id2")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.withColumnRenamed(idCol, "id1").withColumnRenamed("n_sh", "n1"), "id1")
-      .join(sizes.withColumnRenamed(idCol, "id2").withColumnRenamed("n_sh", "n2"), "id2")
-      .select(col("id1"), col("id2"),
-        expr("n_inter * 1000000 DIV (n1 + n2 - n_inter)").as("jaccard_ppm"))
-  }
+  def dfCapped(sh: DataFrame, dfCap: Long): DataFrame =
+    if (dfCap <= 0) sh
+    else sh.join(
+      sh.groupBy("sh").agg(count(lit(1)).as("df")).where(col("df") <= dfCap).select("sh"), "sh")
 
-  /** All-pairs n-gram Jaccard over the df-capped shingle sets: shingles with
-    * document frequency > dfCap are dropped BEFORE pairing (standard
-    * stop-shingle blocking — ultra-common shingles cause quadratic join
-    * blowup and never certify near-dups on their own), and both the
+  /** All-pairs n-gram Jaccard over the df-capped shingle sets of a
+    * pre-staged (id, sh) shingle table ([[dfCapped]]): both the
     * intersection and the set sizes are computed over the surviving
-    * shingles, so the metric is exactly "Jaccard of the rare-shingle sets".
-    * dfCap <= 0 disables blocking (exact full-set Jaccard). One self-join +
-    * one aggregation — no pair-materialize-then-rejoin.
-    */
-  def ngramJaccardPairs(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      dfCap: Long = 0L): DataFrame = {
-    // the windowed shingle derivation feeds 5+ plan branches (rare-df scan,
-    // both self-join sides, both size lookups); without materialization each
-    // branch rescans and re-sorts — persist it once. Lifecycle: the
-    // session's CacheManager holds the cache until it is unpersisted (the
-    // returned frame cannot know its last consumer), so long-lived drivers
-    // bound peak cache with spark.catalog.clearCache()
-    val sh = shingleRows(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ngramJaccardPairsOf(sh, idCol, dfCap)
-  }
-
-  /** n-gram Jaccard from a pre-staged (id, sh) shingle table — the 100 TB
-    * form: the tokenize→shingle derivation is written ONCE (bucketed by doc
-    * id, see ShingleStage) and every consumer reads the staged rows instead
-    * of re-deriving them per query.
+    * shingles, so the metric is exactly "Jaccard of the rare-shingle sets";
+    * dfCap <= 0 gives exact full-set Jaccard. One self-join + one
+    * aggregation — no pair-materialize-then-rejoin. At 100 TB the
+    * tokenize→shingle derivation is written ONCE (bucketed by doc id, see
+    * ShingleStage) and every consumer reads the staged rows; pass
+    * [[shingleRows]] to derive them per call.
     */
   def ngramJaccardPairsOf(
       sh: DataFrame,
       idCol: String = "doc_id",
       dfCap: Long = 0L): DataFrame = {
-    val blocked =
-      if (dfCap <= 0) sh
-      else {
-        val rare = sh.groupBy("sh").agg(count(lit(1)).as("df")).where(col("df") <= dfCap)
-        sh.join(rare.select("sh"), "sh")
-      }
+    val blocked = dfCapped(sh, dfCap)
     val sizes = blocked.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     val inter = blocked.as("x").join(blocked.as("y"), "sh")
       .where(col(s"x.$idCol") < col(s"y.$idCol"))
@@ -234,9 +195,8 @@ object Dedup {
   }
 
   /** FULL-set exact Jaccard for an EXPLICIT candidate pair list, from a
-    * pre-staged (id, sh) table — the staged-table form of
-    * [[jaccardForPairs]]: the O(n²) work is bounded by the candidate set,
-    * never a corpus self-join. Output (id1, id2, jaccard_ppm) for every
+    * pre-staged (id, sh) table: the O(n²) work is bounded by the candidate
+    * set, never a corpus self-join. Output (id1, id2, jaccard_ppm) for every
     * input pair (pairs sharing no shingle score 0).
     */
   def jaccardForPairsOf(
@@ -274,12 +234,7 @@ object Dedup {
       sh: DataFrame,
       dfCap: Long = 64L,
       idCol: String = "doc_id"): DataFrame = {
-    val blocked =
-      if (dfCap <= 0) sh
-      else {
-        val rare = sh.groupBy("sh").agg(count(lit(1)).as("df")).where(col("df") <= dfCap)
-        sh.join(rare.select("sh"), "sh")
-      }
+    val blocked = dfCapped(sh, dfCap)
     blocked.as("x").join(blocked.as("y"), "sh")
       .where(col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("id1"), col(s"y.$idCol").as("id2"))
@@ -311,12 +266,7 @@ object Dedup {
       thresholdPpm: Long = 500000L,
       dfCap: Long = 64L,
       idCol: String = "doc_id"): DataFrame = {
-    val blocked =
-      if (dfCap <= 0) sh
-      else {
-        val rare = sh.groupBy("sh").agg(count(lit(1)).as("df")).where(col("df") <= dfCap)
-        sh.join(rare.select("sh"), "sh")
-      }
+    val blocked = dfCapped(sh, dfCap)
     val sizes = blocked.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     val inter = blocked.as("x").join(blocked.as("y"), "sh")
       .where(col(s"x.$idCol") < col(s"y.$idCol"))
@@ -360,25 +310,10 @@ object Dedup {
   }
 
   /** MinHash near-dup verification: exact Jaccard is computed ONLY for LSH
-    * candidate pairs, then thresholded. The shingle-hash table is built
-    * once and persisted — it feeds the signature aggregation, the
-    * intersection join, and the size counts.
-    */
-  def minhashNearDups(
-      docs: DataFrame,
-      thresholdPpm: Long = 200000L,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    // persisted shingle-hash substrate; cache lifecycle as in
-    // [[ngramJaccardPairs]] (held until unpersisted / clearCache())
-    val sh = shingleHashes(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    minhashNearDupsOf(sh, thresholdPpm, idCol)
-  }
-
-  /** MinHash near-dups from a pre-staged (id, sh, h) shingle-hash table
-    * (see ShingleStage): when the table is bucketed by doc id, the
-    * signature and size aggregations read it co-located — no exchange.
+    * candidate pairs, then thresholded. Reads a pre-staged (id, sh, h)
+    * shingle-hash table (see ShingleStage): when the table is bucketed by
+    * doc id, the signature and size aggregations read it co-located — no
+    * exchange. Pass [[shingleHashes]] to derive it per call.
     */
   def minhashNearDupsOf(
       sh: DataFrame,
@@ -506,12 +441,15 @@ object Dedup {
     *
     * Scale: batch text is scanned once (signature aggregation); the store
     * side reads signatures only — the historical corpus never rescans.
-    * CC runs on the near-dup pair graph (batch-sized, not corpus-sized).
-    * The persisted batch-signature intermediate stays in the session's
-    * `CacheManager` until it is unpersisted (the session-scoped cache
-    * convention); long-lived drivers looping over many corpora should
-    * bound peak cache with `spark.catalog.clearCache()` between rounds —
-    * the same lifecycle as [[ngramJaccardPairs]] / [[simhashNearDups]].
+    * Deriving the batch signatures from the staged SHINGLE table instead
+    * measured 1.4x slower at sf0.1 (hundreds of exploded substrate rows
+    * per doc vs one text row). CC runs on the near-dup pair graph
+    * (batch-sized, not corpus-sized). The persisted batch-signature
+    * intermediate stays in the session's `CacheManager` until it is
+    * unpersisted (the session-scoped cache convention); long-lived drivers
+    * looping over many corpora should bound peak cache with
+    * `spark.catalog.clearCache()` between rounds — the same lifecycle as
+    * [[simhashNearDups]].
     */
   def minhashDedupIncremental(
       batch: DataFrame,
@@ -520,40 +458,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       checkIdDisjointness: Boolean = false,
-      storeBands: Option[DataFrame] = None): DataFrame =
-    incrementalSigs(batch.select(col(idCol)), minhashSignature(batch, idCol, textCol),
-      sigStore, thresholdPpm, idCol, storeBands, checkIdDisjointness)
-
-  /** [[minhashDedupIncremental]] from PRECOMPUTED batch signatures: use
-    * when fixed-width SIGNATURES already exist at rest (re-labeling a
-    * slice of the signature store, replaying a batch whose sigs were
-    * persisted by [[sigStoreAppend]]) — then the text scan is skipped
-    * outright. Deriving batch sigs from the staged SHINGLE table and
-    * passing them here is NOT a win (measured 1.4x slower at sf0.1:
-    * hundreds of exploded substrate rows per doc vs one text row);
-    * shingle staging pays off only for consumers that need shingle rows.
-    * `batchIds` is the batch's id universe — it may exceed `batchSigs`
-    * (docs under 3 tokens produce no signature but must still surface as
-    * novel singletons).
-    */
-  def minhashDedupIncrementalSigs(
-      batchIds: DataFrame,
-      batchSigs: DataFrame,
-      sigStore: DataFrame,
-      thresholdPpm: Long = 500000L,
-      idCol: String = "doc_id",
-      storeBands: Option[DataFrame] = None): DataFrame =
-    incrementalSigs(batchIds, batchSigs, sigStore, thresholdPpm, idCol, storeBands,
-      checkIdDisjointness = false)
-
-  private def incrementalSigs(
-      batchIds: DataFrame,
-      batchSigs: DataFrame,
-      sigStore: DataFrame,
-      thresholdPpm: Long,
-      idCol: String,
-      storeBands: Option[DataFrame],
-      checkIdDisjointness: Boolean): DataFrame = {
+      storeBands: Option[DataFrame] = None): DataFrame = {
     // feeds the band explode, both sim verifications, and the final label
     // join — persist so the signature derivation runs once. (Measured:
     // the explode+aggregate form beats the scan-side rowSigS expression
@@ -561,13 +466,13 @@ object Dedup {
     // map-side, while the row expression is one large interpreted HOF;
     // rowSigS earns its keep only where a shuffle is illegal, i.e. the
     // stateless streaming projection.)
-    val bsig = batchSigs
+    val bsig = minhashSignature(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val matches = minhashStoreMatches(bsig, sigStore, thresholdPpm, idCol, storeBands)
     val edges = minhashSigPairs(bsig, thresholdPpm, idCol).select("id1", "id2")
       .unionByName(
         matches.select(col(idCol).as("id1"), col("cluster_id").as("id2")).distinct())
-    incrementalClusterLabels(batchIds, edges, sigStore, idCol, checkIdDisjointness)
+    incrementalClusterLabels(batch.select(col(idCol)), edges, sigStore, idCol, checkIdDisjointness)
   }
 
   /** The APPEND step that closes the incremental near-dup loop: the new
@@ -602,7 +507,7 @@ object Dedup {
     * corpus build reports before choosing mixture weights: for every
     * unordered source pair (a, b), how many near-dup pairs straddle the
     * two sources and how similar they are on average. Feed it the pair
-    * list any detector produced ([[minhashNearDups]] jaccard_ppm,
+    * list any detector produced ([[minhashNearDupsOf]] jaccard_ppm,
     * [[minhashSigPairs]] sim_ppm, [[simhashNearDups]] via a renamed dist)
     * plus a (id, source) lookup; rows with a == b count within-source
     * duplication, a != b cross-source contamination (e.g. "how much of
@@ -891,9 +796,10 @@ object Dedup {
     * approximate-recall blocking beyond that — never an all-pairs join).
     */
   def simhashNearDups(docs: DataFrame, maxDist: Int = 3, idCol: String = "doc_id"): DataFrame = {
-    // persisted fingerprint substrate feeding both self-join sides; cache
-    // lifecycle as in [[ngramJaccardPairs]] (held until unpersisted /
-    // clearCache())
+    // persisted fingerprint substrate feeding both self-join sides; the
+    // session's CacheManager holds it until it is unpersisted (the returned
+    // frame cannot know its last consumer), so long-lived drivers bound
+    // peak cache with spark.catalog.clearCache()
     val sh = simhash(docs, idCol)
       .withColumn("lo", col("simhash") % 65536L)
       .withColumn("hi", expr("simhash DIV 65536"))

@@ -1448,7 +1448,7 @@ object PipelineQueries {
       |        FROM itr JOIN sz a ON a.doc_id = itr.id1 JOIN sz b ON b.doc_id = itr.id2)""".stripMargin
 
   /** Jaccard over the df-capped shingle sets (matching
-    * Dedup.ngramJaccardPairs(dfCap)): intersections AND sizes computed on
+    * Dedup.ngramJaccardPairsOf(dfCap)): intersections AND sizes computed on
     * the blocked rows.
     */
   private def blockedJaccardSql(dfCap: Long) =
@@ -1655,10 +1655,8 @@ object PipelineQueries {
     // width says otherwise. The spec pins the mechanism a corpus-scale
     // deployment would switch on.
     ShingleStage.stagedTable(s, s"blockedstore_$dir", {
-      val sh = ShingleStage.shingleHashes(s, dir, nearAug(Tables.documents(s, dir)))
-        .select("doc_id", "sh")
-      val rare = sh.groupBy("sh").agg(count(lit(1)).as("df")).where(col("df") <= 64L)
-      sh.join(rare.select("sh"), "sh")
+      Dedup.dfCapped(ShingleStage.shingleHashes(s, dir, nearAug(Tables.documents(s, dir)))
+        .select("doc_id", "sh"), 64L)
     })
 
   /** The recall audit's exact TRUTH SAMPLE, staged — the deterministic
@@ -2944,18 +2942,9 @@ object PipelineQueries {
       val emb = Tables.embeddings(s, dir)
       val src = emb.filter(col("label") === 0)
       val tgt = emb.filter(col("label") === 1)
-      val exact = Similarity.marginMinedPairs(src, tgt).select("src_id", "tgt_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      def arm(method: String, cents: Seq[Seq[Double]]) = {
-        val celled = Similarity.marginMinedPairsIvf(src, tgt, cents)
-          .select(col("src_id"), col("tgt_id"), lit(true).as("__hit"))
-        exact.join(celled, Seq("src_id", "tgt_id"), "left")
-          .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as("n_hit"),
-            expr("count(__hit) * 1000000 DIV greatest(count(1), 1)").as("recall_ppm"))
-          .select(lit(method).as("method"), col("n_exact"), col("n_hit"), col("recall_ppm"))
-      }
-      arm("ivf", Similarity.defaultCentroids(64, 8))
-        .unionByName(arm("ivf_trained", Similarity.refIvfCentroids))
+      Similarity.knnRecall(Similarity.marginMinedPairs(src, tgt).select("src_id", "tgt_id"), Seq(
+          "ivf" -> Similarity.marginMinedPairsIvf(src, tgt, Similarity.defaultCentroids(64, 8)),
+          "ivf_trained" -> Similarity.marginMinedPairsIvf(src, tgt, Similarity.refIvfCentroids)))
         .orderBy("method")
     }),
 
@@ -2970,7 +2959,6 @@ object PipelineQueries {
       val src = emb.filter(col("label") === 0)
       val tgt = emb.filter(col("label") === 1)
       val exact = Similarity.marginMinedPairs(src, tgt).select("src_id", "tgt_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       def arm(method: String, cents: Seq[Seq[Double]]) =
         Similarity.ivfNprobeSweep(src, tgt, exact, cents)
           .withColumn("method", lit(method))
@@ -3027,15 +3015,11 @@ object PipelineQueries {
 
     // ANN recall report: recall@3 of each approximate index against the
     // exact baseline over the same probe queries — the artifact you watch
-    // when swapping trained centroids/codebooks into a production index.
-    // The exact baseline persists across the three comparisons (it is the
-    // expensive side; the report joins are top-k-output-sized).
+    // when swapping trained centroids/codebooks into a production index
     "ext_knn_recall" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 10)
-      val exact = Similarity.bruteForceKnn(emb, qs, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Seq(
+      Similarity.knnRecall(Similarity.bruteForceKnn(emb, qs, 3).select("query_id", "neighbor_id"), Seq(
         "ivf" -> Similarity.ivfKnn(emb, qs, 3),
         "lsh" -> Similarity.lshKnn(emb, qs, 3),
         "pq" -> Similarity.pqKnn(emb, qs, 3),
@@ -3054,9 +3038,7 @@ object PipelineQueries {
         "ivfpq" -> Similarity.ivfPqKnn(emb, qs, 3,
           Similarity.refIvfCentroids, Similarity.refResidualPqCodebooks, nprobe = 2),
         "ivfpq_full" -> Similarity.ivfPqKnn(emb, qs, 3,
-          Similarity.refIvfCentroids, Similarity.refResidualPqCodebooks, nprobe = 8))
-        .map { case (m, a) => Similarity.knnRecall(exact, a, m) }
-        .reduce(_.unionByName(_))
+          Similarity.refIvfCentroids, Similarity.refResidualPqCodebooks, nprobe = 8)))
         .orderBy("method")
     }),
 
@@ -3069,14 +3051,8 @@ object PipelineQueries {
     "ext_knn_dim_recall" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 10)
-      val exact = Similarity.bruteForceKnn(emb, qs, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       def t(d: Int)(df: org.apache.spark.sql.DataFrame) =
         df.withColumn("embedding", slice(col("embedding"), 1, d))
-      val raw = Seq(8, 16, 32, 64).map { d =>
-        Similarity.knnRecall(exact,
-          Similarity.bruteForceKnn(t(d)(emb), t(d)(qs), 3), f"dim_$d%02d")
-      }
       // the TRAINED-ROTATION arms: the same prefixes taken in the frozen
       // principal basis (Similarity.refRotationPpm) — a raw prefix is an
       // arbitrary coordinate subset, a rotated prefix keeps the
@@ -3085,11 +3061,12 @@ object PipelineQueries {
       val rotEmb = emb.withColumn("embedding",
         Similarity.rotatePpm(col("embedding")))
       val rotQs = rotEmb.filter(col("vec_id") < 10)
-      val rot = Seq(8, 16, 32, 64).map { d =>
-        Similarity.knnRecall(exact,
-          Similarity.bruteForceKnn(t(d)(rotEmb), t(d)(rotQs), 3), f"dim_$d%02d_rot")
-      }
-      (raw ++ rot).reduce(_.unionByName(_)).orderBy("method")
+      val dims = Seq(8, 16, 32, 64)
+      Similarity.knnRecall(Similarity.bruteForceKnn(emb, qs, 3).select("query_id", "neighbor_id"),
+          dims.map(d => f"dim_$d%02d" -> Similarity.bruteForceKnn(t(d)(emb), t(d)(qs), 3)) ++
+            dims.map(d => f"dim_$d%02d_rot" ->
+              Similarity.bruteForceKnn(t(d)(rotEmb), t(d)(rotQs), 3)))
+        .orderBy("method")
     }),
 
     // ROTATED-basis PQ (the OPQ-style composition), framed as the
@@ -3102,15 +3079,11 @@ object PipelineQueries {
     "ext_knn_pq_rot" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 10)
-      val exact = Similarity.bruteForceKnn(emb, qs, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       def rot(df: org.apache.spark.sql.DataFrame) = df.select(col("vec_id"),
         Similarity.rotatePpmLong(col("embedding")).as("embedding"))
-      Similarity.knnRecall(exact,
-          Similarity.pqKnn(emb, qs, 3, Similarity.refPqCodebooks), "pq_trained")
-        .unionByName(Similarity.knnRecall(exact,
-          Similarity.pqKnn(rot(emb), rot(qs), 3, Similarity.refRotPqCodebooks),
-          "pq_rot"))
+      Similarity.knnRecall(Similarity.bruteForceKnn(emb, qs, 3).select("query_id", "neighbor_id"), Seq(
+          "pq_trained" -> Similarity.pqKnn(emb, qs, 3, Similarity.refPqCodebooks),
+          "pq_rot" -> Similarity.pqKnn(rot(emb), rot(qs), 3, Similarity.refRotPqCodebooks)))
         .orderBy("method")
     }),
 
@@ -3795,17 +3768,18 @@ object PipelineQueries {
 
     // END-TO-END corpus build: quality filter → exact dedup → temperature
     // mixture → sequence packing, composed as ONE declarative pipeline the
-    // way a pretraining data build actually runs. Stage boundaries persist
-    // the kept/token frames (each stage's verdict joins back on doc_id, so
-    // an unpersisted tree would re-run the upstream stages once per
-    // consumer — at 100 TB these seams are parquet checkpoints; in-query
-    // the cache serves the same role, lifecycle as stageAllDetail)
+    // way a pretraining data build actually runs. The token frame persists:
+    // the mixture reads it twice (the per-source rates aggregate and the
+    // rate join), and without the cache the query measured 0.70-0.75 →
+    // 0.78-0.84 s noop min at sf0.1 on 4 cores. The kept frame needs no
+    // cache: persisting it alone recovered nothing. At 100 TB this seam is
+    // a parquet checkpoint; in-query the cache plays that role, held for
+    // the session (lifecycle as stageAllDetail)
     "ext_corpus_build" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val kept = docs.join(
-          TextAnalysis.gopherFilter(docs).where(col("keep") === 1L).select("doc_id"),
-          Seq("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        TextAnalysis.gopherFilter(docs).where(col("keep") === 1L).select("doc_id"),
+        Seq("doc_id"))
       val deduped = kept.join(
         Dedup.exactDedup(kept).where(col("is_keeper")).select("doc_id"), Seq("doc_id"))
       val withTok = deduped.select(col("doc_id"), col("source"),

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (`Array[Float]`).
@@ -1134,36 +1135,58 @@ object Similarity {
       .select("query_id", "rank", "neighbor_id", "score")
   }
 
-  /** ANN RECALL REPORT — `recall@k` of an approximate top-k against the
+  /** ANN RECALL REPORT — `recall@k` of each approximate top-k against the
     * exact baseline, the number an operator watches when swapping trained
     * centroids ([[graft.pipeline.KMeans.train]]) or codebooks ([[pqTrain]]) into a 100 TB
     * index: a routing or quantization regression shows up here before it
-    * shows up in downstream quality. One row: (method, n_exact, n_hit,
-    * recall_ppm), where a hit is an exact-neighbor (query_id, neighbor_id)
-    * pair the approximate result also returned (rank-insensitive — the
-    * standard recall@k convention) and recall_ppm is the integer ppm
-    * share.
+    * shows up in downstream quality. One row per arm: (method, n_exact,
+    * n_hit, recall_ppm), where a hit is an exact pair the arm also
+    * returned (rank-insensitive — the standard recall@k convention) and
+    * recall_ppm is the integer ppm share.
     *
-    * Scale shape: both inputs are top-k OUTPUTS (|queries| × k rows —
-    * model-sized next to the corpus), so the join and the single
-    * aggregate are trivial; the cost lives in producing the exact
-    * baseline, which is the one deliberately-quadratic operator in the
-    * family and is therefore run over a SAMPLED query set, never the full
-    * corpus (the ext_knn_* convention: a handful of probe queries).
-    * LEFT join from the exact side: an approximate pair absent from the
-    * baseline (a false neighbor) must lower recall by not matching, not
-    * inflate the denominator.
+    * The pair key is `exact`'s own columns — (query_id, neighbor_id) for
+    * a top-k, (src_id, tgt_id) for mined bitext pairs — and every arm must
+    * carry them. One plan for every arm: each arm's pairs are tagged with
+    * its method as a data column, the exact pairs fan out once per method,
+    * and ONE left join from the exact side plus ONE method-keyed aggregate
+    * score them all, so the exact subtree appears once (nothing is cached
+    * across arms). LEFT join from the exact side: an approximate pair
+    * absent from the baseline (a false neighbor) must lower recall by not
+    * matching, not inflate the denominator.
+    *
+    * Scale shape: both sides are top-k OUTPUTS (|queries| × k rows per
+    * arm — model-sized next to the corpus), so the join and the aggregate
+    * are trivial; the cost lives in producing the exact baseline, which
+    * is the one deliberately-quadratic operator in the family and is
+    * therefore run over a SAMPLED query set, never the full corpus (the
+    * ext_knn_* convention: a handful of probe queries).
     */
-  def knnRecall(exact: DataFrame, approx: DataFrame, method: String): DataFrame =
-    exact.select("query_id", "neighbor_id")
-      .join(approx.select(col("query_id"), col("neighbor_id"), lit(1).as("__hit")),
-        Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as("n_hit"))
-      // greatest: an EMPTY exact baseline (probe set with no neighbors)
-      // reports 0/0 as recall 0, not a NULL that diverges from the
-      // oracle's division-by-zero error
-      .select(lit(method).as("method"), col("n_exact"), col("n_hit"),
+  def knnRecall(exact: DataFrame, arms: Seq[(String, DataFrame)]): DataFrame = {
+    val methods = arms.map(_._1)
+    require(methods.nonEmpty && methods.distinct.size == methods.size,
+      s"knnRecall: arms need distinct method names, got ${methods.mkString(", ")}")
+    val keys = exact.columns.toSeq
+    val hits = arms
+      .map { case (m, a) => a.select(keys.map(col) :+ lit(m).as("method") :+ lit(1).as("__hit"): _*) }
+      .reduce(_.unionByName(_))
+    // one null-key row per method: an EMPTY exact baseline (probe set with
+    // no neighbors) still reports every arm, as 0/0 (null keys never join)
+    val perMethod = exact.sparkSession.createDataFrame(
+        java.util.Arrays.asList(methods.map(Row(_)): _*),
+        StructType(Seq(StructField("method", StringType, nullable = false))))
+      .select(col("method") +: keys.map(k => lit(null).cast(exact.schema(k).dataType).as(k)) :+
+        lit(null).cast("int").as("__exact"): _*)
+    exact.select(keys.map(col) :+ explode(array(methods.map(lit): _*)).as("method") :+
+        lit(1).as("__exact"): _*)
+      .unionByName(perMethod)
+      .join(hits, "method" +: keys, "left")
+      .groupBy("method")
+      .agg(count(col("__exact")).as("n_exact"), count(col("__hit")).as("n_hit"))
+      // greatest: the empty baseline reports 0/0 as recall 0, not a NULL
+      // that diverges from the oracle's division-by-zero error
+      .select(col("method"), col("n_exact"), col("n_hit"),
         expr("n_hit * 1000000 DIV greatest(n_exact, 1)").as("recall_ppm"))
+  }
 
   /** PQ top-k with inline encode (correctness/bench form — production uses
     * [[pqEncode]] once + [[pqKnnOf]] per probe batch).
@@ -1613,10 +1636,6 @@ object Similarity {
                | ' or raise maxCellRows')) as bigint)""".stripMargin)))
         .drop("__csz")
     } else b0
-    // persist: the self-join evaluates BOTH sides (cell assignment, norm,
-    // and the cell-size guard window re-run per side without it) — the
-    // minhash twin's bsig discipline
-    b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // exact-cosine ppm (floor) so the threshold semantics match the store
     // probe's integer compare — for integer tauPpm, floor(c*1e6) >= tau
     // iff c*1e6 >= tau

@@ -21,14 +21,14 @@ class DedupStageSpec extends SparkSpec {
   test("staged minhash near-dups == derive-per-query minhash near-dups") {
     val staged = ShingleStage.shingleHashes(spark, s"$dir#spec", docs)
     val got = rows(Dedup.minhashNearDupsOf(staged, 200000L))
-    val want = rows(Dedup.minhashNearDups(docs, 200000L))
+    val want = rows(Dedup.minhashNearDupsOf(Dedup.shingleHashes(docs), 200000L))
     assert(got == want)
   }
 
   test("staged ngram Jaccard == derive-per-query ngram Jaccard (df-capped)") {
     val staged = ShingleStage.shingleHashes(spark, s"$dir#spec", docs)
     val got = rows(Dedup.ngramJaccardPairsOf(staged.select("doc_id", "sh"), dfCap = 64L))
-    val want = rows(Dedup.ngramJaccardPairs(docs, dfCap = 64L))
+    val want = rows(Dedup.ngramJaccardPairsOf(Dedup.shingleRows(docs), dfCap = 64L))
     assert(got == want)
   }
 
@@ -100,7 +100,8 @@ class DedupStageSpec extends SparkSpec {
     // value-neutrality: CC over the staged pair table == CC over pairs
     // derived fresh from text
     val got = rows(Dedup.connectedComponents(pairsStaged))
-    val want = rows(Dedup.connectedComponents(Dedup.minhashNearDups(docs, 200000L)))
+    val want = rows(Dedup.connectedComponents(
+      Dedup.minhashNearDupsOf(Dedup.shingleHashes(docs), 200000L)))
     assert(got == want, "staged pair store must be a pure optimization")
     // the election's corpus side selects ids only — column pruning must
     // reach the parquet scan (a scan reading text for an id-only join is

@@ -2048,9 +2048,9 @@ class PipelineOpsSpec extends SparkSpec {
     // the residual-coding criterion: at the full probe budget (every cell
     // — isolating quantization quality from routing), residual codes must
     // recall at least as well as the flat trained codebooks
-    val exact = Similarity.bruteForceKnn(emb, qs, 3)
+    val exact = Similarity.bruteForceKnn(emb, qs, 3).select("query_id", "neighbor_id")
     def recallOf(a: org.apache.spark.sql.DataFrame): Long =
-      Similarity.knnRecall(exact, a, "x").head().getLong(3)
+      Similarity.knnRecall(exact, Seq("x" -> a)).head().getLong(3)
     val full = recallOf(Similarity.ivfPqKnn(emb, qs, 3, cents, rcb, nprobe = cents.size))
     val flat = recallOf(Similarity.pqKnn(emb, qs, 3, Similarity.refPqCodebooks))
     assert(full >= flat, s"residual IVFPQ recall $full must be >= flat trained PQ $flat")
