@@ -175,10 +175,10 @@ object AudioFingerprint {
 
   /** Audio near-dup pairs within Hamming distance <= maxDist over the
     * 64-bit fingerprint, blocked by its 4 disjoint 16-bit bands
-    * (pigeonhole-complete to distance 3, enforced — the
-    * [[ImageHash.imageNearDups]] shape and bucket cardinality on the
-    * audio substrate: 65,536 buckets per band, so the banded self-join's
-    * per-bucket candidate sets stay sublinear at corpus scale).
+    * (pigeonhole-complete to distance 3, enforced) — the
+    * [[ImageHash.imageNearDups]] self-join run on the audio substrate,
+    * with its bucket cardinality: 65,536 buckets per band, so the banded
+    * self-join's per-bucket candidate sets stay sublinear at corpus scale.
     * Output (id1, id2, dist), id1 < id2. An input carrying an
     * `fp_version` column is version-checked IN-PLAN against
     * [[FpVersion]] — a store written by an older format fails loudly
@@ -198,12 +198,6 @@ object AudioFingerprint {
           lit(s"audioNearDups: fingerprint format version "), col("fp_version"),
           lit(s" != $FpVersion — rebuild the store (band values of different " +
             "formats land in different ranges; a mixed probe matches garbage)")))))
-    val sub = ImageHash.hammingBands(checked.select(col(idCol), col(fpCol).cast("long").as("__h")))
-    sub.as("x").join(sub.as("y"), Seq("__b", "__v"))
-      .where(col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id1"), col(s"y.$idCol").as("id2"),
-        expr("cast(bit_count(x.__h ^ y.__h) as bigint)").as("dist"))
-      .where(col("dist") <= maxDist)
-      .distinct()
+    ImageHash.imageNearDups(checked, maxDist, idCol, fpCol)
   }
 }

@@ -334,43 +334,6 @@ object Dedup {
       .where(col("jaccard_ppm") >= thresholdPpm)
   }
 
-  /** Near-dup pairs WITHIN a signature table by signature agreement —
-    * the text-free verification used on incremental ingest paths (exact
-    * shingle Jaccard needs both documents' text; signature agreement is
-    * the standard MinHash estimate of it and needs only the signatures).
-    * Candidates come from the usual band join; `sim_ppm` is the exact
-    * integer share of agreeing components. Output (id1, id2, sim_ppm),
-    * id1 < id2, distinct.
-    *
-    * Scale shape: the band join shuffles (id, bandHash) pairs only; the
-    * K-long signature arrays are joined back per surviving CANDIDATE pair
-    * (post-distinct), never carried through the band explosion.
-    */
-  def minhashSigPairs(
-      signatures: DataFrame,
-      thresholdPpm: Long = 500000L,
-      idCol: String = "doc_id"): DataFrame =
-    minhashCandidatesOf(signatures, idCol)
-      .join(signatures.select(col(idCol).as("id1"), col("sig").as("__sx")), "id1")
-      .join(signatures.select(col(idCol).as("id2"), col("sig").as("__sy")), "id2")
-      .withColumn("sim_ppm", expr(sigSimS("__sx", "__sy")))
-      .where(col("sim_ppm") >= thresholdPpm)
-      .select("id1", "id2", "sim_ppm")
-
-  /** Probe a NEW batch's signatures against the persistent signature STORE
-    * — the lookup step of incremental near-dup dedup. The store carries
-    * (idCol, sig, cluster_id): one row per retained historical document
-    * with its near-dup cluster label (for a store that was itself deduped,
-    * cluster_id == the keeper's own id). Returns one row per (batch doc,
-    * matched store doc) whose signature agreement clears the threshold:
-    * (idCol, store_id, cluster_id, sim_ppm).
-    *
-    * Scale shape — the reason this operator exists: the historical CORPUS
-    * is never rescanned. Only the store's fixed-width signatures are read
-    * (no text column exists on that side), the band join moves (id,
-    * bandHash) pairs, and signatures rejoin per unique candidate. A store
-    * laid out bucketed by band hash makes the probe co-located.
-    */
   /** The at-rest BAND artifact of a signature store: (bh, store_id,
     * cluster_id) — the store's banding exploded ONCE at append/stage
     * time instead of per probe batch. Lay it out bucketed on `bh`
@@ -385,6 +348,48 @@ object Dedup {
     sigStore.select(col(idCol).as("store_id"), col("cluster_id"), col("sig"))
       .select(col("store_id"), col("cluster_id"), explode(expr(bandHashesS)).as("bh"))
 
+  // first band index (1-based) on which the signatures `sig` and `__ssig`
+  // agree slice for slice — band hashes are md5 of the slice, so slice
+  // equality is the band join's condition restated row-locally
+  private val firstCommonBandS: String =
+    s"""element_at(filter(sequence(1, $BANDS), bj ->
+       |  forall(sequence(0, ${ROWS - 1}), o ->
+       |    element_at(sig, (bj-1)*$ROWS + 1 + o) = element_at(__ssig, (bj-1)*$ROWS + 1 + o))), 1)"""
+      .stripMargin.replace("\n", " ")
+
+  /** Probe a batch's signatures against a signature STORE — the one
+    * MinHash band-join body. The store carries (idCol, sig, cluster_id):
+    * one row per retained historical document with its near-dup cluster
+    * label (for a store that was itself deduped, cluster_id == the
+    * keeper's own id). Returns one row per (batch doc, matched store doc)
+    * whose signature agreement clears the threshold:
+    * (idCol, store_id, cluster_id, sim_ppm), where `sim_ppm` is the exact
+    * integer share of agreeing components.
+    *
+    * A pair that shares several bands is made unique ROW-LOCALLY, with no
+    * `distinct()`: both signatures ride in the band-joined row, and a row
+    * keeps itself iff ITS band is the first band on which the two
+    * signatures agree — exactly one survivor per matched pair, no state.
+    * The batch side carries its signature through the band explode; so
+    * does the store side when its bands are derived from `sigStore`. The
+    * staged [[minhashStoreBands]] artifact passed as `storeBands` holds
+    * no signature, so there the store's signature joins once, by
+    * store_id, onto the band-matched rows. (Joining it on the derived
+    * path too costs [[minhashDedupIncremental]]'s self-probe one more read
+    * of the batch signatures: 2 more jobs in `ext_dedup_minhash_incr`.)
+    * The same body serves every face:
+    *  - batch → store, the lookup step of incremental near-dup dedup;
+    *  - batch → itself, [[minhashDedupIncremental]]'s within-batch edges
+    *    (the batch signatures are their own store, cut to id < store_id);
+    *  - stream → store, [[graft.streaming.StreamDedup.nearDupAgainstStore]]
+    *    (every join is a stream-static equi-join).
+    *
+    * Scale shape — the reason this operator exists: the historical CORPUS
+    * is never rescanned. Only the store's fixed-width signatures are read
+    * (no text column exists on that side), and the band join moves (id,
+    * bandHash) rows. A store band artifact laid out bucketed by band hash
+    * makes the probe co-located.
+    */
   def minhashStoreMatches(
       batchSigs: DataFrame,
       sigStore: DataFrame,
@@ -398,14 +403,22 @@ object Dedup {
       require(missing.isEmpty,
         s"storeBands must carry (bh, store_id, cluster_id); missing ${missing.mkString(", ")}")
     }
-    val bBands = batchSigs.select(col(idCol), explode(expr(bandHashesS)).as("bh"))
-    val sBands = storeBands.map(_.select("store_id", "cluster_id", "bh"))
-      .getOrElse(minhashStoreBands(sigStore, idCol))
-    bBands.join(sBands, "bh")
-      .select(col(idCol), col("store_id"), col("cluster_id")).distinct()
-      .join(batchSigs.select(col(idCol), col("sig").as("__sx")), idCol)
-      .join(sigStore.select(col(idCol).as("store_id"), col("sig").as("__sy")), "store_id")
-      .withColumn("sim_ppm", expr(sigSimS("__sx", "__sy")))
+    val bBands = batchSigs.select(col(idCol), col("sig"),
+      posexplode(expr(bandHashesS)).as(Seq("__b", "bh")))
+    // derived store bands carry the store signature through the explode;
+    // the staged artifact has none, so it joins once, by store_id, onto
+    // the band-matched rows only
+    val joined = storeBands match {
+      case Some(sb) => bBands.join(sb.select("store_id", "cluster_id", "bh"), "bh")
+        .join(sigStore.select(col(idCol).as("store_id"), col("sig").as("__ssig")), "store_id")
+      case None => bBands.join(sigStore
+        .select(col(idCol).as("store_id"), col("cluster_id"), col("sig"),
+          explode(expr(bandHashesS)).as("bh"))
+        .withColumnRenamed("sig", "__ssig"), "bh")
+    }
+    joined
+      .where(col("__b") + 1 === expr(firstCommonBandS))
+      .withColumn("sim_ppm", expr(sigSimS("sig", "__ssig")))
       .where(col("sim_ppm") >= thresholdPpm)
       .select(col(idCol), col("store_id"), col("cluster_id"), col("sim_ppm"))
   }
@@ -414,11 +427,11 @@ object Dedup {
     * [[exactDedupIncremental]] runs at exact granularity, at NEAR-dup
     * granularity: a growing corpus must not re-pay full-corpus near-dup
     * cost per ingest round, so new batches probe a persistent signature
-    * store ([[minhashStoreMatches]]), pair up among themselves
-    * ([[minhashSigPairs]]), and the union graph — batch↔batch edges plus
-    * batch↔existing-cluster edges — collapses through connected
-    * components exactly like the full-corpus election (chained duplicates
-    * spanning the batch boundary land in ONE cluster).
+    * store ([[minhashStoreMatches]]), pair up among themselves through
+    * the same probe with the batch as its own store, and the union graph
+    * — batch↔batch edges plus batch↔existing-cluster edges — collapses
+    * through connected components exactly like the full-corpus election
+    * (chained duplicates spanning the batch boundary land in ONE cluster).
     *
     * Output, one row per batch document:
     *  - cluster_id: the minimum EXISTING cluster id in the document's
@@ -459,17 +472,21 @@ object Dedup {
       textCol: String = "text",
       checkIdDisjointness: Boolean = false,
       storeBands: Option[DataFrame] = None): DataFrame = {
-    // feeds the band explode, both sim verifications, and the final label
-    // join — persist so the signature derivation runs once. (Measured:
-    // the explode+aggregate form beats the scan-side rowSigS expression
-    // here — the exploded hash is codegen'd and the 64 mins combine
-    // map-side, while the row expression is one large interpreted HOF;
-    // rowSigS earns its keep only where a shuffle is illegal, i.e. the
-    // stateless streaming projection.)
+    // feeds both probes — the batch side of each and the self-probe's
+    // store side — so it is persisted and the signatures derive once
+    // (measured: without the persist the query runs 2 fewer jobs, but
+    // slower). The explode+aggregate form also beats the scan-side rowSigS
+    // expression here — the exploded hash is codegen'd and the 64 mins
+    // combine map-side, while the row expression is one large interpreted
+    // HOF; rowSigS earns its keep only where a shuffle is illegal, i.e. the
+    // stateless streaming projection.
     val bsig = minhashSignature(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val matches = minhashStoreMatches(bsig, sigStore, thresholdPpm, idCol, storeBands)
-    val edges = minhashSigPairs(bsig, thresholdPpm, idCol).select("id1", "id2")
+    val edges = minhashStoreMatches(bsig, bsig.withColumn("cluster_id", col(idCol)),
+        thresholdPpm, idCol)
+      .where(col(idCol) < col("store_id"))
+      .select(col(idCol).as("id1"), col("store_id").as("id2"))
       .unionByName(
         matches.select(col(idCol).as("id1"), col("cluster_id").as("id2")).distinct())
     incrementalClusterLabels(batch.select(col(idCol)), edges, sigStore, idCol, checkIdDisjointness)
@@ -508,7 +525,7 @@ object Dedup {
     * unordered source pair (a, b), how many near-dup pairs straddle the
     * two sources and how similar they are on average. Feed it the pair
     * list any detector produced ([[minhashNearDupsOf]] jaccard_ppm,
-    * [[minhashSigPairs]] sim_ppm, [[simhashNearDups]] via a renamed dist)
+    * [[simhashNearDups]] via a renamed dist)
     * plus a (id, source) lookup; rows with a == b count within-source
     * duplication, a != b cross-source contamination (e.g. "how much of
     * the web crawl is already in the curated dump").

@@ -224,7 +224,7 @@ object ImageHash {
   /** INCREMENTAL image near-dup — probe a batch of new media against the
     * AT-REST fingerprint store (media_id → dhash, cluster_id), the image
     * member of the store-probe family ([[Dedup.exactDedupIncremental]]
-    * exact text, [[Dedup.minhashStoreMatches]] minhash,
+    * exact text, [[Dedup.minhashStoreMatches]] minhash signatures,
     * [[graft.pipeline.Similarity.ivfPqStoreMatches]] embeddings): a
     * corpus ingests media in batches, and each batch must match against
     * everything already kept WITHOUT re-pairing the store against itself.
@@ -237,8 +237,9 @@ object ImageHash {
     * `distinct()` is done ROW-LOCALLY instead — a joined row survives iff
     * ITS band index is the FIRST band on which the two hashes agree —
     * so the operator is STATELESS and streaming-legal as a stream-static
-    * join (the [[graft.streaming.StreamDedup.nearDupAgainstStore]]
-    * discipline; spec-asserted MemoryStream == batch). The store is read
+    * join (the [[Dedup.minhashStoreMatches]] rule, whose streaming face
+    * is [[graft.streaming.StreamDedup.nearDupAgainstStore]];
+    * spec-asserted MemoryStream == batch). The store is read
     * per probe batch: persist it, or stage [[phashStoreBands]] bucketed
     * and pass it as `storeBands` — then the probe join has NO store-side
     * exchange even when the probe cannot broadcast (plan-asserted).
@@ -262,8 +263,7 @@ object ImageHash {
         s"storeBands must carry (bv, store_id, cluster_id, sh); missing ${m.mkString(", ")}")
     }
     // batch face: the probe batch is arrival-sized, the store is the
-    // corpus — broadcast the probe so the store NEVER shuffles (the
-    // [[Dedup.minhashStoreMatches]] store-side discipline). Streaming
+    // corpus — broadcast the probe so the store NEVER shuffles. Streaming
     // face: the stream side cannot broadcast; the stream-static join
     // reads the store per micro-batch (persist it or pass the bucketed
     // band artifact). The join key is the single bv = band*65536+value
@@ -304,8 +304,8 @@ object ImageHash {
       .select("bv", "store_id", "cluster_id", "sh")
 
   /** The 4×16-bit band explode shared by the Hamming self-joins
-    * ([[imageNearDups]], [[frameSetNearDups]],
-    * `AudioFingerprint.audioNearDups`): one row per (input row, band)
+    * ([[imageNearDups]], which `AudioFingerprint.audioNearDups` also
+    * runs, and [[frameSetNearDups]]): one row per (input row, band)
     * carrying every column of `hashed` (whose 64-bit hash is `__h`) plus
     * the band index `__b` and its 16-bit value `__v`. Persisted, since both
     * self-join sides read it.

@@ -3425,10 +3425,11 @@ object PipelineQueries {
     "ext_dedup_minhash_incr" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       // the store is the STAGED managed table (sigStoreFor): in production
-      // it is the stored table the sigStoreAppend loop maintains, read by
-      // the operator three times (band explode, signature rejoin,
-      // cluster-id distinct) as parquet — its one-time signature build is
-      // staging cost, like the shingle substrate
+      // it is the stored table the sigStoreAppend loop maintains. The
+      // operator reads it twice as parquet (the probe's one signature join
+      // by store_id, the cluster-id distinct) beside its staged band
+      // artifact (sigBandStoreFor) — its one-time signature and band
+      // builds are staging cost, like the shingle substrate
       val store = sigStoreFor(s, dir)
       // batch signatures derive from TEXT, not the staged shingle table:
       // measured A/B at sf0.1, reading the exploded (doc_id, sh, h)

@@ -328,8 +328,8 @@ object Robots {
       .withColumn("day", expr("__ts DIV 86400000"))
       .join(b, Seq("host"), "left")
     val key = when(col("host").isNull || col("daily_budget").isNull,
-        concat(lit(" "), col(idCol).cast("string")))
-      .otherwise(concat(col("host"), lit(" "), col("day").cast("string")))
+        concat(lit("\u0000"), col(idCol).cast("string")))
+      .otherwise(concat(col("host"), lit("\u0000"), col("day").cast("string")))
     val w = Window.partitionBy(key).orderBy(col("__ts"), col(idCol))
     joined
       .withColumn("__rn", row_number().over(w).cast("long"))

@@ -1571,6 +1571,15 @@ object Similarity {
     * broadcast or paired all-to-all); each surviving pair costs [[PQ_M]]
     * lookups. Returns (idCol, store_id, cluster_id, cos_ppm) for pairs
     * whose estimated cosine clears `tauPpm`.
+    *
+    * Streaming-legal as it stands: the cell probes, the ADC LUT and the
+    * integer norm are scan-side expressions (literal centroids and
+    * codebooks, no shuffle), the store probe is a stream-static equi-join
+    * on the cell id, and a store vector lives in exactly ONE cell, so no
+    * multi-band duplication arises. A streaming `batch` therefore emits,
+    * micro-batch by micro-batch, the rows the batch operator emits
+    * (spec-asserted on a MemoryStream). The store is then read per
+    * micro-batch — persist it or lay it out cell-bucketed.
     */
   def ivfPqStoreMatches(
       batch: DataFrame,

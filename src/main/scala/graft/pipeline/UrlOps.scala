@@ -608,7 +608,7 @@ object UrlOps {
       .withColumn("host", hostOf(col(urlCol)))
       .withColumn("template", urlTemplate(col(urlCol)))
       .withColumn("__pk",
-        when(col("host").isNull, concat(lit(" "), col(urlCol)))
+        when(col("host").isNull, concat(lit("\u0000"), col(urlCol)))
           .otherwise(concat(col("host"), lit(" "), col("template"))))
     val w = Window.partitionBy("__pk").orderBy(col(urlCol))
     withT

@@ -120,20 +120,16 @@ object StreamDedup {
     * stream-side face of [[graft.pipeline.Dedup.minhashStoreMatches]]:
     * documents arriving on the stream are matched against the historical
     * corpus's MinHash signatures, emitting one row per (doc, matched store
-    * doc) with the store's cluster id and the signature agreement —
-    * byte-identical to the batch operator on the same rows (same shingle
-    * set, same affine family, same band hashes, same integer verification).
+    * doc) with the store's cluster id and the signature agreement.
     *
-    * Everything is STATELESS: the per-row signature is one scan-side
-    * expression (TextOps.rowSigS — no shuffle, no window, legal in a
-    * streaming projection), the probe is a stream-static equi-join on the
-    * band hash, and the per-(doc, store doc) dedup that a batch operator
-    * would do with `distinct()` (stateful in streaming) is done
-    * ROW-LOCALLY instead: both signatures sit in the joined row, so each
-    * row keeps itself iff ITS band index is the FIRST band on which the
-    * two signatures agree — exactly one survivor per matched pair, no
-    * state. Docs with < 3 tokens cannot near-dup and are filtered (the
-    * batch aggregate's absent-row semantics).
+    * The face's own work is the signature: one scan-side expression
+    * (TextOps.rowSigS — no shuffle, no window, legal in a streaming
+    * projection), byte-identical to the batch aggregate wherever that
+    * emits a row. Docs with < 3 tokens cannot near-dup and are filtered
+    * (the batch aggregate's absent-row semantics). The probe IS the batch
+    * operator: its joins are stream-static equi-joins and its
+    * per-pair dedup is row-local, so the face is stateless and cannot
+    * drift from the batch body.
     *
     * The store is read per micro-batch — persist it or lay it out
     * band-hash-bucketed so the probe is a lookup, not a rescan. Novel
@@ -148,65 +144,11 @@ object StreamDedup {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     import graft.pipeline.TextOps._
-    require(sigStore.columns.contains("sig") && sigStore.columns.contains("cluster_id"),
-      s"sigStore must carry 'sig' and 'cluster_id', got ${sigStore.columns.mkString(", ")}")
-    // first band index (1-based) on which the two signatures' band SLICES
-    // agree — band hashes are md5 of the slice, so slice equality is the
-    // join condition restated row-locally
-    val firstCommonBand =
-      s"""element_at(filter(sequence(1, $BANDS), bj ->
-         |  forall(sequence(0, ${ROWS - 1}), o ->
-         |    element_at(sig, (bj-1)*$ROWS + 1 + o) = element_at(__ssig, (bj-1)*$ROWS + 1 + o))), 1)"""
-        .stripMargin.replace("\n", " ")
     val sigged = docs
       .where(expr(s"size(${toksS(textCol)}) >= 3"))
       .withColumn("sig", expr(rowSigS(textCol)))
-    val bBands = sigged.select(col(idCol), col("sig"),
-      posexplode(expr(bandHashesS)).as(Seq("__b", "bh")))
-    val sBands = sigStore.select(col(idCol).as("store_id"), col("cluster_id"), col("sig"))
-      .select(col("store_id"), col("cluster_id"), col("sig"), explode(expr(bandHashesS)).as("bh"))
-      .withColumnRenamed("sig", "__ssig")
-    bBands.join(sBands, "bh")
-      .where(col("__b") + 1 === expr(firstCommonBand))
-      .withColumn("sim_ppm", expr(sigSimS("sig", "__ssig")))
-      .where(col("sim_ppm") >= thresholdPpm)
-      .select(col(idCol), col("store_id"), col("cluster_id"), col("sim_ppm"))
+    graft.pipeline.Dedup.minhashStoreMatches(sigged, sigStore, thresholdPpm, idCol)
   }
-
-  /** Streaming SEMANTIC probe against the STATIC PQ-encoded vector store —
-    * the stream-side face of [[graft.pipeline.Similarity.ivfPqStoreMatches]],
-    * and the embedding member of the streaming probe family
-    * ([[dedupAgainstStore]] exact, [[nearDupAgainstStore]] minhash).
-    * Documents arriving with embeddings are matched against the
-    * historical corpus's PQ codes, emitting (id, store_id, cluster_id,
-    * cos_ppm) — identical to the batch operator on the same rows.
-    *
-    * Unlike the minhash probe — which had to replace the batch
-    * `distinct()` with the row-local first-common-band rule — this IS the
-    * batch operator unchanged: cell probes, the ADC LUT, and the integer
-    * norm are scan-side expressions (literal centroids/codebooks, no
-    * shuffle), the store probe is a stream-static equi-join on the cell
-    * id, and a store vector lives in exactly ONE cell, so no multi-band
-    * duplication ever arises. Delegation is the point: zero semantic
-    * drift between the faces is structural, not asserted.
-    *
-    * The store is read per micro-batch — persist it or lay it out
-    * cell-bucketed. Matched docs carry their historical cluster; novel
-    * docs (no output row) continue into the exact/near-dup probes; the
-    * caller appends codes to the store via
-    * [[graft.pipeline.Similarity.vecStoreAppend]].
-    */
-  def semanticAgainstStore(
-      docs: DataFrame,
-      vecStore: DataFrame,
-      centroids: Seq[Seq[Double]],
-      cbs: Seq[Seq[Seq[Long]]] = graft.pipeline.Similarity.defaultPqCodebooks,
-      nprobe: Int = 2,
-      tauPpm: Long = 850000L,
-      idCol: String = "doc_id",
-      vecCol: String = "embedding"): DataFrame =
-    graft.pipeline.Similarity.ivfPqStoreMatches(
-      docs, vecStore, centroids, cbs, nprobe, tauPpm, idCol, vecCol)
 
   /** The ENFORCED corpus-ingest composition: classifier quality filter
     * THEN the store probe — the [[dedupedGate]] discipline applied to the
@@ -604,16 +546,16 @@ object StreamDedup {
             col("domain"), col("arrival"), col("content_md5"))
     }).as[WebIngestRow]
     // URL election: first occurrence per canonical URL; unparseable rows
-    // ride a space-prefixed per-doc key (the batch urlDedup unique-key
+    // ride a NUL-prefixed per-doc key (the batch urlDedup unique-key
     // convention; a real canonical URL always starts with its lowercased
-    // scheme, so a leading space cannot collide) — singleton groups that
+    // scheme, so a leading NUL cannot collide) — singleton groups that
     // pass through and write NO state
     val urlDeduped = prepared
-      .groupByKey(r => Option(r.canon_url).getOrElse(" " + r.doc_id))
+      .groupByKey(r => Option(r.canon_url).getOrElse("\u0000" + r.doc_id))
       .flatMapGroupsWithState[Boolean, WebIngestRow](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (key: String, rows: Iterator[WebIngestRow], state: GroupState[Boolean]) =>
-          if (key.nonEmpty && key.charAt(0) == ' ') rows
+          if (key.nonEmpty && key.charAt(0) == '\u0000') rows
           else if (state.exists) Iterator.empty
           else {
             state.update(true)

@@ -215,6 +215,48 @@ class DedupStageSpec extends SparkSpec {
       s"got $got")
   }
 
+  test("minhashDedupIncremental: batch edges == brute-force band-sharing pairs over the threshold") {
+    // odd sf0.001 docs plus near-copies (first token dropped) and exact
+    // copies (agreeing on every band) of some of them
+    val odd = docs.where(col("doc_id") % 2 === 1)
+    val batch = odd
+      .unionByName(odd.where(col("doc_id") % 10 === 1)
+        .select((col("doc_id") + 1000000L).as("doc_id"),
+          expr("substr(text, instr(text, ' ') + 1)").as("text")))
+      .unionByName(odd.where(col("doc_id") % 10 === 5)
+        .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
+    val bsig = Dedup.minhashSignature(batch)
+    val sigs = bsig.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toIndexedSeq)
+    def band(sig: IndexedSeq[Long], j: Int) = sig.slice(j * TextOps.ROWS, (j + 1) * TextOps.ROWS)
+    val want = (for {
+      (i, si) <- sigs.toSeq
+      (j, sj) <- sigs.toSeq
+      if i < j && (0 until TextOps.BANDS).exists(b => band(si, b) == band(sj, b))
+      if si.zip(sj).count { case (x, y) => x == y }.toLong * 1000000L / TextOps.K >= 500000L
+    } yield (i, j)).sorted
+    assert(want.exists { case (i, j) => j - i == 1000000L } &&
+      want.exists { case (i, j) => j - i == 2000000L },
+      s"fixture must hold near-copy and exact-copy pairs: ${want.take(20)}")
+
+    // the batch edges: the store probe with the batch as its own store
+    val edges = Dedup.minhashStoreMatches(bsig, bsig.withColumn("cluster_id", col("doc_id")))
+      .where(col("doc_id") < col("store_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(edges == want, s"got ${edges.diff(want).take(10)} extra, ${want.diff(edges).take(10)} missing")
+    assert(edges.distinct == edges && edges.forall { case (i, j) => i < j })
+
+    // against an empty store the labels are the components of those edges
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else find(p) }
+    want.foreach { case (i, j) =>
+      val (a, c) = (find(i), find(j)); parent(math.max(a, c)) = math.min(a, c) }
+    val empty = bsig.limit(0).withColumn("cluster_id", col("doc_id"))
+    val got = Dedup.minhashDedupIncremental(batch, empty)
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+    assert(got == batch.select("doc_id").collect().map(r =>
+      r.getLong(0) -> ((find(r.getLong(0)), true))).toMap)
+  }
+
   test("minhashDedupIncremental: checkIdDisjointness rejects batch ids colliding with store cluster ids") {
     import spark.implicits._
     val store = Dedup.minhashSignature(

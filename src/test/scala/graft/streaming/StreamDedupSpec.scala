@@ -144,23 +144,42 @@ class StreamDedupSpec extends SparkSpec {
     assert(batchSigs.keySet == Set(1L, 2L, 3L))
   }
 
+  // near-dup store-probe fixture: a three-doc signature store, each doc
+  // its own cluster, and a batch of five shapes — a near-copy (first token
+  // dropped, the corpus duplicate convention), exact copies (which agree
+  // on all 8 bands), a novel doc, and a <3-token doc that must be
+  // filtered (its NULL signature may never match anything)
+  private def nearDupStore = graft.pipeline.Dedup.minhashSignature(Seq(
+      (10L, "the quick brown fox jumps over the lazy dog"),
+      (20L, "pack my box with five dozen liquor jugs"),
+      (30L, "sphinx of black quartz judge my vow right now")).toDF("doc_id", "text"))
+    .withColumn("cluster_id", col("doc_id"))
+  private val nearDupBatchRows = Seq(
+    (101L, "quick brown fox jumps over the lazy dog"),
+    (102L, "the quick brown fox jumps over the lazy dog"),
+    (103L, "pack my box with five dozen liquor jugs"),
+    (104L, "completely unrelated novel document text goes right here"),
+    (105L, "too short"))
+
+  test("minhashStoreMatches: one row per matched (doc, store doc), exact copies included") {
+    import graft.pipeline.Dedup
+    val got = Dedup.minhashStoreMatches(
+        Dedup.minhashSignature(nearDupBatchRows.toDF("doc_id", "text")), nearDupStore)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    // the exact copies agree on every band, yet each pair is one row
+    assert(got.count(_._1 == 102L) == 1 && got.count(_._1 == 103L) == 1, got.toSeq)
+    assert(got.contains((102L, 10L, 10L, 1000000L)) && got.contains((103L, 20L, 20L, 1000000L)),
+      got.toSeq)
+    assert(got.map(r => (r._1, r._2)).distinct.length == got.length,
+      s"duplicate rows for one (doc, store doc) pair: ${got.toSeq}")
+    assert(!got.exists(r => r._1 == 104L || r._1 == 105L), got.toSeq)
+  }
+
   test("nearDupAgainstStore: MemoryStream probe == batch minhashStoreMatches row-for-row") {
     import graft.pipeline.Dedup
     implicit val sqlCtx = spark.sqlContext
-    val storeDocs = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog"),
-      (20L, "pack my box with five dozen liquor jugs"),
-      (30L, "sphinx of black quartz judge my vow right now")).toDF("doc_id", "text")
-    val store = Dedup.minhashSignature(storeDocs).withColumn("cluster_id", col("doc_id"))
-    // batch shapes: near-copy (first token dropped — the corpus duplicate
-    // convention), exact copy, novel doc, and a <3-token doc that must be
-    // filtered (its NULL signature may never match anything)
-    val batchRows = Seq(
-      (101L, "quick brown fox jumps over the lazy dog"),
-      (102L, "the quick brown fox jumps over the lazy dog"),
-      (103L, "pack my box with five dozen liquor jugs"),
-      (104L, "completely unrelated novel document text goes right here"),
-      (105L, "too short"))
+    val store = nearDupStore
+    val batchRows = nearDupBatchRows
     val batchDf = batchRows.toDF("doc_id", "text")
     val want = Dedup.minhashStoreMatches(Dedup.minhashSignature(batchDf), store)
       .collect().map(_.toSeq).toSet
@@ -187,7 +206,7 @@ class StreamDedupSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("semanticAgainstStore: MemoryStream probe == batch ivfPqStoreMatches row-for-row") {
+  test("ivfPqStoreMatches: MemoryStream probe == batch row-for-row") {
     import graft.pipeline.Similarity
     implicit val sqlCtx = spark.sqlContext
     // exact-reconstruction fixture (the DedupStageSpec discipline):
@@ -215,7 +234,7 @@ class StreamDedupSpec extends SparkSpec {
     assert(want.map(_.head).toSet == Set(101L, 102L), s"fixture sanity: $want")
 
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val q = StreamDedup.semanticAgainstStore(
+    val q = Similarity.ivfPqStoreMatches(
         input.toDF().toDF("vec_id", "embedding"), store, cents, cbs,
         tauPpm = 500000L, idCol = "vec_id", vecCol = "embedding")
       .writeStream.format("memory").queryName("sem_probe_out").outputMode("append").start()
